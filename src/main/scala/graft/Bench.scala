@@ -1,6 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.PlanCache
 object Bench {
+  /** One timed run: `Right(seconds)`, or `Left(error)` when `run` throws.
+    * A failed run is reported as failed, never as the (partial) time it
+    * took to fail — that would read as fast and lower the total. */
+  private[graft] def timeRun(run: => Any): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { run; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -9,7 +21,7 @@ object Bench {
     // host CPU-steal spikes individual queries 5-10x over steady state
     // (CLAUDE.md), and one contended reading in a single-pass run is
     // indistinguishable from a plan regression. Each pass starts from a
-    // cleared cache + a re-timed prewarm, so no pass is cache-warm from
+    // released cache + a re-timed prewarm, so no pass is cache-warm from
     // the previous one.
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
     // dev-only: comma-separated subset of query names to bench in the
@@ -44,37 +56,31 @@ object Bench {
     // untimed warm-up at the TARGET sf: JIT tiering + codegen compilation
     // of the exact AQE plan variants otherwise lands on whichever queries
     // happen to run first (measured ±10s scatter on trivial queries; a
-    // smaller-sf warm-up does not compile the same plans)
+    // smaller-sf warm-up does not compile the same plans). Its frames
+    // stay cached until the releaseAll below, so pass 1 starts cold.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", sfDir)
     if (new java.io.File(warmupDir).isDirectory && only.isEmpty) {
       SparkEntry.queries.foreach { case (_, fn) =>
         try fn(spark, warmupDir).queryExecution.toRdd.count()
         catch { case _: Throwable => () }
       }
-      spark.catalog.clearCache() // drop warm-up persisted intermediates
-      // pair EVERY clearCache with pruneStale (the retry path always
-      // did; this one didn't until r14): the warm-up's reuse() entries
-      // stay queued after the clear, and their delayed FIFO eviction
-      // during pass 1 uncaches BY PLAN — killing any pin that re-cached
-      // the same plan (the ~8 s rel_kll_* pass-1 phantom, r12-r14)
-      graft.operators.PlanCache.pruneStale()
-      // absorb the post-warm-up cliff OUTSIDE any query's timing: freeing
-      // ~90 queries' caches leaves a major-GC debt + JIT churn that
+      PlanCache.releaseAll()
+      // absorb the post-warm-up cliff OUTSIDE any query's timing: the
+      // warm-up's freed caches leave a major-GC debt + JIT churn that
       // otherwise lands on whichever query happens to run first
       // (measured 5-20s on a query whose steady-state cost is ~1s)
       System.gc()
       spark.range(50000000L).selectExpr("sum(id)").collect()
     }
-    graft.operators.PlanCache.resetStats()
+    PlanCache.resetStats()
     // execute the FULL physical plan: df.count() would let Catalyst prune
     // every column (a map-only query would be timed as a bare row count);
     // toRdd.count() materializes each query's actual output rows
-    def timeOne(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Either[String, Double] = {
+      val r = timeRun(fn(spark, sfDir).queryExecution.toRdd.count())
+      r.swap.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      r
     }
     // Shared-frame prewarm, explicitly timed as its own line: the
     // dedup/doc and sim families' bottom-level frames (sketches, pair
@@ -82,131 +88,138 @@ object Bench {
     // shared across 2-8 queries each, so after a cache clear their build
     // cost used to land on whichever family member ran first (measured
     // 10x per-query history jumps while family totals stayed flat).
-    // Pinning them here makes every family timing steady-state; the
+    // Persisting them here makes every family timing steady-state; the
     // build cost still counts — in this labeled entry.
-    // Per-pin attribution (VERDICT r11 #4: the prewarm line grew to the
-    // single most expensive bench entry with no per-pin data to decide
-    // the next pin). Records, across all prewarm invocations, the MAX
-    // seconds per pin (the cold build; warm re-prewarms are ~0) plus
-    // each family's frame-CONSTRUCTION cost (eager size probes — the
-    // guardedBroadcast counts — run at construction, before any pin
-    // materializes). Written into bench_detail.json as "shared_pins".
+    // Per-frame attribution (VERDICT r11 #4: the prewarm line grew to
+    // the single most expensive bench entry with no per-frame data to
+    // decide the next shared frame). Records, across all prewarm
+    // invocations, the MAX seconds per frame (the cold build; warm
+    // re-prewarms are ~0) plus each family's frame-CONSTRUCTION cost
+    // (eager size probes — the guardedBroadcast counts — run at
+    // construction, before any frame materializes). Written into bench_detail.json as "shared_pins".
+    // A frame or family construction that throws is named in
+    // `prewarmFailed` (as `_shared_frames/<name>`), not swallowed: its
+    // build would otherwise move silently into its consumers' timings.
     val pinSecs = scala.collection.mutable.Map.empty[String, Double]
-    def recordMax(k: String, sec: Double): Unit = pinSecs.synchronized {
-      pinSecs(k) = math.max(pinSecs.getOrElse(k, 0.0), sec)
+    val prewarmFailed = scala.collection.mutable.SortedSet.empty[String]
+    def record(k: String, r: Either[String, Double]): Unit = pinSecs.synchronized {
+      r match {
+        case Right(sec) => pinSecs(k) = math.max(pinSecs.getOrElse(k, 0.0), sec)
+        case Left(e) =>
+          prewarmFailed += s"_shared_frames/$k"
+          System.err.println(s"[bench] shared frame $k failed: $e")
+      }
     }
-    def prewarm(): Unit =
+    def prewarm(): Unit = {
+      def fam(tag: String,
+              f: => Seq[(String, org.apache.spark.sql.DataFrame)])
+          : Seq[(String, org.apache.spark.sql.DataFrame)] = {
+        var frames = Seq.empty[(String, org.apache.spark.sql.DataFrame)]
+        record(s"_build_$tag", timeRun { frames = f })
+        frames
+      }
+      val frames =
+        fam("doc", graft.queries.DocQueries.prewarmSharedFrames(spark, sfDir)) ++
+        fam("vec", graft.queries.VectorQueries.prewarmSharedFrames(spark, sfDir)) ++
+        fam("rel", graft.queries.RelationalQueries.prewarmSharedFrames(spark, sfDir)) ++
+        fam("evt", graft.queries.EventQueries.prewarmSharedFrames(spark, sfDir))
+      // Materialize frames CONCURRENTLY (VERDICT r11 #4: the prewarm
+      // is a serial driver-paid line that tripled on a 32-core host).
+      // Each frame build is exchange-barrier-bound, not CPU-bound — a
+      // single build leaves most of the 32 cores idle between its
+      // driver round-trips — so overlapping them recovers real
+      // wall-clock (measured builder-side: 24.4 s sequential →
+      // parallel below). Safe: plan CONSTRUCTION above stays
+      // sequential (deterministic sameResult wiring); shared uncached
+      // subtrees dedup at the BlockManager's per-block compute lock,
+      // so two frames racing into one subtree never compute it twice.
+      // Per-frame seconds are wall-clock under overlap — still the
+      // right signal for "is this frame worth its build".
+      // Heavy-first (LPT) submission order (VERDICT r15 #2): the pool
+      // previously materialized frames in family-declaration order, so
+      // the most expensive builds (the KLL stream, the LPA loop — rel
+      // family, declared LAST) only started after ~18 cheap tasks
+      // drained, and the prewarm wall was their tail. Weights are the
+      // observed SEQUENTIAL cold builds (sf0.1) — scheduling hints
+      // only: an unknown/new frame defaults to 1.0 and merely starts
+      // later; correctness and the timing methodology are unchanged.
+      // Dependent frames (kll_estimates after kll_shared, power_iter_v
+      // after gram_state, lpa after co_purchase_edges) dedup at the
+      // BlockManager's per-block compute lock, so starting a consumer
+      // early never duplicates its producer's work — it just parks a
+      // pool thread.
+      val prewarmWeight = Map(
+        "kll_shared" -> 9.0, "lpa_labels" -> 7.0, "trigram_scored" -> 4.2,
+        "bm25_scored" -> 3.7, "jaccard_pairs" -> 2.9, "co_ship_edges" -> 2.7,
+        "gram_state" -> 2.6, "gopher_grams" -> 2.5, "sim_kmeans_cells" -> 2.1,
+        "simhash_pairs" -> 1.9, "kll_estimates" -> 1.8, "power_iter_v" -> 1.7,
+        "winnow_fps" -> 1.5, "ttr_segmental" -> 1.5, "char_entropy" -> 1.4,
+        "transition_edges" -> 1.4, "minhash_sigs" -> 1.1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
       try {
-        def fam(tag: String,
-                f: => Seq[(String, org.apache.spark.sql.DataFrame)])
-            : Seq[(String, org.apache.spark.sql.DataFrame)] = {
-          val t0 = System.nanoTime()
-          val frames = f
-          recordMax(s"_build_$tag", (System.nanoTime() - t0) / 1e9)
-          frames
-        }
-        val frames =
-          fam("doc", graft.queries.DocQueries.prewarmSharedFrames(spark, sfDir)) ++
-          fam("vec", graft.queries.VectorQueries.prewarmSharedFrames(spark, sfDir)) ++
-          fam("rel", graft.queries.RelationalQueries.prewarmSharedFrames(spark, sfDir)) ++
-          fam("evt", graft.queries.EventQueries.prewarmSharedFrames(spark, sfDir))
-        // Materialize pins CONCURRENTLY (VERDICT r11 #4: the prewarm is
-        // a serial driver-paid line that tripled on the driver box).
-        // Each pin build is exchange-barrier-bound, not CPU-bound — a
-        // single build leaves most of the 32 cores idle between its
-        // driver round-trips — so overlapping them recovers real
-        // wall-clock (measured builder-side: 24.4 s sequential →
-        // parallel below). Safe: plan CONSTRUCTION above stays
-        // sequential (deterministic sameResult wiring); shared uncached
-        // subtrees dedup at the BlockManager's per-block compute lock,
-        // so two pins racing into one subtree never compute it twice.
-        // Per-pin seconds are wall-clock under overlap — still the
-        // right signal for "is this pin worth its build".
-        // Heavy-first (LPT) submission order (VERDICT r15 #2): the pool
-        // previously materialized pins in family-declaration order, so
-        // the most expensive builds (the KLL stream, the LPA loop — rel
-        // family, declared LAST) only started after ~18 cheap tasks
-        // drained, and the prewarm wall was their tail. Weights are the
-        // observed SEQUENTIAL cold builds (tools.PinProbe, this box,
-        // sf0.1) — scheduling hints only: an unknown/new pin defaults to
-        // 1.0 and merely starts later; correctness and the timing
-        // methodology are unchanged. Dependent pins (kll_estimates after
-        // kll_shared, power_iter_v after gram_state, lpa after
-        // co_purchase_edges) dedup at the BlockManager's per-block
-        // compute lock, so starting a consumer early never duplicates
-        // its producer's work — it just parks a pool thread.
-        val prewarmWeight = Map(
-          "kll_shared" -> 9.0, "lpa_labels" -> 7.0, "trigram_scored" -> 4.2,
-          "bm25_scored" -> 3.7, "jaccard_pairs" -> 2.9, "co_ship_edges" -> 2.7,
-          "gram_state" -> 2.6, "gopher_grams" -> 2.5, "sim_kmeans_cells" -> 2.1,
-          "simhash_pairs" -> 1.9, "kll_estimates" -> 1.8, "power_iter_v" -> 1.7,
-          "winnow_fps" -> 1.5, "ttr_segmental" -> 1.5, "char_entropy" -> 1.4,
-          "transition_edges" -> 1.4, "minhash_sigs" -> 1.1)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-        try {
-          frames.sortBy { case (n, _) => -prewarmWeight.getOrElse(n, 1.0) }
-            .map { case (name, df) =>
-            pool.submit(new Runnable {
-              def run(): Unit = {
-                val t0 = System.nanoTime()
-                try df.queryExecution.toRdd.count()
-                catch { case _: Throwable => () }
-                recordMax(name, (System.nanoTime() - t0) / 1e9)
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
-      } catch { case _: Throwable => () }
+        frames.sortBy { case (n, _) => -prewarmWeight.getOrElse(n, 1.0) }
+          .map { case (name, df) =>
+          pool.submit(new Runnable {
+            def run(): Unit = record(name, timeRun(df.queryExecution.toRdd.count()))
+          })
+        }.foreach(_.get())
+      } finally pool.shutdown()
+    }
     // One timing pass over the registry: timed prewarm + first pass +
     // outlier retries. Host CPU-steal bursts spike individual queries
     // 5-10x over their steady state (measured: same query 1.5s and 12.4s
     // within one JVM, box otherwise idle); re-time >5s outliers once and
-    // keep the min. clearCache first on retry: the first run may have
-    // persisted its own intermediates, and a cache-warm retry would
-    // understate real cost — but re-prewarm the pinned shared frames
-    // UNTIMED afterwards, or the retry pays a rebuild its steady state
-    // never sees (CLAUDE.md).
+    // keep the min. Release the cache first on retry: the first run may
+    // have persisted its own intermediates, and a cache-warm retry would
+    // understate real cost — but re-prewarm the shared frames UNTIMED
+    // afterwards, or the retry pays a rebuild its steady state never
+    // sees. A failed first run is not retried, and a failed retry fails
+    // the row: no failure is ever min'd into a time.
     val RetryOverSec = 5.0
-    def onePass(): (Map[String, Double], Map[String, Double]) = {
-      val sharedEntry: Seq[(String, Double)] =
-        if (only.isEmpty) {
-          val t0 = System.nanoTime()
-          prewarm()
-          Seq("_shared_frames" -> (System.nanoTime() - t0) / 1e9)
-        } else Seq.empty
-      val firstPass = selected.map { case (name, fn) => name -> timeOne(fn) }
-      val pass = (sharedEntry ++ firstPass.map { case (name, t) =>
-        if (t > RetryOverSec) {
-          spark.catalog.clearCache()
-          graft.operators.PlanCache.pruneStale()
+    def onePass(): (Map[String, Either[String, Double]], Map[String, Double]) = {
+      val sharedEntry: Seq[(String, Either[String, Double])] =
+        if (only.isEmpty) Seq("_shared_frames" -> timeRun(prewarm()))
+        else Seq.empty
+      val firstPass = selected.map { case (name, fn) => name -> timeOne(name, fn) }
+      val slow = firstPass.collect {
+        case (name, Right(t)) if t > RetryOverSec => name -> t }.toMap
+      val pass = (sharedEntry ++ firstPass.map {
+        case (name, Right(t)) if slow.contains(name) =>
+          PlanCache.releaseAll()
           if (only.isEmpty) prewarm()
-          name -> math.min(t,
-            timeOne(SparkEntry.queries(name.takeWhile(_ != '#'))))
-        } else name -> t
+          val base = name.takeWhile(_ != '#')
+          name -> timeOne(name, SparkEntry.queries(base)).map(math.min(t, _))
+        case other => other
       }).toMap
-      (pass, firstPass.filter(_._2 > RetryOverSec).toMap)
+      (pass, slow)
     }
     val passes = (1 to nRuns).map { i =>
       if (i > 1) {
-        spark.catalog.clearCache()
-        graft.operators.PlanCache.pruneStale()
+        PlanCache.releaseAll()
         System.gc()
       }
       onePass()
     }
+    // a row that failed in any pass is failed, and stays out of the
+    // total; prewarm frame failures are named alongside the rows
+    val failedRows = passes.flatMap(_._1.collect { case (k, Left(_)) => k }).toSet
+    val failed = (failedRows ++ prewarmFailed).toSeq.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // steady state = per-query min across passes; `median` = lower
     // median (for 2 passes that coincides with the min) so no synthetic
     // averaged value ever enters the file
+    def timings(p: Map[String, Either[String, Double]]): Map[String, Double] =
+      p.collect { case (k, Right(v)) if !failedRows(k) => k -> v }
     def combine(f: Seq[Double] => Double): Map[String, Double] =
-      passes.flatMap(_._1.keys).distinct
-        .map(k => k -> f(passes.flatMap(_._1.get(k)))).toMap
+      passes.flatMap(p => timings(p._1).keys).distinct
+        .map(k => k -> f(passes.flatMap(p => timings(p._1).get(k)))).toMap
     val results = combine(_.min)
     val medians = combine(vs => vs.sorted.apply((vs.size - 1) / 2))
     val retriedAll = passes.zipWithIndex.flatMap { case ((_, r), i) =>
       r.map { case (k, v) => s"$k@${i + 1}" -> v } }
     val retried = retriedAll.map { case (k, v) =>
       s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val cacheStats = graft.operators.PlanCache.stats
+    val cacheStats = PlanCache.stats
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     def fmt(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -218,12 +231,13 @@ object Bench {
     // from n_queries (ADVICE r7 — a phantom 178th query otherwise)
     val sharedSec = results.getOrElse("_shared_frames", 0.0)
     val qResults = results - "_shared_frames"
+    val nQueries = qResults.size + failedRows.size
     val total = results.values.sum
     // Full per-query detail: printed first (may scroll out of the
     // harness's bounded tail capture) and persisted next to the build.
-    val perPass = passes.map(p => fmt(sortByName(p._1))).mkString("[", ",", "]")
+    val perPass = passes.map(p => fmt(sortByName(timings(p._1)))).mkString("[", ",", "]")
     val detail =
-      s"""{"metric":"detail","value":$total,"unit":"sec","n_queries":${qResults.size},"n_runs":$nRuns,"shared_frames_sec":${f"$sharedSec%.3f"},"shared_pins":${fmt(pinSecs.toSeq.sortBy(_._1))},"queries":${fmt(sortByName(qResults))},"median":${fmt(sortByName(medians - "_shared_frames"))},"runs":$perPass,"retried":$retried,"plan_cache":$cacheStats,"sf":"$sfDir"}"""
+      s"""{"metric":"detail","value":$total,"unit":"sec","n_queries":$nQueries,"n_failed":${failed.size},"failed":$failedJson,"n_runs":$nRuns,"shared_frames_sec":${f"$sharedSec%.3f"},"shared_pins":${fmt(pinSecs.toSeq.sortBy(_._1))},"queries":${fmt(sortByName(qResults))},"median":${fmt(sortByName(medians - "_shared_frames"))},"runs":$perPass,"retried":$retried,"plan_cache":$cacheStats,"sf":"$sfDir"}"""
     println(detail)
     try {
       val p = java.nio.file.Paths.get("bench_detail.json")
@@ -250,7 +264,7 @@ object Bench {
     // warnings can otherwise interleave past it in a combined-stream
     // tail capture, and the driver parses the final line as JSON
     val contract =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${qResults.size},"n_runs":$nRuns,"shared_frames_sec":${f"$sharedSec%.3f"},"queries":${fmt(head)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":$nQueries,"n_failed":${failed.size},"failed":$failedJson,"n_runs":$nRuns,"shared_frames_sec":${f"$sharedSec%.3f"},"queries":${fmt(head)},"sf":"$sfDir"}"""
     // teardown must never eat the contract: if stop() throws, the
     // driver's last-line JSON parse would see a stack trace (ADVICE r9)
     try {

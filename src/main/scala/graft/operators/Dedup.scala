@@ -24,10 +24,9 @@ object Dedup {
     * upstream pipeline per reference (no exchange to reuse under a
     * broadcast join). At production scale the equivalent is a
     * materialized stage (write to a bucketed table); in-process,
-    * MEMORY_AND_DISK persist expresses the same reuse — with a bounded
-    * FIFO lifecycle ([[PlanCache]]: oldest entries unpersist past the
-    * cap, `PlanCache.releaseAll()` for teardown). Idempotent on
-    * already-cached plans (dupClusters re-marks its pair table). */
+    * MEMORY_AND_DISK persist expresses the same reuse — tracked by
+    * [[PlanCache]] until `PlanCache.releaseAll()` (teardown). Idempotent
+    * on already-cached plans (dupClusters re-marks its pair table). */
   private def reused(df: DataFrame): DataFrame = PlanCache.reuse(df)
 
   /** Size-guarded broadcast for blocklist-shaped frames (hot-shingle /
@@ -146,17 +145,17 @@ object Dedup {
 
   /** The text-dedup family's bottom-level shared sketches (shingle set,
     * MinHash signatures, SimHash sketch) at the registry-default
-    * parameters, PINNED against PlanCache eviction. Benchmarks
+    * parameters, persisted through [[PlanCache.reuse]]. Benchmarks
     * materialize these as one explicitly-timed line so the build cost
     * stops landing on whichever family query happens to run first —
     * per-query timings then measure each operator's own work.
     * CacheManager's sameResult dedup makes every later same-plan build
-    * hit the pinned cache; [[PlanCache.releaseAll]] releases the pins. */
+    * hit the cache; [[PlanCache.releaseAll]] releases it. */
   def prewarmSharedSketches(df: DataFrame, idCol: String,
                             textCol: String): Seq[(String, DataFrame)] = Seq(
-    "shingle_set"  -> PlanCache.pin(shingleSet(df, idCol, textCol, 3)),
-    "minhash_sigs" -> PlanCache.pin(minHashSignatures(df, idCol, textCol, 3, 12)),
-    "simhash"      -> PlanCache.pin(simHashSketch(df, idCol, textCol)))
+    "shingle_set"  -> PlanCache.reuse(shingleSet(df, idCol, textCol, 3)),
+    "minhash_sigs" -> PlanCache.reuse(minHashSignatures(df, idCol, textCol, 3, 12)),
+    "simhash"      -> PlanCache.reuse(simHashSketch(df, idCol, textCol)))
 
   /** Symmetric Jaccard near-dup pairs over distinct shingle sets via an
     * inverted-index self-join (stop-shingle capped). NOT a lazy plan
@@ -259,8 +258,7 @@ object Dedup {
     * `localCheckpoint`ed (lineage truncation); their blocks are
     * reclaimed by the ContextCleaner on GC, and the shared pair-table
     * cache is deliberately left registered for sibling queries
-    * (LRU-evicted under pressure, `spark.catalog.clearCache()` to
-    * drop).
+    * (`PlanCache.releaseAll()` to drop).
     *
     * Measured alternative (r15, rejected): per-round [[PlanCache.reuse]]
     * instead of localCheckpoint would make the ladder plan-deterministic

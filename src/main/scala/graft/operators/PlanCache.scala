@@ -3,168 +3,82 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Bounded lifecycle for plan-reuse persists (Dedup signature/pair
-  * tables, Similarity codebooks).
+/** Tracked registry of plan-reuse persists (Dedup signature/pair tables,
+  * Similarity codebooks, the query families' shared frames).
   *
   * These operators persist small intermediates that their plans reference
-  * from multiple subtrees (self-join sides, codebook consumers) — without
-  * the persist, Spark re-executes the full upstream pipeline once per
-  * reference. Earlier rounds never unpersisted them, so a long
-  * many-query session accumulated an unbounded cache registry with LRU
-  * eviction as the only bound (VERDICT r3). This object gives the
-  * persists an explicit lifecycle:
+  * from multiple subtrees (self-join sides, codebook consumers) or that
+  * several queries share through CacheManager's `sameResult` lookup —
+  * without the persist, Spark re-executes the full upstream pipeline once
+  * per reference. Lifecycle:
   *
-  *  - [[reuse]] persists (MEMORY_AND_DISK) and tracks insertion order;
-  *    idempotent on already-cached plans (composed operators re-mark the
-  *    same table).
-  *  - At most [[MaxLive]] tracked entries stay persisted: inserting past
-  *    the bound unpersists the OLDEST (FIFO — a query session's reuse
-  *    locality is recency). Unpersisting early never breaks correctness,
-  *    only re-derives; a later [[reuse]] of the same plan re-persists.
-  *  - [[releaseAll]] drops everything — session teardown, or between
-  *    bench passes that must re-measure cold cost.
-  *
-  * External `spark.catalog.clearCache()` stays safe: the queue then
-  * holds already-unpersisted frames, for which `unpersist` is a no-op.
+  *  - [[reuse]] persists (MEMORY_AND_DISK) once per plan and tracks the
+  *    frame; a plan already cached is a hit and is returned unchanged.
+  *  - Tracked frames stay persisted until [[releaseAll]] (session
+  *    teardown, or between bench passes that must re-measure cold cost).
+  *    Nothing unpersists mid-session, so a frame one query built is still
+  *    cached for every later consumer of the same plan.
+  *  - [[scoped]] bounds a repeated unit of work (a stream gate's
+  *    micro-batch): it releases the frames that unit newly persisted.
   */
 private[graft] object PlanCache {
-  // 128: sized for the ~245-query registry. At 48 the r10 run evicted
-  // 131 times (vs 56 in r9) and ended with 8 live entries — with 15
-  // pinned frames only 33 FIFO slots remained, so multi-consumer frames
-  // whose consumers sit >33 queries apart alphabetically (the
-  // dedup_prefix_pairs `prefixes` frame, the trigram scorer) were
-  // rebuilt mid-registry inside their consumers' timings (VERDICT r10
-  // #2/#3 — the prefix-pairs 2.30→4.04 s regression). The cap guards
-  // tracking overhead, not correctness: entries are fixture-small
-  // aggregates/sketches and MEMORY_AND_DISK spills under pressure, so
-  // headroom is cheap; eviction telemetry below still flags a storm if
-  // the registry outgrows this again.
-  private[graft] val MaxLive = 128
-  private val live = scala.collection.mutable.Queue.empty[DataFrame]
+  private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  // frames newly persisted inside the current thread's [[scoped]] block
+  private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
 
-  // Telemetry (VERDICT r7 #4: the rel_kmv_intersect 21.7s first pass
-  // could not be attributed because reuse had no occupancy/eviction
-  // counters). `hits` = reuse() found the plan already cached (CacheManager
-  // sameResult, which includes pinned same-plan copies); `misses` = a new
-  // persist was issued; `evictions` = FIFO dequeues past MaxLive that
-  // actually unpersisted a cached plan; `pin_skips` = dequeues skipped
-  // because a live pin holds the same plan (stale already-cleared
-  // dequeues count as neither). Bench snapshots these into
-  // bench_detail.json so a mid-run eviction storm is visible, not
-  // hypothesized.
-  private var nHits, nMisses, nEvictions, nPins, nPinSkips = 0L
+  // Telemetry: `hits` = reuse() found the plan already cached; `misses` =
+  // a new persist was issued. Bench snapshots these into bench_detail.json.
+  private var nHits, nMisses = 0L
 
   def reuse(df: DataFrame): DataFrame = synchronized {
-    if (df.storageLevel != StorageLevel.NONE) { nHits += 1; df }
+    if (df.storageLevel != StorageLevel.NONE) nHits += 1
     else {
       nMisses += 1
       df.persist(StorageLevel.MEMORY_AND_DISK)
-      live.enqueue(df)
-      while (live.size > MaxLive) {
-        val old = live.dequeue()
-        // unpersist() uncaches BY PLAN (CacheManager sameResult), not by
-        // instance: evicting a STALE entry — e.g. one left in the queue
-        // by an external clearCache without pruneStale — whose plan a
-        // PIN has since re-cached would silently kill the pin. That was
-        // the r14 pass-1 bug: Bench's warm-up left same-plan-as-pin
-        // entries queued, and their delayed FIFO eviction uncached the
-        // KLL pins right around their consumers' alphabetical position
-        // (~7 s rebuild charged to rel_kll_error, three rounds running).
-        // Never unpersist a plan a LIVE pinned frame holds — live only:
-        // a pin externally cleared by clearCache reads storageLevel NONE
-        // (the lookup is by plan, so NONE usually means the plan truly
-        // isn't cached), and letting it block would leave the dequeued
-        // same-plan entry persisted-but-untracked until releaseAll
-        // (ADVICE r14). Residual accepted case: if an external clear
-        // skipped pruneStale AND a later reuse() re-cached the SAME
-        // plan, the stale pin reads as live (storageLevel is
-        // plan-resolved — instances are indistinguishable) and still
-        // blocks, leaving that one frame persisted until releaseAll.
-        // That is the right side of the trade: the alternative —
-        // unpersisting through a possibly-live pin — is exactly the r14
-        // mid-pass pin-kill bug, a 7 s phantom per consumer; the leak
-        // is one re-derivable MEMORY_AND_DISK frame, and it requires
-        // violating the clearCache→pruneStale pairing rule to arise.
-        val oldPlan = old.queryExecution.analyzed
-        if (pinned.exists(p => p.storageLevel != StorageLevel.NONE &&
-              p.queryExecution.analyzed.sameResult(oldPlan))) {
-          nPinSkips += 1
-        } else if (old.storageLevel != StorageLevel.NONE) {
-          // REAL evictions only: stale dequeues (plan already cleared
-          // externally — the unpersist would be a no-op) and
-          // pin-protected dequeues both stay out of `evictions`, which
-          // exists to flag genuine mid-pass eviction storms (ADVICE
-          // r14/r15).
-          nEvictions += 1
-          old.unpersist(blocking = false)
-        }
-      }
-      df
-    }
-  }
-
-  private val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Exempt a [[reuse]]d frame from LRU eviction until [[releaseAll]]:
-    * a prewarmed shared sketch must outlive the ~10 reuse() calls of
-    * every intervening query, or the family member that needs it later
-    * silently rebuilds it inside its own timing (the bench-attribution
-    * noise this exists to pin).
-    *
-    * Idempotent by PLAN, not instance: Bench re-runs prewarm after every
-    * clearCache-retry, constructing fresh same-plan DataFrame instances —
-    * tracking each would grow `pinned` without bound in retry-heavy runs
-    * (ADVICE r7). A call whose plan is already cached AND already pinned
-    * is a no-op; entries externally unpersisted (clearCache) are pruned
-    * on the next pin so re-prewarming replaces rather than accumulates. */
-  def pin(df: DataFrame): DataFrame = synchronized {
-    pinned.filterInPlace(_.storageLevel != StorageLevel.NONE)
-    val analyzed = df.queryExecution.analyzed
-    val alreadyPinned = df.storageLevel != StorageLevel.NONE &&
-      pinned.exists(p => (p eq df) || p.queryExecution.analyzed.sameResult(analyzed))
-    if (!alreadyPinned) {
-      if (df.storageLevel == StorageLevel.NONE)
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      live.dequeueFirst(_ eq df)
-      pinned += df
-      nPins += 1
+      live += df
+      Option(scope.get).foreach(_ += df)
     }
     df
+  }
+
+  /** Run `body`, then unpersist and untrack every frame it newly
+    * persisted through [[reuse]] on this thread. Frames that were
+    * already cached when `body` reused them stay cached. */
+  def scoped[T](body: => T): T = {
+    val outer = scope.get
+    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    scope.set(mine)
+    try body
+    finally {
+      scope.set(outer)
+      synchronized {
+        mine.foreach(_.unpersist(blocking = false))
+        live.filterInPlace(df => !mine.exists(_ eq df))
+      }
+    }
   }
 
   def releaseAll(): Unit = synchronized {
     live.foreach(_.unpersist(blocking = false))
     live.clear()
-    pinned.foreach(_.unpersist(blocking = false))
-    pinned.clear()
   }
 
-  /** Drop tracking for entries externally unpersisted (a
-    * `spark.catalog.clearCache()` between bench passes): the queue would
-    * otherwise still hold them, and new inserts past MaxLive would count
-    * no-op "evictions" of already-cleared frames — inflating the
-    * eviction telemetry that exists to spot REAL mid-pass evictions.
-    * Call right after any external cache clear. */
+  /** Untrack frames an external `spark.catalog.clearCache()` already
+    * released, so `live` counts only cached frames again. */
   def pruneStale(): Unit = synchronized {
     live.filterInPlace(_.storageLevel != StorageLevel.NONE)
-    pinned.filterInPlace(_.storageLevel != StorageLevel.NONE)
   }
 
   /** Tracked-entry count (spec observability). */
   def liveCount: Int = synchronized(live.size)
 
-  /** Pinned-entry count (spec observability). */
-  def pinnedCount: Int = synchronized(pinned.size)
-
-  /** Counter snapshot for bench telemetry; see field comment. */
+  /** Counter snapshot for bench telemetry. `evictions` stays 0: nothing
+    * is unpersisted before [[releaseAll]]; the key is kept for readers
+    * of earlier bench_detail.json files. */
   def stats: Map[String, Long] = synchronized(Map(
-    "hits" -> nHits, "misses" -> nMisses, "evictions" -> nEvictions,
-    "pins" -> nPins, "pin_skips" -> nPinSkips,
-    "live" -> live.size.toLong,
-    "pinned" -> pinned.size.toLong))
+    "hits" -> nHits, "misses" -> nMisses, "evictions" -> 0L,
+    "live" -> live.size.toLong))
 
   /** Zero the counters (between bench passes; occupancy is untouched). */
-  def resetStats(): Unit = synchronized {
-    nHits = 0; nMisses = 0; nEvictions = 0; nPins = 0; nPinSkips = 0
-  }
+  def resetStats(): Unit = synchronized { nHits = 0; nMisses = 0 }
 }

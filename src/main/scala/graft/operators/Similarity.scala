@@ -802,7 +802,7 @@ object Similarity {
     * moves the documented output bound to ~9·10¹⁰ unit vectors
     * (ADVICE r13; residual_ppm itself is overflow-safe at any size).
     *
-    * Scale shape: consumes the PlanCache-pinned eigenvector and the
+    * Scale shape: consumes the prewarmed eigenvector and the
     * shared component frame; one rid-keyed aggregate + a 1-row rollup
     * (the |v|² side is a 1-row broadcast, PlanGuard-allowlisted). */
   def residualEnergy(df: DataFrame, idCol: String, vecCol: String,

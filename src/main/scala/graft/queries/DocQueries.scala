@@ -3039,56 +3039,50 @@ object DocQueries {
       .select(col("lang"), col("doc_id"), col("rk").cast("long").as("rk"))
   }
 
-  /** The doc/dedup family's cross-query shared frames, PINNED for the
+  /** The doc/dedup family's cross-query shared frames, persisted for the
     * bench's explicitly-timed `_shared_frames` line: the three
     * bottom-level sketches ([[Dedup.prewarmSharedSketches]]), the
     * Jaccard pair table (consumed by `dedup_jaccard_pairs`,
     * `dedup_clusters`, `pipe_dedup_keep`), the MinHash candidate pairs
     * (`dedup_minhash_pairs`, `dedup_minhash_est`), and the BPE
     * word-frequency frame (`text_bpe_merges`, `text_bpe_encode`).
-    * Without the pin, whichever family member runs first after a cache
+    * Without the prewarm, whichever family member runs first after a cache
     * clear absorbs the whole shared build into its own timing
     * (VERDICT r7 #1 — per-query bench attribution). */
   def prewarmSharedFrames(s: SparkSession,
                           dir: String): Seq[(String, DataFrame)] = {
     val docs = Tables.documents(s, dir)
     Dedup.prewarmSharedSketches(docs, "doc_id", "text") ++ Seq(
-      "jaccard_pairs" -> PlanCache.pin(
+      "jaccard_pairs" -> PlanCache.reuse(
         Dedup.jaccardPairs(docs, "doc_id", "text")),
-      "minhash_pairs" -> PlanCache.pin(Dedup.minHashCandidatePairs(
+      "minhash_pairs" -> PlanCache.reuse(Dedup.minHashCandidatePairs(
         docs, "doc_id", "text", ShingleN, MinHashK, RowsPerBand)),
-      // the SimHash pair table joined the reuse() convention in r15 but
-      // relied on FIFO adjacency of its two consumers to stay cached
-      // (ADVICE r15); pinned like its jaccard/minhash siblings
-      "simhash_pairs" -> PlanCache.pin(
+      // consumed by dedup_simhash_pairs AND dedup_method_agreement
+      "simhash_pairs" -> PlanCache.reuse(
         Dedup.simHashPairs(docs, "doc_id", "text")),
       // n = 2..10 gram counts shared by text_gopher_repetition (n ≤ 4)
       // and text_gopher_dupe_ngrams (n ≥ 5) — one 9-size explode+agg
       // pass instead of a 3-size + a 6-size pass (r16)
-      "gopher_grams" -> PlanCache.pin(gopherGramCounts(s, dir)),
-      "bpe_word_freq" -> PlanCache.pin(
+      "gopher_grams" -> PlanCache.reuse(gopherGramCounts(s, dir)),
+      "bpe_word_freq" -> PlanCache.reuse(
         TextOps.bpeWordFreq(Tables.spread(docs), "text")),
       // consumed by text_winnowing AND pipe_contamination_winnow
-      "winnow_fps" -> PlanCache.pin(textWinnowing(s, dir)),
+      "winnow_fps" -> PlanCache.reuse(textWinnowing(s, dir)),
       // consumed by doc_bm25_topk AND sim_rrf_fusion (VERDICT r9 #6:
       // the tf/doc chain was reuse-shared but the scored frame itself
       // was rebuilt by each consumer)
-      "bm25_scored" -> PlanCache.pin(bm25Scored(s, dir)),
+      "bm25_scored" -> PlanCache.reuse(bm25Scored(s, dir)),
       // consumed by text_char_entropy / text_ttr_segmental AND
-      // doc_quality_composite (alphabetically ~60 queries apart —
-      // FIFO reuse would evict the frames before the text_* consumers)
-      "char_entropy" -> PlanCache.pin(textCharEntropy(s, dir)),
-      "ttr_segmental" -> PlanCache.pin(textTtrSegmental(s, dir)),
-      // consumed by text_trigram_backoff AND pipe_ccnet_buckets, which
-      // sit far apart in bench order: at r10's MaxLive the FIFO dropped
-      // the reuse()d scorer in between and BOTH consumers paid the full
-      // ~2.5-3 s build (VERDICT r10 #3)
-      "trigram_scored" -> PlanCache.pin(trigramScored(s, dir)),
+      // doc_quality_composite
+      "char_entropy" -> PlanCache.reuse(textCharEntropy(s, dir)),
+      "ttr_segmental" -> PlanCache.reuse(textTtrSegmental(s, dir)),
+      // consumed by text_trigram_backoff AND pipe_ccnet_buckets
+      "trigram_scored" -> PlanCache.reuse(trigramScored(s, dir)),
       // LR training is eager at construction (driver-batched GD) and
       // memoized per dir: invoking it HERE lands the 8-step training
       // cost in the prewarm build line (_build_doc), not on whichever
       // text_lr_* row runs first (alphabetical = text_lr_calibration)
-      "lr_weights" -> PlanCache.pin(lrWeights(s, dir)))
+      "lr_weights" -> PlanCache.reuse(lrWeights(s, dir)))
   }
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -42,8 +42,8 @@ object PiiQueries {
   }
 
   /** The panel's shared narrow per-doc stats frame (5 consumers, all
-    * alphabetically adjacent in the registry — FIFO reuse covers them
-    * without a prewarm pin, the r11 NB-family observation). */
+    * alphabetically adjacent in the registry, so the first consumer's
+    * reuse() covers the rest without a prewarm). */
   private def docStats(s: SparkSession, dir: String): DataFrame =
     PlanCache.reuse(docStatsFor(Tables.spread(Tables.documents(s, dir))))
 

@@ -532,7 +532,7 @@ object VectorQueries {
     * same table `ivfTopK` probes), quantized per vector onto the 1e-6
     * grid so the cell rollup is an exact integer sum (no
     * order-dependent float summation). High mean dispersion = the cell
-    * is incoherent and `c` is too small. Reuses the PlanCache-pinned
+    * is incoherent and `c` is too small. Reuses the prewarmed
     * assignment frame; one c·d-row broadcast join + one map pass. */
   def simKmeansInertia(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
@@ -664,7 +664,7 @@ object VectorQueries {
   /** Old-vs-new occupancy of the trained quantizer cells — the shared
     * base of the embedding drift panel: even vec_ids model the OLD
     * crawl snapshot, odd the refreshed one (the pipe_crawl_delta split
-    * convention), counted per k-means cell. Rides the PlanCache-pinned
+    * convention), counted per k-means cell. Rides the prewarmed
     * `sim_kmeans_cells` frame — no second quantizer training
     * (VERDICT r12 #3); the rollup is KmC rows. */
   private def cellOcc(s: SparkSession, dir: String): DataFrame = {
@@ -793,7 +793,7 @@ object VectorQueries {
               coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
   }
 
-  /** The sim family's cross-query shared frames, PINNED for the bench's
+  /** The sim family's cross-query shared frames, persisted for the bench's
     * explicitly-timed `_shared_frames` line: the brute-force truth@3
     * (left side of all five recall rows), the trained k-means quantizer
     * (`sim_topk_ivf_trained`, `sim_ivf_trained_recall`,
@@ -807,21 +807,20 @@ object VectorQueries {
     VectorFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     Seq(
-      "sim_brute_truth3" -> graft.operators.PlanCache.pin(
+      "sim_brute_truth3" -> graft.operators.PlanCache.reuse(
         Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryPred, 3)),
-      "sim_kmeans_cells" -> graft.operators.PlanCache.pin(
+      "sim_kmeans_cells" -> graft.operators.PlanCache.reuse(
         Similarity.kmeansCells(emb, "vec_id", "embedding", KmC, KmIters)),
-      "sim_pq_codebook" -> graft.operators.PlanCache.pin(
+      "sim_pq_codebook" -> graft.operators.PlanCache.reuse(
         Similarity.pqCodebook(emb, "embedding", "label", PqM, Dims)),
       // consumed by sim_aniso_energy (alphabetically FIRST in the
       // family, so it was absorbing the whole Gram + power-iteration
       // build: 3.26 s) AND sim_power_iter / sim_gram_matrix /
-      // sim_corr_matrix. gramState must be pinned in its own right:
-      // powerIteration only reuse()s it, and ~180 queries of FIFO churn
-      // sit between this prewarm and the sim_* family.
-      "gram_state" -> graft.operators.PlanCache.pin(
+      // sim_corr_matrix. gramState is listed in its own right so its
+      // build is timed here, not inside power_iter_v's.
+      "gram_state" -> graft.operators.PlanCache.reuse(
         Similarity.gramState(emb, "vec_id", "embedding")),
-      "power_iter_v" -> graft.operators.PlanCache.pin(
+      "power_iter_v" -> graft.operators.PlanCache.reuse(
         Similarity.powerIteration(emb, "vec_id", "embedding", 3)))
   }
 

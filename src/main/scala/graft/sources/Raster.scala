@@ -47,8 +47,10 @@ object Raster {
       if (bytes == null || bytes.length < 12) return None
       val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       val w = buf.getInt; val h = buf.getInt; val nb = buf.getInt
+      // compared by division: 4L * nb * w * h overflows Long for header
+      // ints read from a non-raster blob, and the guard would then pass
       if (w <= 0 || h <= 0 || nb <= 0 ||
-          bytes.length < 12 + 4L * nb * w * h) return None
+          w.toLong * h > (bytes.length - 12) / 4 / nb) return None
       Some((w, h, Array.fill(nb)(Array.fill(w * h)(buf.getFloat))))
     }
   }

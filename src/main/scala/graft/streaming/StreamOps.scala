@@ -203,13 +203,8 @@ object StreamOps {
                          segTokens: Int = 10)
                         (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Dedup.lineDedupIncrement(
-               blocklist, batch, "doc_id", "text", segTokens), batchId)
-      }
-      .start()
+    gate(newDocs, sink)(graft.operators.Dedup.lineDedupIncrement(
+      blocklist, _, "doc_id", "text", segTokens))
 
   /** Streaming CLASSIFICATION gate: each micro-batch of new documents
     * is scored against a FROZEN Naive-Bayes model (the
@@ -229,20 +224,11 @@ object StreamOps {
                           term: DataFrame)
                          (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // PIN (not reuse) the frozen model: nbClassify PlanCache.reuse()s
-    // each batch's scored frame, and after ~MaxLive batches the FIFO
-    // would evict (and unpersist) reuse()d model frames — every later
-    // batch then silently re-runs the full training aggregation. Pinned
-    // frames are exempt until releaseAll (ADVICE r11).
-    graft.operators.PlanCache.pin(params)
-    graft.operators.PlanCache.pin(term)
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.queries.DocQueries.nbClassify(batch, params, term),
-             batchId)
-      }
-      .start()
+    // persist the frozen model before the first batch, so no batch's
+    // scope owns (and releases) it
+    graft.operators.PlanCache.reuse(params)
+    graft.operators.PlanCache.reuse(term)
+    gate(newDocs, sink)(graft.queries.DocQueries.nbClassify(_, params, term))
   }
 
   /** Streaming LR quality gate: each micro-batch of new (doc_id, lang,
@@ -250,26 +236,19 @@ object StreamOps {
     * trained logistic-regression weights
     * ([[graft.operators.LogReg.score]]) — the admission filter a live
     * ingestion pipeline runs with a model trained offline. State is
-    * EXTERNAL (the (B+1)-row weight table, pinned like the NB model:
-    * FIFO eviction after ~MaxLive batches would silently retrain per
-    * batch); scoring is per-doc independent, so the union of streamed
-    * outputs equals one batch [[graft.operators.LogReg.score]] over
-    * the same docs for ANY micro-batch partitioning (StreamingSpec
-    * pins this). */
+    * EXTERNAL (the (B+1)-row weight table, persisted before the first
+    * batch like the NB model); scoring is per-doc independent, so the
+    * union of streamed outputs equals one batch
+    * [[graft.operators.LogReg.score]] over the same docs for ANY
+    * micro-batch partitioning (StreamingSpec pins this). */
   def lrScoreGateBatch(newDocs: DataFrame, weights: DataFrame)
                       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.PlanCache.pin(weights)
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.LogReg.score(
-               graft.operators.LogReg.features(
-                 batch, "doc_id", "text", col("lang") === "en"),
-               weights),
-             batchId)
-      }
-      .start()
+    graft.operators.PlanCache.reuse(weights)
+    gate(newDocs, sink)(batch => graft.operators.LogReg.score(
+      graft.operators.LogReg.features(
+        batch, "doc_id", "text", col("lang") === "en"),
+      weights))
   }
 
   /** Streaming PII gate: each micro-batch of new documents runs the
@@ -284,12 +263,7 @@ object StreamOps {
   def piiScanGateBatch(newDocs: DataFrame)
                       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.queries.PiiQueries.docStatsFor(batch), batchId)
-      }
-      .start()
+    gate(newDocs, sink)(graft.queries.PiiQueries.docStatsFor)
 
   /** Streaming C4 bad-words gate: each micro-batch of (doc_id, source,
     * text) runs the batch gate's per-doc blocklist stats
@@ -302,10 +276,21 @@ object StreamOps {
   def badwordsGateBatch(newDocs: DataFrame)
                        (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
+    gate(newDocs, sink)(graft.queries.DocQueries.badwordsDocStats)
+
+  /** The per-batch gate shape shared by the gates above: `stage` maps a
+    * micro-batch to its report and `sink` consumes it. Frames the batch
+    * newly persisted through [[graft.operators.PlanCache.reuse]] (e.g.
+    * [[graft.queries.DocQueries.nbScored]]) are released once the sink
+    * returns, so a long-running gate's cache stays the size of one
+    * batch; frames cached before the batch (the frozen model) stay. */
+  private def gate(input: DataFrame, sink: (DataFrame, Long) => Unit)
+                  (stage: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    input.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.queries.DocQueries.badwordsDocStats(batch), batchId)
+        graft.operators.PlanCache.scoped(sink(stage(batch), batchId))
       }
       .start()
 

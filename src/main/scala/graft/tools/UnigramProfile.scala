@@ -26,7 +26,7 @@ object UnigramProfile {
     }
     val docs = Tables.documents(spark, dir)
     for (i <- 1 to 3) {
-      spark.catalog.clearCache(); PlanCache.pruneStale()
+      PlanCache.releaseAll()
       val wf = PlanCache.reuse(UnigramLM.wordFreq(docs, "text"))
       val maxW = t(s"run$i wordFreq+effMaxWord")(UnigramLM.effMaxWord(wf))
       def collect2(d: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =

@@ -35,6 +35,8 @@ class CompositeRasterSpec extends SparkSpec {
     val truncated = GraftRasterCodec.encode(W, H, Array.tabulate(6)(i => bandVals(i + 1)))
       .take(20)
     assert(GraftRasterCodec.decode(truncated).isEmpty)
+    // a 12-byte non-raster blob: its header ints make 4·nb·w·h wrap Long
+    assert(GraftRasterCodec.decode("hello world!".getBytes("US-ASCII")).isEmpty)
   }
 
   test("golden composite: (r,g,b) = bands (4,3,2) per pixel") {

@@ -4,83 +4,43 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.operators.PlanCache
 
-/** Lifecycle contract of the plan-reuse persist registry: bounded live
-  * set (FIFO past the cap), idempotence on cached plans, full release. */
+/** Lifecycle contract of the plan-reuse persist registry: frames persist
+  * once per plan and stay cached until releaseAll; a scope releases only
+  * what it newly persisted. */
 class PlanCacheSpec extends SparkSpec {
 
-  test("live persists are bounded: oldest unpersists past the cap") {
+  test("a stale entry never uncaches a re-cached plan (r14 scenario)") {
     PlanCache.releaseAll()
-    val frames = (0 until PlanCache.MaxLive + 4)
-      .map(i => spark.range(i, i + 100).toDF())
-    frames.foreach(PlanCache.reuse)
-    assert(PlanCache.liveCount <= PlanCache.MaxLive,
-      s"cap breached: ${PlanCache.liveCount}")
-    // the first-inserted frames were evicted, the newest are still live
-    assert(frames.head.storageLevel == StorageLevel.NONE,
-      "oldest entry must have been unpersisted (FIFO)")
-    assert(frames.last.storageLevel != StorageLevel.NONE,
-      "newest entry must still be persisted")
-  }
-
-  test("pinned frames are exempt from eviction until releaseAll") {
-    PlanCache.releaseAll()
-    val pinned = PlanCache.pin(PlanCache.reuse(spark.range(9000, 9100).toDF()))
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 100).toDF()))
-    assert(pinned.storageLevel != StorageLevel.NONE,
-      "pin must survive a full LRU churn")
-    PlanCache.releaseAll()
-    assert(pinned.storageLevel == StorageLevel.NONE,
-      "releaseAll must release pins too")
-  }
-
-  test("evicting a stale same-plan entry never uncaches a pin (r14 bug)") {
-    PlanCache.releaseAll()
-    // a tracked entry left STALE by an external clearCache without
+    // a tracked entry left STALE by an external clearCache with no
     // pruneStale — the state Bench's warm-up used to leave behind
     val stale = PlanCache.reuse(spark.range(7777, 7877).toDF())
     spark.catalog.clearCache()
-    // the same PLAN re-cached through a fresh instance, then pinned
-    val pin = PlanCache.pin(PlanCache.reuse(spark.range(7777, 7877).toDF()))
-    assert(pin.storageLevel != StorageLevel.NONE)
-    assert(stale.storageLevel != StorageLevel.NONE,
-      "by-plan lookup sees the pin's cache through the stale instance")
-    // churn the queue past the cap so the stale entry is FIFO-evicted:
-    // unpersist() removes cached data BY PLAN, so without the pinned-
-    // plan guard this eviction silently killed the pin mid-bench-pass
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 50).toDF()))
-    assert(pin.storageLevel != StorageLevel.NONE,
-      "stale same-plan eviction must not uncache the pin")
+    // the same PLAN re-cached through a fresh instance
+    val recached = PlanCache.reuse(spark.range(7777, 7877).toDF())
+    assert(recached.storageLevel != StorageLevel.NONE)
+    // a long run of later reuse() calls: nothing unpersists mid-session,
+    // so the stale entry can never uncache the plan by sameResult
+    (0 until 200).foreach(i => PlanCache.reuse(spark.range(i, i + 50).toDF()))
+    assert(recached.storageLevel != StorageLevel.NONE,
+      "the re-cached frame must still be persisted")
+    assert(PlanCache.stats("evictions") == 0)
     PlanCache.releaseAll()
+    assert(stale.storageLevel == StorageLevel.NONE)
   }
 
-  test("accepted residual: stale pin over a re-cached plan blocks " +
-       "eviction until releaseAll (r15 guard)") {
+  test("scoped releases only the frames it newly persisted") {
     PlanCache.releaseAll()
-    // a pin left STALE by an external clearCache without pruneStale...
-    val stalePin = PlanCache.pin(spark.range(6600, 6700).toDF())
-    spark.catalog.clearCache()
-    assert(stalePin.storageLevel == StorageLevel.NONE)
-    // ...whose plan a later reuse() RE-CACHED: by-plan storageLevel now
-    // reads live through the stale pin instance, so the two are
-    // indistinguishable and the eviction guard must err on the side of
-    // the r14 bug class (never unpersist through a possibly-live pin)
-    val recached = PlanCache.reuse(spark.range(6600, 6700).toDF())
-    assert(stalePin.storageLevel != StorageLevel.NONE)
-    val skipsBefore = PlanCache.stats("pin_skips")
-    // churn the queue so `recached` is FIFO-dequeued: the guard must
-    // SKIP it (pin_skips, not evictions) and leave the plan persisted —
-    // the accepted one-frame leak, reclaimed by releaseAll
-    (0 until PlanCache.MaxLive + 4)
-      .foreach(i => PlanCache.reuse(spark.range(i, i + 50).toDF()))
-    assert(PlanCache.stats("pin_skips") > skipsBefore,
-      "the dequeue must be counted as a pin-protected skip")
-    assert(recached.storageLevel != StorageLevel.NONE,
-      "the re-cached plan must survive the dequeue (guard blocks)")
+    val before = PlanCache.reuse(spark.range(0, 30).toDF())
+    val inner = spark.range(100, 130).toDF()
+    PlanCache.scoped {
+      PlanCache.reuse(spark.range(0, 30).toDF()) // a hit: not the scope's
+      PlanCache.reuse(inner)
+      assert(inner.storageLevel != StorageLevel.NONE)
+    }
+    assert(inner.storageLevel == StorageLevel.NONE)
+    assert(before.storageLevel != StorageLevel.NONE)
+    assert(PlanCache.liveCount == 1)
     PlanCache.releaseAll()
-    assert(recached.storageLevel == StorageLevel.NONE,
-      "releaseAll reclaims the accepted residual")
   }
 
   test("reuse is idempotent on already-cached plans") {
@@ -88,7 +48,7 @@ class PlanCacheSpec extends SparkSpec {
     val df = spark.range(0, 50).toDF()
     PlanCache.reuse(df)
     val n = PlanCache.liveCount
-    PlanCache.reuse(df) // same (now cached) plan — must not re-enqueue
+    PlanCache.reuse(df) // same (now cached) plan — must not re-track
     assert(PlanCache.liveCount == n)
     PlanCache.releaseAll()
   }

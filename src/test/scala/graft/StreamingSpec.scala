@@ -279,6 +279,34 @@ class StreamingSpec extends SparkSpec {
     graft.operators.PlanCache.releaseAll()
   }
 
+  test("NB gate releases each micro-batch's persisted frames") {
+    implicit val sq = spark.sqlContext
+    import graft.queries.DocQueries
+    import graft.operators.PlanCache
+    PlanCache.releaseAll()
+    val train = Seq((0L, "aa aa", "A"), (4L, "bb bb", "B"))
+      .toDF("doc_id", "text", "lang")
+    val (params, term) = DocQueries.nbModel(train)
+    val mem = MemoryStream[(Long, String)]
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val q = StreamOps.nbClassifyGateBatch(
+        mem.toDF().toDF("doc_id", "text"), params, term) { (df, _) =>
+      n.addAndGet(df.count()); ()
+    }
+    // tracked-frame count after each micro-batch: each batch reuse()s
+    // its own scored frame, which the gate must release, while the
+    // frozen model stays persisted throughout
+    val tracked = try (1 to 5).map { i =>
+      mem.addData((10L + i, if (i % 2 == 0) "aa bb aa" else "bb"))
+      q.processAllAvailable()
+      PlanCache.liveCount
+    } finally q.stop()
+    assert(n.get == 5)
+    assert(tracked.forall(_ == tracked.head), s"tracked per batch: $tracked")
+    assert(params.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    PlanCache.releaseAll()
+  }
+
   test("streaming LR gate equals one batch score under frozen weights") {
     implicit val sq = spark.sqlContext
     import graft.operators.{LogReg, PlanCache}

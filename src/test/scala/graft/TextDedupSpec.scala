@@ -874,8 +874,7 @@ class TextDedupSpec extends SparkSpec {
       // erased in plan canonicalization, so the flipped rebuild would
       // otherwise sameResult-hit the cached (hinted) probe and the
       // strategy change could never surface in its executed plan
-      spark.catalog.clearCache()
-      graft.operators.PlanCache.pruneStale()
+      graft.operators.PlanCache.releaseAll()
       // past the row bound the probe must flip to a shuffled anti join
       // (web-scale hot-shingle blocklists don't fit a broadcast)
       val flipped = Dedup.jaccardPairs(corpus, "doc_id", "text",
