@@ -266,148 +266,23 @@ object Sketch {
     * in oracle SQL, so the full sketch state and every estimate
     * derived from it are cross-engine hash-exact.
     *
-    * Returns the leveled item stream `(l, v, h2)` — one row per
-    * (item, level ≤ its top level); expected 2 rows per input row
+    * Returns the leveled item stream `(groupCols…, l, v, h2)` — one row
+    * per (item, level ≤ its top level); expected 2 rows per input row
     * (Σ 2^-l). `h2` is a DISJOINT 60-bit md5 slice used as the
     * bounded-memory survivor tiebreak ([[kllSurvivors]]); bucket and
     * tiebreak never share bits (the amsF2 rule — a shared bit would
-    * correlate membership with survivorship). */
-  def kllLeveled(rows: DataFrame, value: Column, rowKey: Column,
-                 maxL: Int = KllMaxLevel): DataFrame = {
-    val m = md5(concat(lit("kll|"), rowKey))
-    val b = conv(substring(m, 1, 4), 16, 10).cast("long")
-    val lvl = (1 to maxL).foldLeft(lit(0)) { (acc, l) =>
-      when(b % (1L << l) === 0, lit(l)).otherwise(acc)
-    }
-    rows.select(value.as("v"), lvl.as("toplvl"),
-                conv(substring(m, 5, 15), 16, 10).cast("long").as("h2"))
-      .select(explode(sequence(lit(0), col("toplvl"))).as("l"),
-              col("v"), col("h2"))
-  }
-
-  /** Exact per-level populations `(l, n)` — the merge-summable half of
-    * the sketch state (counts add across disjoint shards). Levels with
-    * zero population are simply absent; populations are monotone in
-    * `l`, which is what lets [[kllQuantiles]] pick the estimation
-    * level with one MIN. */
-  def kllCounts(leveled: DataFrame): DataFrame =
-    leveled.groupBy(col("l")).agg(count(lit(1)).as("n"))
-
-  /** Bounded survivor sets: per level, the `cap` items with the
-    * smallest `(h2, v)` — the KMV closure argument makes this
-    * mergeable (the union's bottom-cap is contained in the union of
-    * the shards' bottom-caps, so re-truncating a union of sketches
-    * equals sketching the union; spec-pinned). Because the tiebreak
-    * hash is independent of the value, a TRUNCATED level's survivors
-    * are themselves a uniform size-`cap` subsample — the estimator
-    * degrades gracefully instead of failing past the design scale.
+    * correlate membership with survivorship).
     *
-    * Scale shape (100 TB): the rank-≤cap filter plans as Spark 4
-    * WindowGroupLimit (the kmvSketch precedent) — every map task
-    * forwards at most `cap` rows per level, so the exchange carries
-    * ≤ cap·levels rows per map partition and the final sketch is
-    * ≤ cap·(maxL+1) longs regardless of corpus size. */
-  def kllSurvivors(leveled: DataFrame, cap: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l")).orderBy(col("h2"), col("v"))
-    leveled.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cap)
-      .select(col("l"), col("v"), col("h2"))
-  }
-
-  /** Merge law, counts half: cell-wise sum (shards must partition the
-    * data — sample sketches double-count overlaps, like every linear
-    * sketch here). */
-  def kllMergeCounts(sides: DataFrame*): DataFrame =
-    sides.reduce(_ unionAll _)
-      .groupBy(col("l")).agg(sum(col("n")).as("n"))
-
-  /** Merge law, survivors half: union then re-truncate bottom-`cap`
-    * per level — exact by KMV closure. */
-  def kllMergeSurvivors(cap: Int, sides: DataFrame*): DataFrame =
-    kllSurvivors(sides.reduce(_ unionAll _), cap)
-
-  /** Quantile estimates from the sketch state: pick the SHALLOWEST
-    * level whose full population fits `cap` (no truncation there, so
-    * the kept set IS the exact rate-2^-l sample; monotone populations
-    * make this one MIN), fall back to the deepest POPULATED level when
-    * every populated level overflows (max(l) over the counts — a
-    * static max-level fallback could name an EMPTY level past the
-    * design scale and silently return zero estimate rows, ADVICE r13),
-    * and read value-rank `ceil(q·n_s)` within the sample ordered by
-    * `(v, h2)`. Rank error vs the true quantile is binomial:
-    * σ = √(q(1−q)/n_s) with n_s ∈ (cap/2, cap] at design scale — the
-    * error-bound companion query asserts 5σ.
-    *
-    * The two windows below are SKETCH-sized by construction (≤ cap
-    * rows past the level filter), never corpus-sized — the documented
-    * exception to the no-unpartitioned-window rule. The 1-row level
-    * pick broadcasts (PlanGuard-allowlisted). */
-  def kllQuantiles(counts: DataFrame, survivors: DataFrame, cap: Int,
-                   qsPermille: Seq[Int]): DataFrame = {
-    val ls = counts.agg(
-      coalesce(min(when(col("n") <= cap, col("l"))), max(col("l")))
-        .as("l_star"))
-    val sam = survivors.crossJoin(broadcast(ls))
-      .filter(col("l") === col("l_star"))
-    estimateTail(sam, qsPermille)
-  }
-
-  /** Shared estimation tail: rank + sample-size windows over the
-    * selected level's sample (≤ cap rows — sketch-sized by
-    * construction) and the ceil-rank probe reads. */
-  private def estimateTail(sam: DataFrame,
-                           qsPermille: Seq[Int]): DataFrame = {
-    val wr = org.apache.spark.sql.expressions.Window
-      .orderBy(col("v"), col("h2"))
-    val wn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l_star"))
-    sam.withColumn("rn", row_number().over(wr))
-      .withColumn("sample_n", count(lit(1)).over(wn))
-      .select(explode(array(qsPermille.map(lit): _*)).as("q_permille"),
-              col("l_star"), col("sample_n"), col("rn"), col("v"))
-      .filter(col("rn") === expr("(q_permille * sample_n + 999) DIV 1000"))
-      .select(col("q_permille").cast("long").as("q_permille"),
-              col("l_star").cast("long").as("sample_level"),
-              col("sample_n"), col("v").as("est_cents"))
-  }
-
-  /** Serving-path estimates straight from the LEVELED stream: push the
-    * l_star pick BELOW the survivor selection, so the bottom-cap
-    * window sorts only the estimation level's population (≤ cap at
-    * design scale; the rate-2^-maxL deepest level in the fallback
-    * case) instead of the full Σ-levels stream — measured 2× on the
-    * grouped fixture row, and at corpus scale the difference between
-    * sorting ~cap rows and sorting 2n. Output ≡
-    * `kllQuantiles(counts, kllSurvivors(leveled, cap), cap, qs)`:
-    * filtering to l_star commutes with per-level truncation because
-    * truncation is per-level to begin with (spec-pinned). Use the
-    * [[kllSurvivors]] path when the SKETCH ITSELF is the artifact to
-    * persist or merge — this path never materializes the other
-    * levels' survivor sets. */
-  def kllQuantilesServing(counts: DataFrame, leveled: DataFrame,
-                          cap: Int, qsPermille: Seq[Int]): DataFrame = {
-    val ls = counts.agg(
-      coalesce(min(when(col("n") <= cap, col("l"))), max(col("l")))
-        .as("l_star"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("h2"), col("v"))
-    val sam = leveled.crossJoin(broadcast(ls))
-      .filter(col("l") === col("l_star"))
-      .withColumn("rn0", row_number().over(w))
-      .filter(col("rn0") <= cap).drop("rn0")
-    estimateTail(sam, qsPermille)
-  }
-
-  /** Group-keyed [[kllLeveled]]: carries `groupCols` through the
-    * leveled stream so every group builds an independent sketch over
-    * ONE shared scan — the actual shape of "per-source length
-    * quantiles" at corpus scale (the exact `percentile` alternative
-    * buffers every group's full value set per executor). Hashes ignore
-    * the group, so a group's sketch here is bit-identical to running
-    * the ungrouped pipeline on that group's slice (spec-pinned law). */
-  def kllLeveledBy(rows: DataFrame, groupCols: Seq[String], value: Column,
-                   rowKey: Column, maxL: Int = KllMaxLevel): DataFrame = {
+    * Every KLL function here is group-keyed: `groupCols` rides through
+    * the stream so each group builds an independent sketch over ONE
+    * shared scan — the shape of "per-source length quantiles" at corpus
+    * scale (the exact `percentile` alternative buffers every group's
+    * full value set per executor). Hashes ignore the group, so a
+    * group's sketch is bit-identical to sketching that group's slice
+    * alone (spec-pinned law). `groupCols = Nil` is the ungrouped
+    * sketch: one group, the whole input. */
+  def kllLeveled(rows: DataFrame, groupCols: Seq[String], value: Column,
+                 rowKey: Column, maxL: Int = KllMaxLevel): DataFrame = {
     val m = md5(concat(lit("kll|"), rowKey))
     val b = conv(substring(m, 1, 4), 16, 10).cast("long")
     val lvl = (1 to maxL).foldLeft(lit(0)) { (acc, l) =>
@@ -421,15 +296,32 @@ object Sketch {
         col("v"), col("h2")): _*)
   }
 
-  /** Per-(group, level) populations — [[kllCounts]] with a group key. */
-  def kllCountsBy(leveled: DataFrame, groupCols: Seq[String]): DataFrame =
+  /** Exact per-(group, level) populations `(groupCols…, l, n)` — the
+    * merge-summable half of the sketch state (counts add across
+    * disjoint shards). Levels with zero population are simply absent;
+    * populations are monotone in `l`, which is what lets
+    * [[kllQuantiles]] pick the estimation level with one MIN. */
+  def kllCounts(leveled: DataFrame, groupCols: Seq[String]): DataFrame =
     leveled.groupBy((groupCols :+ "l").map(col): _*)
       .agg(count(lit(1)).as("n"))
 
-  /** Per-(group, level) bottom-`cap` survivors — [[kllSurvivors]] with
-    * a group key; same WindowGroupLimit map-side bound per partition. */
-  def kllSurvivorsBy(leveled: DataFrame, groupCols: Seq[String],
-                     cap: Int): DataFrame = {
+  /** Bounded survivor sets: per (group, level), the `cap` items with
+    * the smallest `(h2, v)` — the KMV closure argument makes this
+    * mergeable (the union's bottom-cap is contained in the union of
+    * the shards' bottom-caps, so re-truncating a union of sketches
+    * equals sketching the union; spec-pinned). Because the tiebreak
+    * hash is independent of the value, a TRUNCATED level's survivors
+    * are themselves a uniform size-`cap` subsample — the estimator
+    * degrades gracefully instead of failing past the design scale.
+    *
+    * Scale shape (100 TB): the rank-≤cap filter plans as Spark 4
+    * WindowGroupLimit (the kmvSketch precedent) — every map task
+    * forwards at most `cap` rows per (group, level), so the exchange
+    * carries ≤ cap·levels rows per group per map partition and the
+    * final sketch is ≤ cap·(maxL+1) longs per group regardless of
+    * corpus size. */
+  def kllSurvivors(leveled: DataFrame, groupCols: Seq[String],
+                   cap: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy((groupCols :+ "l").map(col): _*)
       .orderBy(col("h2"), col("v"))
@@ -438,26 +330,90 @@ object Sketch {
       .select((groupCols ++ Seq("l", "v", "h2")).map(col): _*)
   }
 
-  /** Per-group quantile estimates — [[kllQuantiles]] with the 1-row
-    * level pick replaced by a group-keyed equi join (sketch-sized on
-    * both sides) and group-partitioned rank windows (≤ cap rows per
-    * partition by construction). */
-  def kllQuantilesBy(counts: DataFrame, survivors: DataFrame,
-                     groupCols: Seq[String], cap: Int,
-                     qsPermille: Seq[Int]): DataFrame = {
-    val sam = survivors.join(lStarBy(counts, groupCols, cap), groupCols)
-      .filter(col("l") === col("l_star"))
-    estimateTailBy(sam, groupCols, qsPermille)
+  /** Merge law, counts half: cell-wise sum (shards must partition the
+    * data — sample sketches double-count overlaps, like every linear
+    * sketch here). Grouping is by every column except `n`, so the
+    * same merge serves grouped and ungrouped state (the [[hllMerge]]
+    * rule). */
+  def kllMergeCounts(sides: DataFrame*): DataFrame = {
+    val keys = sides.head.columns.filterNot(_ == "n").toSeq
+    sides.reduce(_ unionAll _)
+      .groupBy(keys.map(col): _*).agg(sum(col("n")).as("n"))
   }
 
-  private def lStarBy(counts: DataFrame, groupCols: Seq[String],
-                      cap: Int): DataFrame =
+  /** Merge law, survivors half: union then re-truncate bottom-`cap`
+    * per (group, level) — exact by KMV closure. The group columns are
+    * every column except the state `(l, v, h2)`. */
+  def kllMergeSurvivors(cap: Int, sides: DataFrame*): DataFrame = {
+    val groupCols = sides.head.columns
+      .filterNot(Set("l", "v", "h2")).toSeq
+    kllSurvivors(sides.reduce(_ unionAll _), groupCols, cap)
+  }
+
+  /** Per-group quantile estimates from the sketch state: pick the
+    * SHALLOWEST level whose full population fits `cap` (no truncation
+    * there, so the kept set IS the exact rate-2^-l sample; monotone
+    * populations make this one MIN), fall back to the deepest
+    * POPULATED level when every populated level overflows (max(l) over
+    * the counts — a static max-level fallback could name an EMPTY level
+    * past the design scale and silently return zero estimate rows,
+    * ADVICE r13), and read value-rank `ceil(q·n_s)` within the sample
+    * ordered by `(v, h2)`. Rank error vs the true quantile is binomial:
+    * σ = √(q(1−q)/n_s) with n_s ∈ (cap/2, cap] at design scale — the
+    * error-bound companion query asserts 5σ.
+    *
+    * The level pick is a group-keyed equi join, sketch-sized on both
+    * sides (one row per group; with no group columns a 1-row side that
+    * Catalyst plans as a BroadcastHashJoin on `l = l_star`). The rank
+    * windows are group-partitioned and SKETCH-sized by construction
+    * (≤ cap rows per group past the level filter), never corpus-sized —
+    * the documented exception to the no-unpartitioned-window rule for
+    * the ungrouped case. */
+  def kllQuantiles(counts: DataFrame, survivors: DataFrame,
+                   groupCols: Seq[String], cap: Int,
+                   qsPermille: Seq[Int]): DataFrame = {
+    val sam = survivors.join(lStar(counts, groupCols, cap), groupCols)
+      .filter(col("l") === col("l_star"))
+    estimateTail(sam, groupCols, qsPermille)
+  }
+
+  /** Serving-path estimates straight from the LEVELED stream: push the
+    * l_star pick BELOW the survivor selection, so the per-(group,
+    * level) bottom-cap window sorts only each group's estimation level
+    * (≤ cap at design scale; the rate-2^-maxL deepest level in the
+    * fallback case) instead of the full Σ-levels stream — measured 2×
+    * on the grouped fixture row, and at corpus scale the difference
+    * between sorting ~cap rows and sorting 2n. Output ≡
+    * `kllQuantiles(counts, kllSurvivors(leveled, …), …)`: filtering to
+    * l_star commutes with per-level truncation because truncation is
+    * per-level to begin with (spec-pinned). Use the [[kllSurvivors]]
+    * path when the SKETCH ITSELF is the artifact to persist or merge —
+    * this path never materializes the other levels' survivor sets. */
+  def kllQuantilesServing(counts: DataFrame, leveled: DataFrame,
+                          groupCols: Seq[String], cap: Int,
+                          qsPermille: Seq[Int]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(groupCols.map(col): _*).orderBy(col("h2"), col("v"))
+    val sam = leveled.join(lStar(counts, groupCols, cap), groupCols)
+      .filter(col("l") === col("l_star"))
+      .withColumn("rn0", row_number().over(w))
+      .filter(col("rn0") <= cap).drop("rn0")
+    estimateTail(sam, groupCols, qsPermille)
+  }
+
+  /** Per-group estimation level: shallowest level with `n ≤ cap`, else
+    * the deepest populated one. */
+  private def lStar(counts: DataFrame, groupCols: Seq[String],
+                    cap: Int): DataFrame =
     counts.groupBy(groupCols.map(col): _*)
       .agg(coalesce(min(when(col("n") <= cap, col("l"))), max(col("l")))
              .as("l_star"))
 
-  private def estimateTailBy(sam: DataFrame, groupCols: Seq[String],
-                             qsPermille: Seq[Int]): DataFrame = {
+  /** Shared estimation tail: rank + sample-size windows over each
+    * group's selected-level sample (≤ cap rows — sketch-sized by
+    * construction) and the ceil-rank probe reads. */
+  private def estimateTail(sam: DataFrame, groupCols: Seq[String],
+                           qsPermille: Seq[Int]): DataFrame = {
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(groupCols.map(col): _*).orderBy(col("v"), col("h2"))
     val wn = org.apache.spark.sql.expressions.Window
@@ -472,22 +428,6 @@ object Sketch {
         col("q_permille").cast("long").as("q_permille"),
         col("l_star").cast("long").as("sample_level"),
         col("sample_n"), col("v").as("est_cents")): _*)
-  }
-
-  /** Group-keyed [[kllQuantilesServing]]: the l_star equi join lands
-    * BELOW the survivor selection, so the per-(group, level) bottom-cap
-    * window sorts only each group's estimation level. Output ≡
-    * [[kllQuantilesBy]] over [[kllSurvivorsBy]] (same commutation). */
-  def kllQuantilesByServing(counts: DataFrame, leveled: DataFrame,
-                            groupCols: Seq[String], cap: Int,
-                            qsPermille: Seq[Int]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCols.map(col): _*).orderBy(col("h2"), col("v"))
-    val sam = leveled.join(lStarBy(counts, groupCols, cap), groupCols)
-      .filter(col("l") === col("l_star"))
-      .withColumn("rn0", row_number().over(w))
-      .filter(col("rn0") <= cap).drop("rn0")
-    estimateTailBy(sam, groupCols, qsPermille)
   }
 
   /** The HLL estimate from one [[hllState]] row — driver-side math for

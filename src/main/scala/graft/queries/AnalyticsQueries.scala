@@ -452,7 +452,7 @@ object AnalyticsQueries {
       fact.select(col(key))
         .join(keys, Seq(key), "left_outer")
         .agg(count(lit(1)).as("n_rows"),
-             sum(when(col("__hit").isNull, 1L).otherwise(0L)).as("n_orphans"))
+             count(when(col("__hit").isNull, 1)).as("n_orphans"))
         .select(lit(name).as("relation"), col("n_rows"), col("n_orphans"))
     }
     audit("lineitem->orders", Tables.lineitem(s, dir), "l_orderkey",

@@ -432,18 +432,21 @@ object RelationalQueries {
     * plus the deterministic per-row hash key. The key need not be
     * unique — identical rows co-sample, which changes nothing in the
     * exact replay and only correlates the sample at md5-collision
-    * rates. `par` (orderkey parity) is the shard key of the merge row:
-    * it partitions the ROW stream into two disjoint halves, which is
-    * exactly what the merge laws require (counts add, bottom-caps
-    * re-truncate) — and because the level/tiebreak hashes ignore
-    * everything but `rk`, filtering the shared leveled stream by `par`
-    * IS the per-half leveled stream, no second corpus scan. */
+    * rates. Two group keys ride along: `par` (orderkey parity) is the
+    * shard key of the merge rows — it partitions the ROW stream into
+    * two disjoint halves, which is exactly what the merge laws require
+    * (counts add, bottom-caps re-truncate) — and `flag` (return flag)
+    * is the group key of the per-group row. Because the level/tiebreak
+    * hashes ignore everything but `rk`, filtering the shared leveled
+    * stream by a key IS that slice's leveled stream, no second corpus
+    * scan. */
   private def kllBase(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).select(
       expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
       concat_ws("|", col("l_orderkey"), col("l_linenumber"),
                 col("l_partkey"), col("l_suppkey")).as("rk"),
-      (col("l_orderkey") % 2).as("par"))
+      (col("l_orderkey") % 2).as("par"),
+      col("l_returnflag").as("flag"))
 
   /** Mergeable quantile sketch over lineitem prices (the missing member
     * of the sketch family — VERDICT r12 #2): KLL-style geometric level
@@ -454,29 +457,19 @@ object RelationalQueries {
     * gotcha): the sketch is ≤ cap·13 longs at ANY corpus size and
     * merges across shards/days by count-sum + bottom-cap re-truncation
     * (spec-pinned merge law). Deterministic end to end → the estimates
-    * themselves hash-match the oracle's identical replay. */
-  /** The shared leveled item stream (rel_kll_quantiles +
-    * rel_kll_error consume it; prewarm-pinned so the ~1-2 s build
-    * lands in the bench's attributed line, not on whichever row runs
-    * first — the alphabetically-first-absorption rule). */
-  /** ONE leveled stream carrying BOTH group keys (r16): [[kllLev]] (par
-    * shards) and [[kllLevGrp]] (return-flag groups) previously each ran
-    * the md5 + conv + explode build over lineitem — the two most
-    * expensive prewarm pins (5.7 s + 8.9 s sequential). The level/tiebreak
-    * hashes ignore group columns ([[Sketch.kllLeveledBy]] law), so both
-    * frames are pure projections of this shared build — bit-identical
-    * rows, one corpus pass, one cache entry. */
-  private[graft] def kllLevShared(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.lineitem(s, dir).select(
-      (col("l_orderkey") % 2).as("par"),
-      col("l_returnflag").as("flag"),
-      expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
-      concat_ws("|", col("l_orderkey"), col("l_linenumber"),
-                col("l_partkey"), col("l_suppkey")).as("rk"))
+    * themselves hash-match the oracle's identical replay.
+    *
+    * This is the ONE leveled stream every KLL row reads (r16): it
+    * carries both group keys, so [[kllLev]] (par shards) and
+    * [[kllLevGrp]] (return-flag groups) are pure projections of one
+    * md5 + conv + explode build over lineitem — bit-identical rows, one
+    * corpus pass, one cache entry (the `kll_shared` prewarm frame, so
+    * the ~1-2 s build lands in the bench's attributed line, not on
+    * whichever row runs first). */
+  private[graft] def kllLevShared(s: SparkSession, dir: String): DataFrame =
     PlanCache.reuse(
-      Sketch.kllLeveledBy(base, Seq("par", "flag"),
-                          col("cents"), col("rk")))
-  }
+      Sketch.kllLeveled(kllBase(s, dir), Seq("par", "flag"),
+                        col("cents"), col("rk")))
 
   private def kllLev(s: SparkSession, dir: String): DataFrame =
     kllLevShared(s, dir).select(col("par"), col("l"), col("v"), col("h2"))
@@ -496,7 +489,7 @@ object RelationalQueries {
     // sketch-materializing path (spec), which rel_kll_merge still
     // exercises in full
     PlanCache.reuse(
-      Sketch.kllQuantilesServing(Sketch.kllCounts(lev), lev,
+      Sketch.kllQuantilesServing(Sketch.kllCounts(lev, Nil), lev, Nil,
                                  KllCap, KllQs))
   }
 
@@ -520,18 +513,29 @@ object RelationalQueries {
     val lev = kllLev(s, dir)
     def half(p: Int) = lev.filter(col("par") === p)
     Sketch.kllQuantiles(
-      Sketch.kllMergeCounts(Sketch.kllCounts(half(0)),
-                            Sketch.kllCounts(half(1))),
+      Sketch.kllMergeCounts(Sketch.kllCounts(half(0), Nil),
+                            Sketch.kllCounts(half(1), Nil)),
       Sketch.kllMergeSurvivors(KllCap,
-                               Sketch.kllSurvivors(half(0), KllCap),
-                               Sketch.kllSurvivors(half(1), KllCap)),
-      KllCap, KllMergeQs)
+                               Sketch.kllSurvivors(half(0), Nil, KllCap),
+                               Sketch.kllSurvivors(half(1), Nil, KllCap)),
+      Nil, KllCap, KllMergeQs)
   }
 
   /** Probe grid of the DISK-roundtrip merge row — distinct from both
     * [[KllQs]] and [[KllMergeQs]] so no row is a byte-copy of a
     * sibling's output. */
   private[graft] val KllDiskQs = Seq(25, 200, 600, 800, 995)
+
+  /** Per-JVM scratch token: two concurrent JVMs constructing
+    * [[kllMergeDiskQuery]] against the SAME sf dir (a background gate's
+    * Verify plus a test suite's PlanGuard plan-build, say) must not
+    * alias one scratch path — one side's Overwrite would delete
+    * directories the other is mid-read on. pid@host is stable within the JVM (same-session
+    * re-runs stay Overwrite-idempotent) and unique across processes;
+    * the per-process dirs are KB-sized and live under build `target/`. */
+  private lazy val scratchToken: String =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+      .replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** [[kllMergeQuery]] with the sketches actually ROUND-TRIPPED THROUGH
     * STORAGE (VERDICT r14 #5): each parity shard's state — per-level
@@ -549,17 +553,6 @@ object RelationalQueries {
     * the [[KllDiskQs]] grid. Writes are Overwrite-idempotent and land
     * under the build's scratch dir, keyed by the sf dir so concurrent
     * scales never alias. */
-  /** Per-JVM scratch token: two concurrent JVMs constructing this query
-    * against the SAME sf dir (a background gate's Verify plus a test
-    * suite's PlanGuard plan-build, say) must not alias one scratch path
-    * — one side's Overwrite would delete directories the other is
-    * mid-read on. pid@host is stable within the JVM (same-session
-    * re-runs stay Overwrite-idempotent) and unique across processes;
-    * the per-process dirs are KB-sized and live under build `target/`. */
-  private lazy val scratchToken: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-
   def kllMergeDiskQuery(s: SparkSession, dir: String): DataFrame = {
     val lev = kllLev(s, dir)
     val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -578,8 +571,8 @@ object RelationalQueries {
     // read back with the written frames' schemas: over empty input no
     // shard file is written, and schema inference would fail
     val shards = Map(
-      "counts" -> Sketch.kllCountsBy(lev, Seq("par")),
-      "survivors" -> Sketch.kllSurvivorsBy(lev, Seq("par"), KllCap))
+      "counts" -> Sketch.kllCounts(lev, Seq("par")),
+      "survivors" -> Sketch.kllSurvivors(lev, Seq("par"), KllCap))
     shards.foreach { case (sub, df) =>
       graft.sources.Sinks.writePartitioned(df, Seq("par"), s"$base/$sub") }
     def rd(sub: String, p: Int) =
@@ -589,7 +582,7 @@ object RelationalQueries {
       Sketch.kllMergeCounts(rd("counts", 0), rd("counts", 1)),
       Sketch.kllMergeSurvivors(KllCap, rd("survivors", 0),
                                rd("survivors", 1)),
-      KllCap, KllDiskQs)
+      Nil, KllCap, KllDiskQs)
   }
 
   /** Error audit of [[kllQuantilesQuery]] against the EXACT value
@@ -622,6 +615,11 @@ object RelationalQueries {
         col("q_permille") * 1000 <= col("hi_ppm") + col("bound_ppm"))
   }
 
+  /** The group-keyed leveled stream (prewarm-pinned, same rationale
+    * as [[kllLev]]). */
+  private def kllLevGrp(s: SparkSession, dir: String): DataFrame =
+    kllLevShared(s, dir).select(col("flag"), col("l"), col("v"), col("h2"))
+
   /** Per-GROUP quantile sketch — the [[kllQuantilesQuery]] machinery in
     * its actual production shape: one shared scan builds an independent
     * sketch per return flag (group-keyed level sets, group-partitioned
@@ -631,18 +629,13 @@ object RelationalQueries {
     * bit-identical to running the ungrouped sketch on that group's
     * slice (spec-pinned law, and what makes shard→group merges
     * composable). */
-  /** The group-keyed leveled stream (prewarm-pinned, same rationale
-    * as [[kllLev]]). */
-  private def kllLevGrp(s: SparkSession, dir: String): DataFrame =
-    kllLevShared(s, dir).select(col("flag"), col("l"), col("v"), col("h2"))
-
   def kllGroupQuantilesQuery(s: SparkSession, dir: String): DataFrame = {
     val lev = kllLevGrp(s, dir)
     // serving path (r14) — the survivor sort sees each flag's
     // estimation level only (≤ cap rows/flag), not the full grouped
     // stream; measured 2.2 → ~1.1 s on the fixture (§8)
-    Sketch.kllQuantilesByServing(Sketch.kllCountsBy(lev, Seq("flag")),
-                                 lev, Seq("flag"), KllCap, KllQs)
+    Sketch.kllQuantilesServing(Sketch.kllCounts(lev, Seq("flag")),
+                               lev, Seq("flag"), KllCap, KllQs)
   }
 
   /** Distinct-intersection estimation across customer-activity years by
@@ -1768,15 +1761,17 @@ object RelationalQueries {
   }
 
   /** Shared oracle CTE chain of the KLL quantile-sketch rows —
-    * hash/levels/populations/survivors/estimates, mirroring
-    * [[graft.operators.Sketch.kllLeveled]]/`kllSurvivors`/
-    * `kllQuantiles` constants exactly (level CASE generated from the
-    * same maxL; bucket slice hex 1-4, tiebreak slice hex 5-19 —
-    * disjoint). Ends in `kest(q_permille, sample_level, sample_n,
-    * est_cents)`; `kb(v, …)` stays in scope for the error row's exact
-    * CDF side. Parameterized by the probe grid: the merge row replays
-    * the WHOLE-corpus sketch at [[KllMergeQs]] — the oracle side of the
-    * cross-engine merge-law proof. */
+    * hash/levels/populations/survivors/estimates, mirroring the
+    * ungrouped (`groupCols = Nil`) [[graft.operators.Sketch.kllLeveled]]
+    * → `kllCounts`/`kllSurvivors` → `kllQuantiles` chain constants
+    * exactly (level CASE generated from the same maxL; bucket slice hex
+    * 1-4, tiebreak slice hex 5-19 — disjoint); `kllQuantilesServing`
+    * produces the same estimates. Ends in `kest(q_permille,
+    * sample_level, sample_n, est_cents)`; `kb(v, …)` stays in scope for
+    * the error row's exact CDF side. Parameterized by the probe grid:
+    * the merge rows replay the WHOLE-corpus sketch at [[KllMergeQs]] /
+    * [[KllDiskQs]] — the oracle side of the cross-engine merge-law
+    * proof. */
   private def kllCtes(qs: Seq[Int] = KllQs): String = {
     val maxL = Sketch.KllMaxLevel
     val lvlCase = (maxL to 1 by -1)
@@ -1818,7 +1813,8 @@ object RelationalQueries {
        |  WHERE rn = (q * ns + 999) // 1000)""".stripMargin
   }
 
-  /** Group-keyed twin of [[kllCtes]] (return-flag grain), ending in
+  /** Group-keyed twin of [[kllCtes]] (return-flag grain, the same
+    * chain with `groupCols = Seq("flag")`), ending in
     * `gkest(flag, q_permille, sample_level, sample_n, est_cents)`. */
   private val kllGrpCtes: String = {
     val maxL = Sketch.KllMaxLevel

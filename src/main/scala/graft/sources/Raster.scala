@@ -207,10 +207,15 @@ object Raster {
                          subdir: String = "colorimage"): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
+    // a file without one of bands 4,3,2 pivots to a NULL plane: refuse
+    // it by name instead of failing the typed decode below
+    def plane(c: String, band: Int) =
+      coalesce(col(c).cast("float"), raise_error(concat(
+        lit("composite input "), col("file"), lit(s" has no band $band"))))
+        .as(c)
     val written = graft.operators.Composite.rgbComposite(pixels)
       .select(col("file"), col("y").cast("int"), col("x").cast("int"),
-              col("r").cast("float"), col("g").cast("float"),
-              col("b").cast("float"))
+              plane("r", 4), plane("g", 3), plane("b", 2))
       .as[(String, Int, Int, Float, Float, Float)]
       .groupByKey(_._1)
       .mapGroups { (file, it) =>

@@ -415,10 +415,10 @@ object ScalingBench {
             concat_ws("|", col("l_orderkey") * n + col("id"),
                       col("l_linenumber"), col("l_partkey"),
                       col("l_suppkey")).as("rk"))
-        def lev = graft.operators.Sketch.kllLeveled(li, col("cents"),
+        def lev = graft.operators.Sketch.kllLeveled(li, Nil, col("cents"),
                                                     col("rk"))
-        val counts = graft.operators.Sketch.kllCounts(lev)
-        val surv = graft.operators.Sketch.kllSurvivors(lev, cap)
+        val counts = graft.operators.Sketch.kllCounts(lev, Nil)
+        val surv = graft.operators.Sketch.kllSurvivors(lev, Nil, cap)
         surv.agg(count(lit(1)).as("n_survivors"),
                  sum(col("h2") % lit(1000003L)).as("chk"))
           .crossJoin(counts.agg(sum(col("n")).as("n_leveled")))

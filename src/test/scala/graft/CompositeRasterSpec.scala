@@ -143,4 +143,24 @@ class CompositeRasterSpec extends SparkSpec {
       .agg(sum($"value")).head().getDouble(0)
     assert(b1 == vals(0, 4).sum.toDouble, "re-scanned R plane ≡ band 4 of scene1")
   }
+
+  test("writeCompositeTiff refuses an input without band 4 by name") {
+    val inDir = Files.createTempDirectory("graft_tifmixed").toFile
+    val outDir = Files.createTempDirectory("graft_tifmixed_out").toFile
+    // a 3-band RGB TIFF next to a 6-band raster: the RGB file has no
+    // band 4 to become the composite's R plane
+    val rgb = Array.tabulate(3)(b => Array.tabulate(W * H)(p => ((b + p) % 256).toFloat))
+    Files.write(new java.io.File(inDir, "rgb.tif").toPath,
+                Raster.TiffCodec.encodeRgb(W, H, rgb))
+    Files.write(new java.io.File(inDir, "scene6.tif").toPath,
+                GraftRasterCodec.encode(W, H, Array.tabulate(6)(i => bandVals(i + 1))))
+    val px = Raster.pixels(spark, inDir.getAbsolutePath, "*.tif")
+    val e = intercept[Exception] {
+      Raster.writeCompositeTiff(px, outDir.getAbsolutePath).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("rgb.tif") && m.contains("has no band 4")),
+           msgs.mkString("\n"))
+  }
 }

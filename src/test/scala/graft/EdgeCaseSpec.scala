@@ -84,6 +84,22 @@ class EdgeCaseSpec extends SparkSpec {
     graft.operators.PlanCache.releaseAll()
   }
 
+  test("rel_fk_audit over empty tables counts 0 orphans, as its oracle does") {
+    // schema-only copies of the five tables the audit reads (the
+    // fixture's types for the key columns)
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_fk").toString
+    def empty(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.limit(0).write.parquet(s"$dir/$name.parquet")
+    empty("lineitem", Seq.empty[(Long, Long)].toDF("l_orderkey", "l_partkey"))
+    empty("orders", Seq.empty[(Long, Long)].toDF("o_orderkey", "o_custkey"))
+    empty("customer", Seq.empty[(Long, Int)].toDF("c_custkey", "c_nationkey"))
+    empty("nation", Seq.empty[Int].toDF("n_nationkey"))
+    empty("part", Seq.empty[Long].toDF("p_partkey"))
+    val out = graft.queries.AnalyticsQueries.fkAudit(spark, dir)
+      .select($"n_rows", $"n_orphans").as[(Long, Long)].collect()
+    assert(out.toSeq == Seq.fill(4)((0L, 0L)))
+  }
+
   test("bloom semi join with an empty build side returns no rows") {
     val big = (1L to 50L).toDF("k")
     val none = Seq.empty[Long].toDF("sk")

@@ -67,10 +67,8 @@ class PlanGuardSpec extends SparkSpec {
     "doc_assoc_pairs",        // corpus-N 1-row cross join (lift scale)
     "rel_join_size_est",      // exact-count × est-count 1-row scalars
     "rel_skew_f2_est",        // exact-F2 × est-F2 1-row scalars
-    "rel_kll_quantiles",      // 1-row estimation-level (l_star) broadcast
-    "rel_kll_error",          // same l_star 1-row + 5-row estimate table
-    "rel_kll_merge",          // same 1-row l_star pick over the merged state
-    "rel_kll_merge_disk",     // same 1-row l_star pick, sketches read from parquet
+    "rel_kll_error",          // 5-row estimate table cross join (the
+                              //   l_star pick itself is a hash join)
     "pipe_domain_weights",    // corpus-point + Σm 1-row broadcasts
     "rel_kmv_intersect",      // year-flag pair table (7 rows) + sketch
     "rel_modularity",         // undirected-edge-count m 1-row broadcast

@@ -895,7 +895,7 @@ class StreamingSpec extends SparkSpec {
     val cap = 64
     val all = (0 until 3000).map(i => KllRow((i * 2654435761L) % 99991L, i))
     def lev(df: org.apache.spark.sql.DataFrame) =
-      Sketch.kllLeveled(df, $"v",
+      Sketch.kllLeveled(df, Nil, $"v",
         org.apache.spark.sql.functions.concat_ws("|", $"i"))
     var cState: Option[org.apache.spark.sql.DataFrame] = None
     var sState: Option[org.apache.spark.sql.DataFrame] = None
@@ -903,8 +903,8 @@ class StreamingSpec extends SparkSpec {
     val q = mem.toDF().writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val l = lev(b).localCheckpoint()
-        val c = Sketch.kllCounts(l)
-        val sv = Sketch.kllSurvivors(l, cap)
+        val c = Sketch.kllCounts(l, Nil)
+        val sv = Sketch.kllSurvivors(l, Nil, cap)
         cState = Some(cState.fold(c)(prev =>
           Sketch.kllMergeCounts(prev, c)).localCheckpoint())
         sState = Some(sState.fold(sv)(prev =>
@@ -922,11 +922,11 @@ class StreamingSpec extends SparkSpec {
       .as[(Int, Long)].collect()
     assert(svByLevel.forall(_._2 <= cap))
     val qs = Seq(100, 500, 900)
-    val streamed = Sketch.kllQuantiles(cState.get, sState.get, cap, qs)
+    val streamed = Sketch.kllQuantiles(cState.get, sState.get, Nil, cap, qs)
       .as[(Long, Long, Long, Long)].collect().toSet
     val whole = lev(all.toDF())
-    val batchEst = Sketch.kllQuantiles(Sketch.kllCounts(whole),
-        Sketch.kllSurvivors(whole, cap), cap, qs)
+    val batchEst = Sketch.kllQuantiles(Sketch.kllCounts(whole, Nil),
+        Sketch.kllSurvivors(whole, Nil, cap), Nil, cap, qs)
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(streamed == batchEst && streamed.size == qs.size)
   }

@@ -162,30 +162,50 @@ class TextDedupSpec extends SparkSpec {
     val rows = (0 until 4096).map(i => ((i * 2654435761L) % 100003L, i.toLong))
       .toDF("v", "i")
     def lev(df: org.apache.spark.sql.DataFrame) =
-      Sketch.kllLeveled(df, $"v", concat_ws("|", $"i"))
+      Sketch.kllLeveled(df, Nil, $"v", concat_ws("|", $"i"))
     val cap = 64 // small enough that truncation is actually exercised
     val whole = lev(rows)
-    val cnts = Sketch.kllCounts(whole).as[(Int, Long)].collect().toMap
+    val cnts = Sketch.kllCounts(whole, Nil).as[(Int, Long)].collect().toMap
     // S_{l+1} ⊆ S_l: populations are monotone EXACTLY, not just E[]
     val byL = (0 to Sketch.KllMaxLevel).map(l => cnts.getOrElse(l, 0L))
     assert(byL.zip(byL.tail).forall { case (a, b) => b <= a } && byL.head == 4096L)
-    val sWhole = Sketch.kllSurvivors(whole, cap).as[(Int, Long, Long)].collect()
+    val sWhole = Sketch.kllSurvivors(whole, Nil, cap).as[(Int, Long, Long)].collect()
     assert(sWhole.groupBy(_._1).forall(_._2.length <= cap))
     // merge law: counts cell-sum, survivors re-truncate (KMV closure)
     val a = rows.filter($"i" % 2 === 0)
     val b = rows.filter($"i" % 2 =!= 0)
     val mc = Sketch.kllMergeCounts(
-      Sketch.kllCounts(lev(a)), Sketch.kllCounts(lev(b)))
+      Sketch.kllCounts(lev(a), Nil), Sketch.kllCounts(lev(b), Nil))
       .as[(Int, Long)].collect().toMap
     assert(mc == cnts)
     val ms = Sketch.kllMergeSurvivors(cap,
-      Sketch.kllSurvivors(lev(a), cap), Sketch.kllSurvivors(lev(b), cap))
+      Sketch.kllSurvivors(lev(a), Nil, cap),
+      Sketch.kllSurvivors(lev(b), Nil, cap))
       .as[(Int, Long, Long)].collect().toSet
     assert(ms == sWhole.toSet && ms.nonEmpty)
     // repartition invariance (the reference's process-count axis)
-    val sRep = Sketch.kllSurvivors(lev(rows.repartition(7)), cap)
+    val sRep = Sketch.kllSurvivors(lev(rows.repartition(7)), Nil, cap)
       .as[(Int, Long, Long)].collect().toSet
     assert(sRep == sWhole.toSet)
+    // the same law with a group key: both merges keep the group column,
+    // so merging grouped shard sketches ≡ the grouped sketch of the union
+    val gk = Seq("flag")
+    val g = rows.withColumn("flag", $"i" % 3)
+    def glev(df: org.apache.spark.sql.DataFrame) =
+      Sketch.kllLeveled(df, gk, $"v", concat_ws("|", $"i"))
+    val (ga, gb) = (glev(g.filter($"i" % 2 === 0)), glev(g.filter($"i" % 2 =!= 0)))
+    val gc = Sketch.kllCounts(glev(g), gk)
+    val gs = Sketch.kllSurvivors(glev(g), gk, cap)
+    val gmc = Sketch.kllMergeCounts(
+      Sketch.kllCounts(ga, gk), Sketch.kllCounts(gb, gk))
+    val gms = Sketch.kllMergeSurvivors(cap,
+      Sketch.kllSurvivors(ga, gk, cap), Sketch.kllSurvivors(gb, gk, cap))
+    assert(gmc.collect().toSet == gc.collect().toSet)
+    assert(gms.collect().toSet == gs.collect().toSet)
+    val qs = Seq(100, 500, 900)
+    val gEst = Sketch.kllQuantiles(gc, gs, gk, cap, qs).collect().toSet
+    assert(Sketch.kllQuantiles(gmc, gms, gk, cap, qs).collect().toSet == gEst &&
+      gEst.size == 3 * qs.size)
   }
 
   test("KLL disk roundtrip: persisted shard sketches merge to the in-memory result") {
@@ -202,16 +222,16 @@ class TextDedupSpec extends SparkSpec {
       concat_ws("|", $"l_orderkey", $"l_linenumber",
                 $"l_partkey", $"l_suppkey").as("rk"),
       ($"l_orderkey" % 2).as("par"))
-    val lev = Sketch.kllLeveledBy(base, Seq("par"), $"cents", $"rk")
+    val lev = Sketch.kllLeveled(base, Seq("par"), $"cents", $"rk")
     def half(p: Int) = lev.filter($"par" === p)
     val cap = graft.queries.RelationalQueries.KllCap
     val mem = Sketch.kllQuantiles(
-        Sketch.kllMergeCounts(Sketch.kllCounts(half(0)),
-                              Sketch.kllCounts(half(1))),
+        Sketch.kllMergeCounts(Sketch.kllCounts(half(0), Nil),
+                              Sketch.kllCounts(half(1), Nil)),
         Sketch.kllMergeSurvivors(cap,
-                                 Sketch.kllSurvivors(half(0), cap),
-                                 Sketch.kllSurvivors(half(1), cap)),
-        cap, graft.queries.RelationalQueries.KllDiskQs)
+                                 Sketch.kllSurvivors(half(0), Nil, cap),
+                                 Sketch.kllSurvivors(half(1), Nil, cap)),
+        Nil, cap, graft.queries.RelationalQueries.KllDiskQs)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(disk.nonEmpty && disk.sameElements(mem))
     graft.operators.PlanCache.releaseAll()
@@ -222,10 +242,10 @@ class TextDedupSpec extends SparkSpec {
     // order statistics at rank ceil(q·n)
     val small = (1 to 500).map(i => (i.toLong * 7 % 1009, i.toLong))
       .toDF("v", "i")
-    val lev = Sketch.kllLeveled(small, $"v", concat_ws("|", $"i"))
+    val lev = Sketch.kllLeveled(small, Nil, $"v", concat_ws("|", $"i"))
     val qs = Seq(100, 500, 900)
-    val est = Sketch.kllQuantiles(Sketch.kllCounts(lev),
-        Sketch.kllSurvivors(lev, 1024), 1024, qs)
+    val est = Sketch.kllQuantiles(Sketch.kllCounts(lev, Nil),
+        Sketch.kllSurvivors(lev, Nil, 1024), Nil, 1024, qs)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     val sortedV = small.as[(Long, Long)].collect().map(_._1).sorted
     assert(est.forall(_._2 == 0L) && est.forall(_._3 == 500L))
@@ -255,9 +275,9 @@ class TextDedupSpec extends SparkSpec {
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
           concat_ws("|", $"l_orderkey", $"l_linenumber",
                     $"l_partkey", $"l_suppkey").as("rk"))
-      val lev = Sketch.kllLeveled(base, $"cents", $"rk")
-      val ung = Sketch.kllQuantiles(Sketch.kllCounts(lev),
-          Sketch.kllSurvivors(lev, KllCap), KllCap, KllQs)
+      val lev = Sketch.kllLeveled(base, Nil, $"cents", $"rk")
+      val ung = Sketch.kllQuantiles(Sketch.kllCounts(lev, Nil),
+          Sketch.kllSurvivors(lev, Nil, KllCap), Nil, KllCap, KllQs)
         .as[(Long, Long, Long, Long)].collect().toSet
       val grp = out.filter(_._1 == f)
         .map(t => (t._2, t._3, t._4, t._5)).toSet
@@ -276,9 +296,9 @@ class TextDedupSpec extends SparkSpec {
       expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
       concat_ws("|", $"l_orderkey", $"l_linenumber",
                 $"l_partkey", $"l_suppkey").as("rk"))
-    val lev = Sketch.kllLeveled(base, $"cents", $"rk")
-    val whole = Sketch.kllQuantiles(Sketch.kllCounts(lev),
-        Sketch.kllSurvivors(lev, KllCap), KllCap, KllMergeQs)
+    val lev = Sketch.kllLeveled(base, Nil, $"cents", $"rk")
+    val whole = Sketch.kllQuantiles(Sketch.kllCounts(lev, Nil),
+        Sketch.kllSurvivors(lev, Nil, KllCap), Nil, KllCap, KllMergeQs)
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(merged == whole && merged.size == KllMergeQs.size)
     graft.operators.PlanCache.releaseAll()
@@ -295,12 +315,12 @@ class TextDedupSpec extends SparkSpec {
     // level > cap) with real truncation of the estimation level;
     // maxL = 12 covers the untruncated design regime
     for ((maxL, cap) <- Seq((2, 16), (12, 256), (12, 2048))) {
-      val lev = Sketch.kllLeveled(rows, $"v", concat_ws("|", $"i"), maxL)
-      val sketchPath = Sketch.kllQuantiles(Sketch.kllCounts(lev),
-          Sketch.kllSurvivors(lev, cap), cap, qs)
+      val lev = Sketch.kllLeveled(rows, Nil, $"v", concat_ws("|", $"i"), maxL)
+      val sketchPath = Sketch.kllQuantiles(Sketch.kllCounts(lev, Nil),
+          Sketch.kllSurvivors(lev, Nil, cap), Nil, cap, qs)
         .as[(Long, Long, Long, Long)].collect().toSet
-      val serving = Sketch.kllQuantilesServing(Sketch.kllCounts(lev),
-          lev, cap, qs)
+      val serving = Sketch.kllQuantilesServing(Sketch.kllCounts(lev, Nil),
+          lev, Nil, cap, qs)
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(serving == sketchPath && serving.nonEmpty, s"maxL=$maxL cap=$cap")
     }
@@ -312,13 +332,13 @@ class TextDedupSpec extends SparkSpec {
       expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
       concat_ws("|", $"l_orderkey", $"l_linenumber",
                 $"l_partkey", $"l_suppkey").as("rk"))
-    val glev = Sketch.kllLeveledBy(base, Seq("flag"), $"cents", $"rk")
-    val gSketch = Sketch.kllQuantilesBy(Sketch.kllCountsBy(glev, Seq("flag")),
-        Sketch.kllSurvivorsBy(glev, Seq("flag"), KllCap),
+    val glev = Sketch.kllLeveled(base, Seq("flag"), $"cents", $"rk")
+    val gSketch = Sketch.kllQuantiles(Sketch.kllCounts(glev, Seq("flag")),
+        Sketch.kllSurvivors(glev, Seq("flag"), KllCap),
         Seq("flag"), KllCap, KllQs)
       .as[(String, Long, Long, Long, Long)].collect().toSet
-    val gServing = Sketch.kllQuantilesByServing(
-        Sketch.kllCountsBy(glev, Seq("flag")), glev,
+    val gServing = Sketch.kllQuantilesServing(
+        Sketch.kllCounts(glev, Seq("flag")), glev,
         Seq("flag"), KllCap, KllQs)
       .as[(String, Long, Long, Long, Long)].collect().toSet
     assert(gServing == gSketch && gServing.nonEmpty)
@@ -332,7 +352,7 @@ class TextDedupSpec extends SparkSpec {
     val counts = Seq((0, 100L), (1, 60L), (2, 40L)).toDF("l", "n")
     val survivors = (0 to 2).flatMap(l => (1 to 10).map(i =>
       (l, i.toLong * 11, i.toLong * 7919))).toDF("l", "v", "h2")
-    val est = Sketch.kllQuantiles(counts, survivors, cap = 10,
+    val est = Sketch.kllQuantiles(counts, survivors, Nil, cap = 10,
         qsPermille = Seq(500))
       .as[(Long, Long, Long, Long)].collect()
     assert(est.length == 1 && est.head._2 == 2L && est.head._3 == 10L)
