@@ -12,6 +12,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *   level 1: per-(file, band) MEAN over pixels with value != 0 (nodata)
   *   level 2: per-band {MEAN | MAX | MIN} over the level-1 means
   *
+  * The reference runs each statistic as its own program; here level 1 is
+  * [[bandFileMeans]] and level 2 is [[bandStats]], which computes all
+  * three statistics in one aggregate — a caller wanting one of them
+  * selects its column, and Catalyst prunes the unused aggregates.
+  *
   * Both levels are plain Catalyst aggregates over arbitrary key columns —
   * `(file, band)` in raster terms, any fixture key pair in the oracle
   * harness. Catalyst runs each `groupBy.agg` as a partial (map-side) +
@@ -30,26 +35,20 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * the fixture inputs are exact ≤4-decimal values, the decimal sum is
   * order-independent and *bit-identical* across engines, which is what the
   * DuckDB-oracle hash compare requires (SURVEY §7.4: double summation
-  * order differs between Spark's partial aggregation and DuckDB). Level-1
-  * means that feed level 2 are additionally quantized to DECIMAL(18,6) so
-  * the level-2 sum is again exact. Decimal sums are still distributive —
-  * the partial/final split and shuffle shape are identical to the double
+  * order differs between Spark's partial aggregation and DuckDB). Level 2
+  * quantizes the level-1 means to DECIMAL(18,6) (see [[bandStats]]) so
+  * its sum is again exact. Decimal sums are still distributive — the
+  * partial/final split and shuffle shape are identical to the double
   * path.
   *
-  * Deliberate semantic decisions vs the reference (SURVEY.md §2.4):
-  *  - min/max use true fold semantics, not the reference's buggy 0.0-init
-  *    clamp (`band_min_computation.cpp:143`) or the p2p merge bugs.
-  *  - a group with only nodata pixels yields mean 0.0 (matching
-  *    `band_mean_computation.cpp:45`'s ternary) via `coalesce` in
-  *    [[bandFileMeansKeepEmpty]]; the plain form drops such groups.
-  *  - `bandMeanOfMeans` divides by the number of groups *present* (files
-  *    that produced a stats row), the only well-defined form once
-  *    zeros-on-error rows (`band_mean_computation.cpp:13-16`) are dropped.
+  * Deliberate semantic decisions vs the reference (SURVEY.md §2.4) are
+  * documented on [[bandStats]] (level 2) and [[bandFileMeansKeepEmpty]]
+  * (all-nodata groups).
   */
 object BandStats {
   /** Exact container for the fixtures' ≤4-decimal-place doubles. */
   private val InputDec = DecimalType(18, 4)
-  /** Quantization applied to level-1 means feeding level 2 in exact mode. */
+  /** Quantization applied to the level-1 means in exact level 2. */
   private val MeanDec = DecimalType(18, 6)
 
   private def meanAgg(value: Column, exact: Boolean): Column =
@@ -68,14 +67,6 @@ object BandStats {
       .agg(meanAgg(col(valueCol), exact).as("mean_value"),
            count(col(valueCol)).as("n_valid"))
 
-  /** Level 1 with the mean quantized to DECIMAL(18,6) — use as input to
-    * the level-2 rollups in exact mode so their sums are exact. */
-  def bandFileMeansQuantized(df: DataFrame, fileCol: String, bandCol: String,
-                             valueCol: String, nodata: Double = 0.0): DataFrame =
-    df.filter(col(valueCol) =!= lit(nodata))
-      .groupBy(col(fileCol), col(bandCol))
-      .agg(meanAgg(col(valueCol), exact = true).cast(MeanDec).as("mean_value"))
-
   /** Level 1 keeping all-nodata groups as mean 0.0 — the exact contract of
     * `band_mean_computation.cpp:45` (`count > 0 ? sum/count : 0.0`).
     * Conditional aggregation instead of a pre-filter so empty groups
@@ -90,11 +81,6 @@ object BandStats {
            count(valid).as("n_valid"))
   }
 
-  /** Exact level-2 arithmetic quantizes its input to DECIMAL(18,6)
-    * itself (identity when level 1 already quantized): per-group casts
-    * are order-independent, decimal sums are exact, so the rollup is
-    * invariant under repartitioning even over a double-typed level 1 —
-    * the property spec's process-count axis. */
   private def l2Mean(exact: Boolean): Column =
     if (exact) sum(col("mean_value").cast(MeanDec)).cast(DoubleType) / count(lit(1))
     else avg(col("mean_value"))
@@ -102,29 +88,28 @@ object BandStats {
     if (exact) f(col("mean_value").cast(MeanDec)).cast(DoubleType)
     else f(col("mean_value"))
 
-  /** Level 2: per-band mean of the level-1 means — the collective-mean
-    * program (`band_mean_computation.cpp:143-158`, `MPI_SUM` then
-    * `/ total_files`); over present groups sum(mean)/count(*) ≡
-    * avg(mean), which is what l2Mean computes. */
-  def bandMeanOfMeans(level1: DataFrame, bandCol: String,
-                      exact: Boolean = false): DataFrame =
-    level1.groupBy(col(bandCol)).agg(
-      l2Mean(exact).as("mean_of_means"),
-      count(lit(1)).as("n_files"))
-
-  /** Level 2 max — `band_max_computation.cpp:143-153` with true-fold
-    * semantics (no 0.0 floor). */
-  def bandMaxOfMeans(level1: DataFrame, bandCol: String,
-                     exact: Boolean = false): DataFrame =
-    level1.groupBy(col(bandCol)).agg(l2Extreme(max, exact).as("max_of_means"))
-
-  /** Level 2 min — intended semantics of `band_min_computation.cpp`
-    * (the reference's 0.0-init makes it a constant-0 bug; SURVEY §2.4). */
-  def bandMinOfMeans(level1: DataFrame, bandCol: String,
-                     exact: Boolean = false): DataFrame =
-    level1.groupBy(col(bandCol)).agg(l2Extreme(min, exact).as("min_of_means"))
-
-  /** All three level-2 stats in one pass (one shuffle, not three). */
+  /** Level 2: per-band mean, max and min of the level-1 means in one
+    * pass (one shuffle, not three) — the reference's collective-mean,
+    * max and min programs (`band_mean_computation.cpp:143-158`,
+    * `band_max_computation.cpp:143-153`, `band_min_computation.cpp`).
+    *
+    *  - `mean_of_means` divides by the number of groups *present* (files
+    *    that produced a level-1 row, `n_files`): `MPI_SUM` then
+    *    `/ total_files` over present groups is sum(mean)/count(*) ≡
+    *    avg(mean). It is the only well-defined form once the
+    *    reference's zeros-on-error rows (`band_mean_computation.cpp:13-16`)
+    *    are dropped.
+    *  - `max_of_means` / `min_of_means` use true fold semantics, not the
+    *    reference's 0.0-init clamp (`band_min_computation.cpp:143` makes
+    *    its min a constant-0 bug; SURVEY §2.4) or its p2p merge bugs.
+    *  - In exact mode the level-1 means are quantized to DECIMAL(18,6)
+    *    here, per group, before the sum: the casts are order-independent
+    *    and decimal sums are exact, so the rollup is bit-identical to its
+    *    DuckDB oracle and invariant under repartitioning even over a
+    *    double-typed level 1 — the property spec's process-count axis.
+    *
+    * One statistic alone is a column selection, e.g.
+    * `bandStats(l1, "band").select("band", "max_of_means")`. */
   def bandStats(level1: DataFrame, bandCol: String,
                 exact: Boolean = false): DataFrame =
     level1.groupBy(col(bandCol)).agg(

@@ -576,13 +576,15 @@ object AnalyticsQueries {
     // 2·contribution = ca · (2·prior_total + cnt + 1) — all integers
     val withPrior = cum
       .withColumn("prior", col("cuma") + col("cumb") - col("ca") - col("cb"))
+    // grouped by the totals, like the oracle's GROUP BY na, nb: an
+    // empty input then yields no row, not one all-NULL row
     val stats = withPrior.crossJoin(broadcast(totals))
+      .groupBy(col("na").as("n_a"), col("nb").as("n_b"))
       .agg(
         max(abs(col("cuma") * col("nb") - col("cumb") * col("na")))
           .as("ks_num"),
         sum(col("ca") * (col("prior") * 2 + col("ca") + col("cb") + 1))
-          .as("r2a"),
-        max(col("na")).as("n_a"), max(col("nb")).as("n_b"))
+          .as("r2a"))
     stats.select(
       col("n_a"), col("n_b"),
       col("ks_num"),

@@ -19,37 +19,35 @@ object BandQueries {
                             "value", exact = true)
 
   /** Level-1 over lineitem used by the level-2 rollups: per
-    * (order, returnflag) quantized mean of non-zero discounts. */
+    * (order, returnflag) exact mean of non-zero discounts (level 2
+    * quantizes it to DECIMAL(18,6), as `meansSql` does). */
   private def orderDiscountMeans(s: SparkSession, dir: String): DataFrame =
-    BandStats.bandFileMeansQuantized(
+    BandStats.bandFileMeans(
       Tables.lineitem(s, dir).withColumnRenamed("l_orderkey", "file"),
-      "file", "l_returnflag", "l_discount")
+      "file", "l_returnflag", "l_discount", exact = true)
 
   private val meansSql =
     s"""SELECT l_orderkey AS file, l_returnflag,
        |CAST(${sqlAvg("l_discount")} AS DECIMAL(18,6)) AS mean_value
        |FROM lineitem WHERE l_discount <> 0 GROUP BY 1, 2""".stripMargin
 
-  /** A2: mean-of-means (collective-mean program semantics). */
-  def bandMeanOfMeans(s: SparkSession, dir: String): DataFrame =
-    BandStats.bandMeanOfMeans(orderDiscountMeans(s, dir), "l_returnflag",
-                              exact = true)
-
   /** A2+A3+A4 fused: mean/max/min-of-means in one shuffle. */
   def bandStatsFlagship(s: SparkSession, dir: String): DataFrame =
     BandStats.bandStats(orderDiscountMeans(s, dir), "l_returnflag",
                         exact = true)
 
+  /** A2: mean-of-means alone (collective-mean program semantics). */
+  def bandMeanOfMeans(s: SparkSession, dir: String): DataFrame =
+    bandStatsFlagship(s, dir).select("l_returnflag", "mean_of_means", "n_files")
+
   /** A3: max-of-means alone (`band_max_computation.cpp`). */
   def bandMaxOfMeans(s: SparkSession, dir: String): DataFrame =
-    BandStats.bandMaxOfMeans(orderDiscountMeans(s, dir), "l_returnflag",
-                             exact = true)
+    bandStatsFlagship(s, dir).select("l_returnflag", "max_of_means")
 
   /** A4: min-of-means alone — intended (non-buggy) semantics of
     * `band_min_computation.cpp` (SURVEY §2.4). */
   def bandMinOfMeans(s: SparkSession, dir: String): DataFrame =
-    BandStats.bandMinOfMeans(orderDiscountMeans(s, dir), "l_returnflag",
-                             exact = true)
+    bandStatsFlagship(s, dir).select("l_returnflag", "min_of_means")
 
   /** A1 keep-empty variant: groups whose every value is nodata survive
     * with mean 0.0 (the reference's ternary at

@@ -127,9 +127,9 @@ object RasterQueries {
     * mean/max/min-of-means) end-to-end on raster bytes. */
   def rasterStatsRollup(s: SparkSession, dir: String): DataFrame =
     BandStats.bandStats(
-      BandStats.bandFileMeansQuantized(
+      BandStats.bandFileMeans(
         Raster.decodePixels(blobs(s, dir, nBands = 4, m = 97, tiff = false)),
-        "file", "band", "value"),
+        "file", "band", "value", exact = true),
       "band", exact = true)
 
   /** S4+F2+P3: the reference's composite program — bands 4,3,2 of each
@@ -160,8 +160,8 @@ object RasterQueries {
        |CAST(MIN(v) AS INTEGER) AS min_v, CAST(MAX(v) AS INTEGER) AS max_v
        |FROM $withSrc GROUP BY 1, 2""".stripMargin
 
-  /** Level-1 quantized means over the synthetic pixels (SQL twin of
-    * bandFileMeansQuantized on the decoded corpus). */
+  /** Level-1 means over the synthetic pixels, quantized as
+    * `BandStats.bandStats` quantizes them in exact mode. */
   private val rasterMeansSql =
     s"""SELECT file, band,
        |CAST(${sqlAvg("v")} AS DECIMAL(18,6)) AS mean_value

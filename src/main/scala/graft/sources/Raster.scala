@@ -170,13 +170,6 @@ object Raster {
     decodePixels(Tables.binaryFiles(spark, dir, glob)
       .select(col("path"), col("content")))
 
-  /** Composite sink: RGB rows → parquet, one directory per run with the
-    * reference's `<stem>_color` naming handled by the path column
-    * (color_image_composite.cpp:15-19). Parquet stands in for the GTiff
-    * writer (S3 in SURVEY §2.1) — the oracle-checked representation. */
-  def writeComposite(rgb: DataFrame, outDir: String): Unit =
-    rgb.write.mode("overwrite").partitionBy("file").parquet(outDir)
-
   /** Scala-side twin of [[graft.operators.Composite.colorOutputPath]]:
     * `dataset/foo.tif → <subdir>/foo_color.tif` (the reference's naming,
     * color_image_composite.cpp:15-19,173). */

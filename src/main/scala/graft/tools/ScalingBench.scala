@@ -17,13 +17,16 @@ import graft.sources.Tables
   * fixed panel of representative queries runs to completion
   * (`toRdd.count()` — full physical plan, same convention as
   * [[graft.Bench]]). Each (cores, query) cell is timed twice and keeps
-  * the min, damping host CPU-steal outliers (CLAUDE.md round-1 note).
-  * An untimed warm-up at the first core count absorbs JIT/codegen
-  * compilation so the 1-core cell isn't penalized for tiering.
+  * the min, damping host CPU-steal outliers ([[cellTime]]). An untimed
+  * warm-up at the first core count absorbs JIT/codegen compilation so
+  * the 1-core cell isn't penalized for tiering.
   *
   * Output: one JSON line per core count plus a final summary line with
   * speedup (T_1/T_n) and efficiency (speedup/n), and the same table as
-  * `scaling_sweep.json` for SCALING.md's measured section.
+  * `scaling_sweep.json` for SCALING.md's measured section. Cells that
+  * threw are named in `failed` on both; the summary's totals, speed-up,
+  * efficiency and serial table cover only cells that passed at every
+  * core count.
   *
   * Caveat printed with the data: local[n] shares one JVM heap and one
   * OS page cache across all n threads, so super/sub-linear artifacts of
@@ -533,6 +536,24 @@ object ScalingBench {
       })
     )
 
+  /** One (cores, query) cell: the min of two timed runs, `reset` (the
+    * cache clear) before each repeat. Host CPU-steal events on a shared
+    * host last minutes and can hit BOTH runs of a min-of-2 (measured:
+    * scaled_pricing 73 s at 2 cores / 175 s at 32 cores for a ~7 s
+    * query). When the two runs disagree by >2x the measurement is
+    * noise-suspect — take a third and keep the overall min; costs nothing
+    * when the box is quiet. A run that throws makes the cell `Left(error)`
+    * ([[graft.Bench.timeRun]]'s contract): a failed cell is never a time. */
+  private[graft] def cellTime(run: => Any, reset: => Unit): Either[String, Double] = {
+    def again(): Either[String, Double] = { reset; graft.Bench.timeRun(run) }
+    for {
+      a <- graft.Bench.timeRun(run)
+      b <- again()
+      t <- if (math.max(a, b) > 2.0 * math.min(a, b)) again().map(math.min(math.min(a, b), _))
+           else Right(math.min(a, b))
+    } yield t
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val coreSteps = sys.env.getOrElse("SPARK_GRAFT_CORES", "1,2,4,8,16,32")
@@ -558,50 +579,46 @@ object ScalingBench {
         case None => panel.map(n => n -> SparkEntry.queries(n)) ++ ScaledPanel
       }
 
-    def runPanel(s: SparkSession): Seq[(String, Double)] =
+    def runPanel(s: SparkSession): Seq[(String, Either[String, Double])] =
       allQueries.map { case (name, fn) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try fn(s, sfDir).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
-        }
-        // Host CPU-steal events on this box last minutes and can hit BOTH
-        // runs of a min-of-2 (measured: scaled_pricing 73 s at 2 cores /
-        // 175 s at 32 cores for a ~7 s query). When the two runs disagree
-        // by >2x the measurement is noise-suspect — take a third and keep
-        // the overall min; costs nothing when the box is quiet.
-        val a = once()
-        val b = { s.catalog.clearCache(); once() }
-        val t =
-          if (math.max(a, b) > 2.0 * math.min(a, b))
-            math.min(math.min(a, b), { s.catalog.clearCache(); once() })
-          else math.min(a, b)
-        name -> t
+        name -> cellTime(fn(s, sfDir).queryExecution.toRdd.count(),
+                         s.catalog.clearCache())
       }
 
+    def json(names: Iterable[String]): String =
+      names.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val scaledNames = ScaledPanel.map(_._1).toSet
-    val totals = coreSteps.map { n =>
+    val runs = coreSteps.map { n =>
       val s = session(n)
       if (n == coreSteps.head) { runPanel(s); s.catalog.clearCache() } // JIT warm-up, untimed
       val cells = runPanel(s)
       s.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      val fixture = cells.filterNot(c => scaledNames(c._1)).map(_._2).sum
-      val scaled = cells.filter(c => scaledNames(c._1)).map(_._2).sum
-      val qs = cells.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      val ok = cells.collect { case (k, Right(v)) => k -> v }
+      val failed = cells.collect { case (k, Left(_)) => k }
+      val fixture = ok.filterNot(c => scaledNames(c._1)).map(_._2).sum
+      val scaled = ok.filter(c => scaledNames(c._1)).map(_._2).sum
+      val qs = ok.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
-      println(s"""{"metric":"scaling","cores":$n,"fixture_sec":${f"$fixture%.3f"},"scaled_sec":${f"$scaled%.3f"},"queries":$qs,"sf":"$sfDir"}""")
-      (n, fixture, scaled, cells.toMap)
+      println(s"""{"metric":"scaling","cores":$n,"fixture_sec":${f"$fixture%.3f"},"scaled_sec":${f"$scaled%.3f"},"queries":$qs,"failed":${json(failed)},"sf":"$sfDir"}""")
+      n -> ok.toMap
     }
+    // a cell that failed at any core count has no speed-up: the totals,
+    // speed-up, efficiency and serial table cover only the cells that
+    // passed at every core count
+    val failedAnywhere = allQueries.map(_._1).filterNot(q => runs.forall(_._2.contains(q)))
     val cellsByCores: Map[Int, Map[String, Double]] =
-      totals.map(t => t._1 -> t._4).toMap
+      runs.map { case (n, ok) => n -> ok.filter(c => !failedAnywhere.contains(c._1)) }.toMap
+    val totals = runs.map { case (n, _) =>
+      val (scaled, fixture) = cellsByCores(n).partition(c => scaledNames(c._1))
+      (n, fixture.values.sum, scaled.values.sum)
+    }
 
     // speedup/efficiency from the compute-scaled subtotal; the fixture
     // subtotal is reported alongside as the per-query latency floor
     val t1 = totals.head._3
-    val rows = totals.map { case (n, fixture, t, _) =>
+    val rows = totals.map { case (n, fixture, t) =>
       val speedup = t1 / t
       s"""{"cores":$n,"scaled_sec":${f"$t%.3f"},"fixture_sec":${f"$fixture%.3f"},"speedup":${f"$speedup%.3f"},"efficiency":${f"${speedup / n}%.3f"}}"""
     }
@@ -628,7 +645,7 @@ object ScalingBench {
       if (serialRows.nonEmpty) s""","serial_table":[${serialRows.mkString(",")}]"""
       else ""
     val summary =
-      s"""{"metric":"scaling_summary","baseline_cores":${totals.head._1},"rows":[${rows.mkString(",")}],"panel":${allQueries.size}$serialJson,"sf":"$sfDir"}"""
+      s"""{"metric":"scaling_summary","baseline_cores":${totals.head._1},"rows":[${rows.mkString(",")}],"panel":${allQueries.size},"failed":${json(failedAnywhere)}$serialJson,"sf":"$sfDir"}"""
     println(summary)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("scaling_sweep.json"), summary.getBytes("UTF-8"))

@@ -34,16 +34,16 @@ object Smoke {
     println(s"[smoke] entry rows=${SparkEntry.entry(spark).count()}")
 
     // raster pipeline end-to-end: encode blob → binaryFile scan → decode →
-    // long-format pixels → RGB composite → parquet sink
+    // long-format pixels → RGB composite → TIFF sink
     val rdir = java.nio.file.Files.createTempDirectory("graft_smoke_raster")
     val bands = Array.tabulate(6)(b => Array.tabulate(16)(p => (100 * (b + 1) + p).toFloat))
     java.nio.file.Files.write(rdir.resolve("scene.graftraster"),
       graft.sources.Raster.GraftRasterCodec.encode(4, 4, bands))
     val px = graft.sources.Raster.pixels(spark, rdir.toString)
     val rgb = graft.operators.Composite.rgbComposite(px)
-    graft.sources.Raster.writeComposite(rgb, rdir.resolve("out").toString)
+    val audit = graft.sources.Raster.writeCompositeTiff(px, rdir.resolve("out").toString)
     println(s"[smoke] raster pixels=${px.count()} rgb=${rgb.count()} " +
-      s"sink=${spark.read.parquet(rdir.resolve("out").toString).count()}")
+      s"sink=${audit.count()}")
 
     // streaming end-to-end over a file stream of the events fixture
     // watermarks require TIMESTAMP (not NTZ) event time

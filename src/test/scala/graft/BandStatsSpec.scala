@@ -49,10 +49,10 @@ class BandStatsSpec extends SparkSpec {
 
   test("min/max of means use true fold semantics on negative values") {
     val l1 = BandStats.bandFileMeans(pixels, "file", "band", "value")
-    val mx = BandStats.bandMaxOfMeans(l1, "band").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val mn = BandStats.bandMinOfMeans(l1, "band").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val mx = BandStats.bandStats(l1, "band").select("band", "max_of_means")
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val mn = BandStats.bandStats(l1, "band").select("band", "min_of_means")
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     // reference's 0.0-init would clamp these to 0; we must not
     assert(mx(3) == -2.0 && mn(3) == -8.0)
     assert(mn(1) == 15.0 && mx(1) == 40.0)
@@ -60,7 +60,7 @@ class BandStatsSpec extends SparkSpec {
 
   test("mean-of-means differs from pixel-weighted mean by design") {
     val l1 = BandStats.bandFileMeans(pixels, "file", "band", "value")
-    val mom = BandStats.bandMeanOfMeans(l1, "band").filter($"band" === 1)
+    val mom = BandStats.bandStats(l1, "band").filter($"band" === 1)
       .select("mean_of_means").as[Double].head()
     val wm = BandStats.bandWeightedMean(pixels, "band", "value")
       .filter($"band" === 1).select("weighted_mean").as[Double].head()
@@ -71,7 +71,7 @@ class BandStatsSpec extends SparkSpec {
 
   test("empty input yields empty result, not a divide-by-zero (cpp:158)") {
     val empty = pixels.filter(lit(false))
-    assert(BandStats.bandMeanOfMeans(
+    assert(BandStats.bandStats(
       BandStats.bandFileMeans(empty, "file", "band", "value"), "band").count() == 0)
   }
 

@@ -84,6 +84,17 @@ class EdgeCaseSpec extends SparkSpec {
     graft.operators.PlanCache.releaseAll()
   }
 
+  test("rel_ks_mannwhitney over an empty lineitem returns its oracle's rows") {
+    // schema-only lineitem (the fixture's types for the columns the
+    // query reads)
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_ks").toString
+    Seq.empty[(Double, String)].toDF("l_quantity", "l_returnflag")
+      .limit(0).write.parquet(s"$dir/lineitem.parquet")
+    val out = graft.queries.AnalyticsQueries.ksMannWhitney(spark, dir)
+    // the DuckDB oracle's GROUP BY na, nb returns no rows here
+    assert(out.collect().isEmpty)
+  }
+
   test("rel_fk_audit over empty tables counts 0 orphans, as its oracle does") {
     // schema-only copies of the five tables the audit reads (the
     // fixture's types for the key columns)

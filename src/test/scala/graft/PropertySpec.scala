@@ -29,7 +29,7 @@ class PropertySpec extends SparkSpec {
   test("mean-of-means equals the naive two-pass fold") {
     check("fold", Prop.forAll(pixelGen) { rows =>
       val df = rows.toDF("file", "band", "value")
-      val got = BandStats.bandMeanOfMeans(
+      val got = BandStats.bandStats(
         BandStats.bandFileMeans(df, "file", "band", "value"), "band")
         .select("band", "mean_of_means").as[(Int, Double)].collect().toMap
       val expected = rows.filter(_._3 != 0.0)
