@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * Explicit `when` columns rather than `.pivot()` so the output schema is
   * static (no driver-side distinct pass over band values, which at 100 TB
   * would be an extra job) and the whole plan stays in one hash aggregate.
-  * Partition-wise this is a single shuffle on the pixel key; when the
-  * source is bucketed/partitioned by file it is shuffle-free, matching
-  * the reference's embarrassingly-parallel map (no communication after
-  * path distribution, SURVEY §3.3).
+  * The aggregate always shuffles on the pixel key (file, y, x), whatever
+  * the source's partitioning. The TIFF sink
+  * ([[graft.sources.Raster.writeCompositeTiff]]) does not pivot: it is
+  * map-only, like the reference's composite (SURVEY §3.3).
   */
 object Composite {
 

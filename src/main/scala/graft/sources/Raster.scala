@@ -3,8 +3,13 @@ package graft.sources
 import java.io.ByteArrayInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.util.SerializableConfiguration
 
 /** One decoded band row before pixel explosion. */
 private[sources] case class BandRow(file: String, band: Int, w: Int, h: Int,
@@ -84,19 +89,8 @@ object Raster {
       if (img == null) return None
       val raster = img.getRaster
       val (w, h, nb) = (raster.getWidth, raster.getHeight, raster.getNumBands)
-      val bands = Array.tabulate(nb) { b =>
-        val out = new Array[Float](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            out(y * w + x) = raster.getSampleFloat(x, y, b); x += 1
-          }
-          y += 1
-        }
-        out
-      }
-      Some((w, h, bands))
+      Some((w, h, Array.tabulate(nb)(b =>
+        raster.getSamples(0, 0, w, h, b, new Array[Float](w * h)))))
     }
 
     /** Encode three 0-255 bands as a baseline RGB TIFF (band 1→R, 2→G,
@@ -106,17 +100,14 @@ object Raster {
       require(bands.forall(_.length == w * h), "band size must be w*h")
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val i = y * w + x
-          def clamp(f: Float): Int = math.max(0, math.min(255, f.toInt))
-          img.setRGB(x, y, (clamp(bands(0)(i)) << 16) |
-                           (clamp(bands(1)(i)) << 8) | clamp(bands(2)(i)))
-          x += 1
-        }
-        y += 1
+      // the image's own 0xRRGGBB pixels, row-major with stride w: the
+      // values setRGB would store, without its per-pixel colour model call
+      val rgb = img.getRaster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferInt].getData
+      def clamp(f: Float): Int = math.max(0, math.min(255, f.toInt))
+      var i = 0
+      while (i < w * h) {
+        rgb(i) = (clamp(bands(0)(i)) << 16) | (clamp(bands(1)(i)) << 8) | clamp(bands(2)(i))
+        i += 1
       }
       val bos = new java.io.ByteArrayOutputStream()
       val ok = javax.imageio.ImageIO.write(img, "tiff", bos)
@@ -182,51 +173,73 @@ object Raster {
     * (`color_image_composite.cpp:11-57,173`: one GTiff per input, output
     * band order R,G,B = input bands 4,3,2, `<stem>_color.tif` under
     * `colorimage/`). Input: long-format pixel rows (file, band, y, x,
-    * value). One shuffle on the file key groups each image's pixels into
-    * a single task; the task assembles the band planes, encodes a
-    * baseline RGB TIFF via the JDK imageio writer ([[TiffCodec
-    * .encodeRgb]]), and writes its own output file — the per-task file
-    * emit of any distributed image sink, no driver collect, TIFF bytes
-    * never shuffled. Eager (localCheckpoint) like the other sinks;
-    * returns the audit frame (file, out_path, w, h, n_bytes).
-    *
-    * Storage caveat: files are emitted via `java.nio.file` — executor-
-    * LOCAL paths. Correct in local[*] (this box) where driver and
-    * executors share one filesystem; a multi-node deployment must write
-    * through the Hadoop `FileSystem` API (or mount shared storage at the
-    * same path on every executor) for outputs to land somewhere the
-    * driver can see. */
+    * value) as [[decodePixels]] emits them, each file's rows one unbroken
+    * run inside the task that decoded it. So the sink is map-only, like the
+    * reference's per-process loop (SURVEY §3.3): each task puts every run
+    * back into its planes, encodes a baseline RGB TIFF ([[TiffCodec
+    * .encodeRgb]]) and writes it through `outDir`'s Hadoop `FileSystem`,
+    * without `.crc` files. No shuffle; pixels never leave their task.
+    * Input that breaks the one-run-per-file shape (repartitioned, shuffled
+    * or repeated rows) is refused by name, never written as a partial
+    * image. Eager: the writes happen exactly once, here; returns the audit
+    * frame (file, out_path, w, h, n_bytes). */
   def writeCompositeTiff(pixels: DataFrame, outDir: String,
                          subdir: String = "colorimage"): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
-    // a file without one of bands 4,3,2 pivots to a NULL plane: refuse
-    // it by name instead of failing the typed decode below
-    def plane(c: String, band: Int) =
-      coalesce(col(c).cast("float"), raise_error(concat(
-        lit("composite input "), col("file"), lit(s" has no band $band"))))
-        .as(c)
-    val written = graft.operators.Composite.rgbComposite(pixels)
-      .select(col("file"), col("y").cast("int"), col("x").cast("int"),
-              plane("r", 4), plane("g", 3), plane("b", 2))
-      .as[(String, Int, Int, Float, Float, Float)]
-      .groupByKey(_._1)
-      .mapGroups { (file, it) =>
-        val rows = it.toArray
-        val w = rows.iterator.map(_._3).max + 1
-        val h = rows.iterator.map(_._2).max + 1
-        val bands = Array.fill(3)(new Array[Float](w * h))
-        rows.foreach { case (_, y, x, r, g, b) =>
-          val i = y * w + x
-          bands(0)(i) = r; bands(1)(i) = g; bands(2)(i) = b
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val audit = pixels.filter(col("band").isin(4, 3, 2))
+      .select(col("file"), col("band").cast("int"), col("y").cast("int"),
+              col("x").cast("int"), col("value").cast("float"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val name = it.head.getUTF8String(0).clone()
+          val (file, run) = (name.toString, Iterator.continually(it)
+            .takeWhile(i => i.hasNext && i.head.getUTF8String(0) == name).map(_.next()))
+          val (w, h, planes) = rgbPlanes(file, run)
+          val bytes = TiffCodec.encodeRgb(w, h, planes)
+          val dest = new Path(outDir, colorOutputName(file, subdir))
+          val fs = dest.getFileSystem(conf.value.value) match {
+            case c: ChecksumFileSystem => c.getRawFileSystem
+            case fs => fs
+          }
+          val os = fs.create(dest)
+          try os.write(bytes) finally os.close()
+          (file, dest.toString, w, h, bytes.length.toLong)
         }
-        val bytes = TiffCodec.encodeRgb(w, h, bands)
-        val dest = java.nio.file.Paths.get(outDir, colorOutputName(file, subdir))
-        java.nio.file.Files.createDirectories(dest.getParent)
-        java.nio.file.Files.write(dest, bytes)
-        (file, dest.toString, w, h, bytes.length.toLong)
-      }
-      .toDF("file", "out_path", "w", "h", "n_bytes")
-    written.localCheckpoint() // eager: the writes happen exactly once here
+      }.collect()
+    val repeated = audit.groupBy(_._1).collect {
+      case (file, runs) if runs.length > 1 => s"$file written ${runs.length} times" }
+    require(repeated.isEmpty, "composite inputs reached the sink as more than one " +
+      "run of pixel rows: " + repeated.toSeq.sorted.mkString(", "))
+    audit.toSeq.toDF("file", "out_path", "w", "h", "n_bytes")
+  }
+
+  /** One file's run of (file, band, y, x, value) rows → (w, h, R,G,B
+    * planes = bands 4,3,2) with w = max x + 1, h = max y + 1 and every
+    * (band, y, x) cell filled exactly once. */
+  private def rgbPlanes(file: String, run: Iterator[InternalRow])
+      : (Int, Int, Array[Array[Float]]) = {
+    val Seq(bs, ys, xs) = Seq.fill(3)(new mutable.ArrayBuilder.ofInt)
+    val vs = new mutable.ArrayBuilder.ofFloat
+    run.foreach { r => bs += r.getInt(1); ys += r.getInt(2); xs += r.getInt(3); vs += r.getFloat(4) }
+    val (b, y, x, v) = (bs.result(), ys.result(), xs.result(), vs.result())
+    val (w, h) = (x.max + 1, y.max + 1)
+    val planes = Array.fill(3)(new Array[Float](w * h))
+    val filled = new java.util.BitSet(3 * w * h)
+    for (i <- v.indices) {
+      planes(4 - b(i))(y(i) * w + x(i)) = v(i)
+      filled.set((4 - b(i)) * w * h + y(i) * w + x(i))
+    }
+    // whole planes first: a run cut short by a repartition is not a missing band
+    val present = Seq(4, 3, 2).filter(band => b.contains(band))
+    require(v.length == present.size * w * h && filled.cardinality == v.length,
+      s"composite input $file is not one run of whole planes: ${v.length} pixel " +
+      s"rows for ${present.size} planes of ${w}x$h (the sink needs each file's rows in one run)")
+    for (band <- Seq(4, 3, 2))
+      require(present.contains(band), s"composite input $file has no band $band")
+    (w, h, planes)
   }
 }

@@ -94,12 +94,7 @@ class CompositeRasterSpec extends SparkSpec {
     * (color_image_composite.cpp:34-53,173-181): write a fixed synthetic
     * corpus, read the emitted files back through the library's own
     * decoder, and byte-compare every band plane. Values stay in [0,256)
-    * so the writer's unsigned-byte clamp is the identity.
-    *
-    * NOTE (cluster storage): writeCompositeTiff emits via java.nio.file —
-    * executor-LOCAL paths, correct in local[*]; a multi-node deployment
-    * must target shared storage through the Hadoop FileSystem API (the
-    * sink's scaladoc carries the same caveat). */
+    * so the writer's unsigned-byte clamp is the identity. */
   test("writeCompositeTiff golden roundtrip: R,G,B = bands 4,3,2, _color.tif naming") {
     val inDir = Files.createTempDirectory("graft_tifin").toFile
     val outDir = Files.createTempDirectory("graft_tifout").toFile
@@ -142,6 +137,9 @@ class CompositeRasterSpec extends SparkSpec {
     val b1 = back.filter($"file".endsWith("scene1_color.tif") && $"band" === 1)
       .agg(sum($"value")).head().getDouble(0)
     assert(b1 == vals(0, 4).sum.toDouble, "re-scanned R plane ≡ band 4 of scene1")
+    // written through the Hadoop FileSystem without checksum side files
+    assert(new java.io.File(outDir, "colorimage").list().sorted.toSeq ==
+      Seq("scene1_color.tif", "scene2_color.tif"))
   }
 
   test("writeCompositeTiff refuses an input without band 4 by name") {
@@ -158,9 +156,74 @@ class CompositeRasterSpec extends SparkSpec {
     val e = intercept[Exception] {
       Raster.writeCompositeTiff(px, outDir.getAbsolutePath).collect()
     }
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).toSeq
+    val msgs = messages(e)
     assert(msgs.exists(m => m.contains("rgb.tif") && m.contains("has no band 4")),
            msgs.mkString("\n"))
+  }
+
+  /** `n` 6-band 8×8 rasters named `scene<i>.tif`; returns their pixel rows
+    * and a fresh output directory. */
+  private def scenes(n: Int): (org.apache.spark.sql.DataFrame, String) = {
+    val inDir = Files.createTempDirectory("graft_scenes").toFile
+    for (i <- 1 to n)
+      Files.write(new java.io.File(inDir, s"scene$i.tif").toPath,
+        GraftRasterCodec.encode(8, 8, Array.tabulate(6)(b =>
+          Array.tabulate(64)(p => ((i + 37 * b + p) % 256).toFloat))))
+    (Raster.pixels(spark, inDir.getAbsolutePath, "*.tif"),
+     Files.createTempDirectory("graft_scenes_out").toString)
+  }
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("writeCompositeTiff refuses repartitioned pixel rows as not one run") {
+    val (px, out) = scenes(2)
+    val msgs = messages(intercept[Exception] {
+      Raster.writeCompositeTiff(px.repartition(3), out)
+    })
+    assert(msgs.exists(_.contains("is not one run of whole planes")), msgs.mkString("\n"))
+  }
+
+  test("writeCompositeTiff refuses a file whose rows arrive twice as a duplicate write") {
+    val (px, out) = scenes(2)
+    val msgs = messages(intercept[Exception] {
+      Raster.writeCompositeTiff(px.union(px), out)
+    })
+    assert(msgs.exists(m => m.contains("scene1.tif written 2 times") &&
+                            m.contains("scene2.tif written 2 times")), msgs.mkString("\n"))
+  }
+
+  test("writeCompositeTiff is map-only: its stages write no shuffle bytes") {
+    import org.apache.spark.scheduler._
+    val (px, out) = scenes(3)
+    val sc = spark.sparkContext
+    val marker = "composite-sink-probe-end"
+    val (stages, shuffled) = (new java.util.concurrent.atomic.AtomicInteger,
+                              new java.util.concurrent.atomic.AtomicLong)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        shuffled.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(Raster.writeCompositeTiff(px, out).collect().length == 3)
+      // the listener bus delivers in order: once the marker job's end
+      // arrives, every stage of the sink has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(stages.get > 1, "the listener saw the sink's stages")
+    assert(shuffled.get == 0L, s"the sink shuffled ${shuffled.get} bytes")
   }
 }
