@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.queries.Canon
 
 /** The reference's entire statistical surface, generalized.
   *
@@ -29,31 +30,29 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * partial aggregates, not of raw pixels.
   *
   * == The `exact` flag ==
-  * Default (`exact = false`): plain double `avg` — fastest, whole-stage
-  * codegen, what production runs. `exact = true`: means are computed as
-  * exact DECIMAL(18,4) sums divided (in IEEE double) by the count. Because
-  * the fixture inputs are exact ≤4-decimal values, the decimal sum is
-  * order-independent and *bit-identical* across engines, which is what the
-  * DuckDB-oracle hash compare requires (SURVEY §7.4: double summation
-  * order differs between Spark's partial aggregation and DuckDB). Level 2
-  * quantizes the level-1 means to DECIMAL(18,6) (see [[bandStats]]) so
-  * its sum is again exact. Decimal sums are still distributive — the
-  * partial/final split and shuffle shape are identical to the double
-  * path.
+  * Default (`exact = false`): plain double `avg`. `exact = true`: means
+  * are [[graft.queries.Canon.exactSum]]s of the values as DECIMAL(18,4),
+  * divided (in IEEE double) by the count. Because the fixture inputs are
+  * exact ≤4-decimal values, the decimal sum is order-independent and
+  * *bit-identical* across engines, which is what the DuckDB-oracle hash
+  * compare requires (SURVEY §7.4: double summation order differs between
+  * Spark's partial aggregation and DuckDB). Level 2 quantizes the level-1
+  * means to DECIMAL(18,6) (see [[bandStats]]) so its sum is again exact.
+  * `exactSum` aggregates two BIGINT sums per group, so both paths are
+  * codegen'd primitive aggregates with the same partial/final split and
+  * shuffle shape, and exact costs about 1.2× the double path (SCALING.md
+  * §Band statistics).
   *
   * Deliberate semantic decisions vs the reference (SURVEY.md §2.4) are
   * documented on [[bandStats]] (level 2) and [[bandFileMeansKeepEmpty]]
   * (all-nodata groups).
   */
 object BandStats {
-  /** Exact container for the fixtures' ≤4-decimal-place doubles. */
-  private val InputDec = DecimalType(18, 4)
   /** Quantization applied to the level-1 means in exact level 2. */
   private val MeanDec = DecimalType(18, 6)
 
   private def meanAgg(value: Column, exact: Boolean): Column =
-    if (exact) sum(value.cast(InputDec)).cast(DoubleType) / count(value)
-    else avg(value)
+    if (exact) Canon.exactAvg(value) else avg(value)
 
   /** Level 1: per-(file, band) mean of non-nodata values.
     * `filter(v != 0) → groupBy(file, band) → avg` — the Spark form of
@@ -82,7 +81,7 @@ object BandStats {
   }
 
   private def l2Mean(exact: Boolean): Column =
-    if (exact) sum(col("mean_value").cast(MeanDec)).cast(DoubleType) / count(lit(1))
+    if (exact) Canon.exactSum(col("mean_value"), MeanDec) / count(lit(1))
     else avg(col("mean_value"))
   private def l2Extreme(f: Column => Column, exact: Boolean): Column =
     if (exact) f(col("mean_value").cast(MeanDec)).cast(DoubleType)

@@ -1,8 +1,11 @@
 package graft.queries
 
+import java.math.BigDecimal
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, UnscaledValue}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Cross-engine float canonicalization shared by every oracle-matched
   * query (SURVEY §7.4).
@@ -12,6 +15,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * identical in Spark and DuckDB regardless of partial-aggregation order.
   * Division is done afterwards in IEEE double on bit-identical inputs, so
   * the quotient is bit-identical too. No rounding or tolerance anywhere.
+  * [[exactSum]] computes that decimal sum on BIGINT arithmetic, with no
+  * per-row BigDecimal, at close to the cost of a double `avg`.
   *
   * Every helper here has a SQL twin generating the same arithmetic for
   * DuckDB; queries MUST use the pair together.
@@ -22,8 +27,33 @@ object Canon {
   /** Lossless exact container for a ≤4-decimal double column. */
   def dec(c: Column): Column = c.cast(InputDec)
 
-  /** Exact sum, exported as double. */
-  def exactSum(c: Column): Column = sum(dec(c)).cast(DoubleType)
+  /** Exact sum, exported as double: exactly
+    * `CAST(SUM(CAST(c AS target)) AS DOUBLE)`, but summed as BIGINTs.
+    * Per row, `u` = the cast's unscaled value: `k = fl(c·10^s)` when that
+    * is an integer with `|k| < 2^50`, else the cast itself (nulls stay
+    * null; NaN, ±Inf and out-of-range values raise its ANSI errors). The
+    * fast path is exact: the cast rounds `D = Double.toString(c)` (floats
+    * widened first) HALF_UP, `|D - c| ≤ ½ulp(c)`, `|c·10^s - k| ≤ ½ulp(k)`
+    * and `10^s·ulp(c) < 2·ulp(k)`, so `|D·10^s - k| < 1.5·ulp(k) ≤ 0.1875`.
+    * Per group, `hi = Σ(u div 10^9)` and `lo = Σ(u % 10^9)` are rebuilt
+    * once as the decimal `hi·10^(9-s) + lo·10^-s`: the decimal sum's scale
+    * and unscaled value, so the same correctly rounded double. A BIGINT
+    * sum overflows only past ~9.2·10^9 rows per group at the decimal's
+    * maximum, and under ANSI (Spark 4's default, which
+    * [[graft.GraftSession]] keeps) raises ARITHMETIC_OVERFLOW, never a
+    * wrong sum. */
+  def exactSum(c: Column, target: DecimalType = InputDec): Column = {
+    val s = target.scale
+    val k = c.cast(DoubleType) * lit(math.pow(10, s))
+    val u = when(k === rint(k) && abs(k) < lit(math.pow(2, 50)), k.cast(LongType))
+      .otherwise(column(UnscaledValue(expression(c.cast(target)))))
+    val split = lit(1000000000L)
+    val hi = sum(column(IntegralDivide(expression(u), expression(split))))
+    val lo = sum(u % split)
+    val whole = DecimalType(20, 0)
+    (hi.cast(whole) * lit(BigDecimal.TEN.pow(9 - s)) +
+      lo.cast(whole) * lit(BigDecimal.ONE.movePointLeft(s))).cast(DoubleType)
+  }
 
   /** Exact mean: exact decimal sum ÷ non-null count, in double. */
   def exactAvg(c: Column): Column = exactSum(c) / count(c)

@@ -1,8 +1,13 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.operators.{BandStats, Composite, Dedup, TextOps}
+import graft.queries.Canon
 
 /** Property-based checks (SURVEY §5.2): aggregation ≡ naive fold,
   * repartition invariance (the reference's process-count axis),
@@ -51,6 +56,71 @@ class PropertySpec extends SparkSpec {
         "band", exact = true).collect().toSet
       stats(df) == stats(df.repartition(n))
     })
+  }
+
+  // Canon.exactSum against the built-in decimal sum it replaces, kept
+  // here as the reference: same double, bit for bit, at both scales
+  // BandStats uses, over double and float inputs.
+  private val exactScales = Seq(DecimalType(18, 4), DecimalType(18, 6))
+  private val exactEdges = Seq(1000000.0625f.toDouble, -0.0, 0.00005, -0.00005) ++
+    Seq(math.pow(2, 50) / 1e4, math.pow(2, 50) / 1e6)
+      .flatMap(v => Seq(math.nextDown(v), v, math.nextUp(v), -v))
+  private val exactValueGen: Gen[Option[Double]] = Gen.frequency(
+    1 -> Gen.const(None),
+    4 -> Gen.choose(-10000000000L, 10000000000L).map(n => Some(n / 1e4)),
+    2 -> Gen.choose(-1000000L, 1000000L).map(n => Some((10 * n + 5) / 1e5)), // 5th-decimal ties
+    1 -> Gen.oneOf(exactEdges).map(Some(_)))
+
+  /** Per group g: (exactSum, reference) pairs as raw bits, for x and f. */
+  private def exactVsReference(df: DataFrame): Map[Int, Seq[(Option[Long], Option[Long])]] = {
+    val aggs = for (c <- Seq("x", "f"); d <- exactScales)
+      yield Seq(Canon.exactSum(col(c), d), sum(col(c).cast(d)).cast("double"))
+    def bits(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    df.groupBy("g").agg(aggs.flatten.head, aggs.flatten.tail: _*).collect()
+      .map(r => r.getInt(0) -> (1 until r.length by 2).map(i => (bits(r, i), bits(r, i + 1))))
+      .toMap
+  }
+
+  test("exactSum is the decimal sum, bit for bit, under any partitioning") {
+    val rowGen = Gen.listOf(Gen.zip(Gen.choose(0, 3), exactValueGen))
+    check("exactSum", Prop.forAll(rowGen, Gen.choose(1, 4)) { (rows, n) =>
+      val all = rows ++ Seq((9, None), (9, None))  // group 9 is all-null
+      val df = all.map { case (g, x) => (g, x, x.map(_.toFloat)) }.toDF("g", "x", "f")
+      val got = exactVsReference(df.repartition(n))
+      got(9).forall(_ == ((None, None))) &&
+        got == exactVsReference(df.repartition(1)) &&
+        got.values.forall(_.forall { case (e, ref) => e == ref })
+    })
+    val empty = Seq.empty[(Int, Option[Double], Option[Float])].toDF("g", "x", "f")
+    assert(exactVsReference(empty).isEmpty)
+    assert(empty.agg(Canon.exactSum(col("x"))).head().isNullAt(0))
+  }
+
+  test("exact band stats still raise out-of-range values, at both levels") {
+    def raises(df: DataFrame): Boolean = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("NUMERIC_VALUE_OUT_OF_RANGE"))
+    }
+    val px = Seq(("f1", 1, 1e14), ("f1", 1, 1.0)).toDF("file", "band", "value")
+    val l1 = Seq(("f1", 1, 1e14, 1L)).toDF("file", "band", "mean_value", "n_valid")
+    assert(raises(BandStats.bandFileMeans(px, "file", "band", "value", exact = true)))
+    assert(raises(BandStats.bandStats(l1, "band", exact = true)
+      .select("band", "mean_of_means")))
+  }
+
+  test("exact band stats sum no decimals (the BIGINT exact-sum path)") {
+    val px = Seq(("f1", 1, 1.5), ("f2", 1, 2.25)).toDF("file", "band", "value")
+    val l1 = BandStats.bandFileMeans(px, "file", "band", "value", exact = true)
+    for (df <- Seq(l1, BandStats.bandStats(l1, "band", exact = true))) {
+      val sums = df.queryExecution.optimizedPlan
+        .collect { case a: Aggregate => a.aggregateExpressions }.flatten
+        .flatMap(_.collect { case s: Sum => s })
+      assert(sums.nonEmpty, df.queryExecution.optimizedPlan)
+      assert(sums.forall(!_.child.dataType.isInstanceOf[DecimalType]),
+             df.queryExecution.optimizedPlan)
+    }
   }
 
   test("composite pivot emits one row per key, values preserved") {
