@@ -284,13 +284,18 @@ object Sketch {
   def kllLeveled(rows: DataFrame, groupCols: Seq[String], value: Column,
                  rowKey: Column, maxL: Int = KllMaxLevel): DataFrame = {
     val m = md5(concat(lit("kll|"), rowKey))
-    val b = conv(substring(m, 1, 4), 16, 10).cast("long")
+    // the slice `b` is its own column: inside the chain's nested CASE WHEN
+    // branches common-subexpression elimination cannot share it, so an
+    // inline slice would convert once per level; CollapseProject keeps an
+    // expensive column used 12 times in its own projection
     val lvl = (1 to maxL).foldLeft(lit(0)) { (acc, l) =>
-      when(b % (1L << l) === 0, lit(l)).otherwise(acc)
+      when(col("b") % (1L << l) === 0, lit(l)).otherwise(acc)
     }
     rows
-      .select(groupCols.map(col) ++ Seq(value.as("v"), lvl.as("toplvl"),
+      .select(groupCols.map(col) ++ Seq(value.as("v"),
+        conv(substring(m, 1, 4), 16, 10).cast("long").as("b"),
         conv(substring(m, 5, 15), 16, 10).cast("long").as("h2")): _*)
+      .select(groupCols.map(col) ++ Seq(col("v"), lvl.as("toplvl"), col("h2")): _*)
       .select(groupCols.map(col) ++ Seq(
         explode(sequence(lit(0), col("toplvl"))).as("l"),
         col("v"), col("h2")): _*)

@@ -7,12 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BloomFunctions, MinHashSigs, ShingleGen, SimHash16, VectorFunctions}
 
 /** `SparkSessionExtensions` injection point for the engine's native
-  * functions — enable with
+  * functions and its one plan node — enable with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * on a cluster, or call `VectorFunctions.register(spark)` in-process.
-  * (SURVEY §4 concluded no custom Rule/Strategy is needed for reference
-  * parity — Catalyst's stock pipeline dominates the reference's physical
-  * design — so functions are the only injection.)
+  * on a cluster (every `GraftSession` sets it), or call
+  * `VectorFunctions.register(spark)` in-process for the functions alone.
+  * Two kinds of injection: the functions, and one planner strategy,
+  * [[RasterPixelsStrategy]], which plans the decoded pixel frame
+  * ([[RasterPixels]]) as a columnar operator. There is no optimizer rule:
+  * Catalyst's stock pipeline covers the rest of the reference's physical
+  * design (SURVEY §4).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -26,7 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es(1).eval(null).asInstanceOf[Number].intValue())),
   )
 
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     (VectorFunctions.all ++ BloomFunctions.all ++ textBuilders)
       .foreach { case (name, builder) =>
       ext.injectFunction((
@@ -34,4 +37,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name),
         (es: Seq[Expression]) => builder(es)))
     }
+    ext.injectPlannerStrategy(_ => RasterPixelsStrategy)
+  }
 }

@@ -3,17 +3,15 @@ package graft.sources
 import java.io.ByteArrayInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-/** One decoded band row before pixel explosion. */
-private[sources] case class BandRow(file: String, band: Int, w: Int, h: Int,
-                                    values: Array[Float])
+import graft.plans.RasterPixels
 
 /** Raster ingestion: directory of raster blobs → long-format pixels
   * DataFrame `pixels(file, band, y, x, value)` — the Spark-native form
@@ -25,10 +23,14 @@ private[sources] case class BandRow(file: String, band: Int, w: Int, h: Int,
   *    (public API, JDK 9+) — the GeoTIFF-shaped path ([[TiffCodec]]);
   *  - [[GraftRasterCodec]], a deterministic header+Float32 layout for
   *    float bands beyond what baseline TIFF carries.
-  * The decode is per-file inside the scan task; the exploded long
-  * format, the partitioning story (one input file per task, pixels never
-  * leave the task until an aggregation shuffles *statistics*, not
-  * pixels), and every downstream operator are format-agnostic.
+  * The decode is per-file inside the scan task, whole band planes at a
+  * time like the reference's `GDALRasterIO`; the pixel frame is its own
+  * plan node ([[graft.plans.RasterPixels]]), whose operator hands Spark
+  * one columnar batch per decoded plane. Row consumers (every aggregate,
+  * filter and join) read pixel rows; the composite sink reads the planes.
+  * Pixels never leave the task until an aggregation shuffles
+  * *statistics*, not pixels, and every downstream operator is
+  * format-agnostic.
   */
 object Raster {
 
@@ -56,7 +58,8 @@ object Raster {
       // ints read from a non-raster blob, and the guard would then pass
       if (w <= 0 || h <= 0 || nb <= 0 ||
           w.toLong * h > (bytes.length - 12) / 4 / nb) return None
-      Some((w, h, Array.fill(nb)(Array.fill(w * h)(buf.getFloat))))
+      val floats = buf.asFloatBuffer() // bulk reads, in the buffer's byte order
+      Some((w, h, Array.fill(nb) { val plane = new Array[Float](w * h); floats.get(plane); plane }))
     }
   }
 
@@ -121,42 +124,27 @@ object Raster {
     if (TiffCodec.isTiff(bytes)) TiffCodec.decode(bytes)
     else GraftRasterCodec.decode(bytes)
 
-  // (BandRow is top-level in this package: a case class nested inside an
-  // object breaks whole-stage codegen's constructor lookup and silently
-  // falls back to interpreted execution.)
+  private val PixelSchema: StructType = new StructType()
+    .add("file", StringType).add("band", IntegerType, nullable = false)
+    .add("y", IntegerType).add("x", IntegerType).add("value", FloatType, nullable = false)
 
-  /** The decode+explode core over ANY (path, content) DataFrame — the
-    * binaryFile scan ([[pixels]]) and in-plan blob derivations (the
-    * oracle-checked `raster_*` queries, which manufacture deterministic
-    * blobs from the documents fixture) share this exact path. The explode
-    * runs inside the upstream task, so pixel rows are pipelined straight
-    * into whatever aggregate or filter follows (never materialized whole,
-    * unlike the reference's full-band buffers). */
-  def decodePixels(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val decoded = files
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        decodeAny(bytes).toSeq.flatMap { case (w, h, bands) =>
-          bands.iterator.zipWithIndex.map { case (vals, i) =>
-            BandRow(path, i + 1, w, h, vals)
-          }
-        }
-      }
-    decoded.toDF()
-      .select(col("file"), col("band"), col("w"),
-              posexplode(col("values")).as(Seq("pos", "value")))
-      .select(col("file"), col("band"),
-              (col("pos") / col("w")).cast("int").as("y"),
-              (col("pos") % col("w")).cast("int").as("x"),
-              col("value"))
-  }
+  /** The decode core over ANY (path, content) DataFrame — the binaryFile
+    * scan ([[pixels]]) and in-plan blob derivations (the oracle-checked
+    * `raster_*` queries, which manufacture deterministic blobs from the
+    * documents fixture) share this exact path. Returns the frame
+    * `(file, band, y, x, value)`, with `band` and `value` not null: per
+    * file, band ascending, then row-major pixels; undecodable blobs yield
+    * no rows.
+    * The decode runs inside the upstream task and hands its planes to
+    * whatever aggregate or filter follows as columnar batches (never
+    * materialized whole, unlike the reference's full-band buffers); the
+    * bare frame is also what [[writeCompositeTiff]] accepts. */
+  def decodePixels(files: DataFrame): DataFrame =
+    ColumnShim.frame(files.sparkSession, RasterPixels(DataTypeUtils.toAttributes(PixelSchema),
+      files.select(col("path"), col("content")).queryExecution.analyzed))
 
-  /** binaryFile scan (+ glob pushdown) → decode → per-band rows →
-    * posexplode to pixels. Column pruning keeps `content` out of any
-    * plan that only needs metadata. */
+  /** binaryFile scan (+ glob pushdown) → [[decodePixels]]. Column
+    * pruning keeps `content` out of any plan that only needs metadata. */
   def pixels(spark: SparkSession, dir: String, glob: String = "*.graftraster"): DataFrame =
     decodePixels(Tables.binaryFiles(spark, dir, glob)
       .select(col("path"), col("content")))
@@ -172,74 +160,50 @@ object Raster {
   /** REAL `.tif` composite sink — the reference's actual output format
     * (`color_image_composite.cpp:11-57,173`: one GTiff per input, output
     * band order R,G,B = input bands 4,3,2, `<stem>_color.tif` under
-    * `colorimage/`). Input: long-format pixel rows (file, band, y, x,
-    * value) as [[decodePixels]] emits them, each file's rows one unbroken
-    * run inside the task that decoded it. So the sink is map-only, like the
-    * reference's per-process loop (SURVEY §3.3): each task puts every run
-    * back into its planes, encodes a baseline RGB TIFF ([[TiffCodec
-    * .encodeRgb]]) and writes it through `outDir`'s Hadoop `FileSystem`,
-    * without `.crc` files. No shuffle; pixels never leave their task.
-    * Input that breaks the one-run-per-file shape (repartitioned, shuffled
-    * or repeated rows) is refused by name, never written as a partial
-    * image. Eager: the writes happen exactly once, here; returns the audit
-    * frame (file, out_path, w, h, n_bytes). */
+    * `colorimage/`). Input: the frame [[decodePixels]] (or [[pixels]])
+    * returns, as it returns it; any other frame (repartitioned, unioned,
+    * filtered, projected, hinted) is refused by name and nothing is
+    * written. The sink runs that frame's `(path, content)` source itself,
+    * map-only like the reference's per-process loop (SURVEY §3.3): each
+    * task decodes its files, takes bands 4,3,2 as planes, encodes a
+    * baseline RGB TIFF ([[TiffCodec.encodeRgb]]) and writes it through
+    * `outDir`'s Hadoop `FileSystem`, without `.crc` files. No pixel rows,
+    * no shuffle. A file without band 4, 3 or 2 is refused by name;
+    * undecodable blobs are skipped, as they yield no pixel rows. Eager: the
+    * writes happen exactly once, here, in one job; a source that lists a
+    * path twice is refused after the fact. Returns the audit frame
+    * (file, out_path, w, h, n_bytes). */
   def writeCompositeTiff(pixels: DataFrame, outDir: String,
                          subdir: String = "colorimage"): DataFrame = {
     val spark = pixels.sparkSession
     import spark.implicits._
+    val files = pixels.queryExecution.analyzed match {
+      case p: RasterPixels => ColumnShim.frame(spark, p.child)
+      case other => throw new IllegalArgumentException("writeCompositeTiff takes the frame " +
+        s"decodePixels returns, not a ${other.nodeName} over it")
+    }
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val audit = pixels.filter(col("band").isin(4, 3, 2))
-      .select(col("file"), col("band").cast("int"), col("y").cast("int"),
-              col("x").cast("int"), col("value").cast("float"))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val it = rows.buffered
-        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
-          val name = it.head.getUTF8String(0).clone()
-          val (file, run) = (name.toString, Iterator.continually(it)
-            .takeWhile(i => i.hasNext && i.head.getUTF8String(0) == name).map(_.next()))
-          val (w, h, planes) = rgbPlanes(file, run)
-          val bytes = TiffCodec.encodeRgb(w, h, planes)
-          val dest = new Path(outDir, colorOutputName(file, subdir))
-          val fs = dest.getFileSystem(conf.value.value) match {
-            case c: ChecksumFileSystem => c.getRawFileSystem
-            case fs => fs
-          }
-          val os = fs.create(dest)
-          try os.write(bytes) finally os.close()
-          (file, dest.toString, w, h, bytes.length.toLong)
+    val audit = files.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
+      val file = r.getUTF8String(0).toString
+      decodeAny(r.getBinary(1)).map { case (w, h, bands) =>
+        for (band <- Seq(4, 3, 2))
+          require(band <= bands.length, s"composite input $file has no band $band")
+        val bytes = TiffCodec.encodeRgb(w, h, Array(bands(3), bands(2), bands(1)))
+        val dest = new Path(outDir, colorOutputName(file, subdir))
+        val fs = dest.getFileSystem(conf.value.value) match {
+          case c: ChecksumFileSystem => c.getRawFileSystem
+          case fs => fs
         }
-      }.collect()
+        val os = fs.create(dest)
+        try os.write(bytes) finally os.close()
+        (file, dest.toString, w, h, bytes.length.toLong)
+      }
+    }).collect()
     val repeated = audit.groupBy(_._1).collect {
       case (file, runs) if runs.length > 1 => s"$file written ${runs.length} times" }
-    require(repeated.isEmpty, "composite inputs reached the sink as more than one " +
-      "run of pixel rows: " + repeated.toSeq.sorted.mkString(", "))
+    require(repeated.isEmpty, "composite source lists a path more than once: " +
+      repeated.toSeq.sorted.mkString(", "))
     audit.toSeq.toDF("file", "out_path", "w", "h", "n_bytes")
-  }
-
-  /** One file's run of (file, band, y, x, value) rows → (w, h, R,G,B
-    * planes = bands 4,3,2) with w = max x + 1, h = max y + 1 and every
-    * (band, y, x) cell filled exactly once. */
-  private def rgbPlanes(file: String, run: Iterator[InternalRow])
-      : (Int, Int, Array[Array[Float]]) = {
-    val Seq(bs, ys, xs) = Seq.fill(3)(new mutable.ArrayBuilder.ofInt)
-    val vs = new mutable.ArrayBuilder.ofFloat
-    run.foreach { r => bs += r.getInt(1); ys += r.getInt(2); xs += r.getInt(3); vs += r.getFloat(4) }
-    val (b, y, x, v) = (bs.result(), ys.result(), xs.result(), vs.result())
-    val (w, h) = (x.max + 1, y.max + 1)
-    val planes = Array.fill(3)(new Array[Float](w * h))
-    val filled = new java.util.BitSet(3 * w * h)
-    for (i <- v.indices) {
-      planes(4 - b(i))(y(i) * w + x(i)) = v(i)
-      filled.set((4 - b(i)) * w * h + y(i) * w + x(i))
-    }
-    // whole planes first: a run cut short by a repartition is not a missing band
-    val present = Seq(4, 3, 2).filter(band => b.contains(band))
-    require(v.length == present.size * w * h && filled.cardinality == v.length,
-      s"composite input $file is not one run of whole planes: ${v.length} pixel " +
-      s"rows for ${present.size} planes of ${w}x$h (the sink needs each file's rows in one run)")
-    for (band <- Seq(4, 3, 2))
-      require(present.contains(band), s"composite input $file has no band $band")
-    (w, h, planes)
   }
 }

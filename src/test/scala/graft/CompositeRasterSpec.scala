@@ -22,10 +22,37 @@ class CompositeRasterSpec extends SparkSpec {
 
   test("codec round-trips") {
     val bands = Array.tabulate(6)(i => bandVals(i + 1))
+    bands(5)(0) = -0.0f; bands(5)(1) = Float.MinPositiveValue; bands(5)(2) = Float.NaN
     val Some((w, h, back)) = GraftRasterCodec.decode(
       GraftRasterCodec.encode(W, H, bands))
     assert(w == W && h == H && back.length == 6)
-    assert(back.zip(bands).forall { case (a, b) => a.sameElements(b) })
+    def bits(b: Array[Array[Float]]) = b.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+    assert(bits(back) == bits(bands))
+  }
+
+  test("decodePixels: pinned schema and row order (band ascending, then row-major)") {
+    val files = Seq(("a.graftraster", GraftRasterCodec.encode(3, 2,
+      Array.tabulate(2)(b => Array.tabulate(6)(p => (10 * b + p).toFloat)))),
+      ("junk", Array[Byte](1, 2, 3))).toDF("path", "content")
+    val px = Raster.decodePixels(files)
+    assert(px.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) == Seq(
+      ("file", "string", true), ("band", "int", false), ("y", "int", true),
+      ("x", "int", true), ("value", "float", false)))
+    assert(px.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+      r.getInt(3), r.getFloat(4))) == (for (b <- 0 until 2; p <- 0 until 6)
+      yield ("a.graftraster", b + 1, p / 3, p % 3, (10 * b + p).toFloat)))
+  }
+
+  test("a self-join of a pixel frame resolves") {
+    val files = Seq(("s", GraftRasterCodec.encode(2, 2,
+      Array.tabulate(2)(b => Array.tabulate(4)(p => (b * 4 + p).toFloat))))).toDF("path", "content")
+    val px = Raster.decodePixels(files)
+    val (b1, b2) = (px.filter($"band" === 1).as("l"), px.filter($"band" === 2).as("r"))
+    val joined = b1.join(b2, $"l.y" === $"r.y" && $"l.x" === $"r.x")
+      .select($"l.y", $"l.x", ($"r.value" - $"l.value").as("d")).orderBy("y", "x")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getFloat(2))).toSeq
+    // band 2 = band 1 + 4 at every pixel
+    assert(joined == Seq((0, 0, 4f), (0, 1, 4f), (1, 0, 4f), (1, 1, 4f)))
   }
 
   test("malformed blobs decode to None (reference zeros-on-error, cpp:13-16)") {
@@ -177,30 +204,49 @@ class CompositeRasterSpec extends SparkSpec {
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).toSeq
 
-  test("writeCompositeTiff refuses repartitioned pixel rows as not one run") {
-    val (px, out) = scenes(2)
-    val msgs = messages(intercept[Exception] {
-      Raster.writeCompositeTiff(px.repartition(3), out)
-    })
-    assert(msgs.exists(_.contains("is not one run of whole planes")), msgs.mkString("\n"))
+  /** The sink's refusal of `frame`, checked to name `node` and to leave
+    * `out` without a file. */
+  private def refused(frame: org.apache.spark.sql.DataFrame, out: String, node: String): Unit = {
+    val msgs = messages(intercept[Exception](Raster.writeCompositeTiff(frame, out)))
+    assert(msgs.exists(_.contains(s"not a $node over it")), msgs.mkString("\n"))
+    assert(Files.walk(java.nio.file.Paths.get(out)).filter(Files.isRegularFile(_)).count() == 0)
   }
 
-  test("writeCompositeTiff refuses a file whose rows arrive twice as a duplicate write") {
+  test("writeCompositeTiff refuses repartitioned pixel rows by name") {
     val (px, out) = scenes(2)
+    refused(px.repartition(3), out, "Repartition")
+  }
+
+  test("writeCompositeTiff refuses a union of pixel frames by name") {
+    val (px, out) = scenes(2)
+    refused(px.union(px), out, "Union")
+  }
+
+  test("writeCompositeTiff refuses band-filtered and projected pixel frames by name") {
+    val (px, out) = scenes(2)
+    refused(px.filter($"band".isin(4, 3, 2)), out, "Filter")
+    refused(px.select("file", "band", "y", "x", "value"), out, "Project")
+  }
+
+  test("writeCompositeTiff refuses a source that lists a path twice as a duplicate write") {
+    val inDir = Files.createTempDirectory("graft_dup").toFile
+    Files.write(new java.io.File(inDir, "scene1.tif").toPath,
+      GraftRasterCodec.encode(W, H, Array.tabulate(6)(i => bandVals(i + 1))))
+    val blobs = graft.sources.Tables.binaryFiles(spark, inDir.getAbsolutePath, "*.tif")
     val msgs = messages(intercept[Exception] {
-      Raster.writeCompositeTiff(px.union(px), out)
+      Raster.writeCompositeTiff(Raster.decodePixels(blobs.union(blobs)),
+        Files.createTempDirectory("graft_dup_out").toString)
     })
-    assert(msgs.exists(m => m.contains("scene1.tif written 2 times") &&
-                            m.contains("scene2.tif written 2 times")), msgs.mkString("\n"))
+    assert(msgs.exists(_.contains("scene1.tif written 2 times")), msgs.mkString("\n"))
   }
 
   test("writeCompositeTiff is map-only: its stages write no shuffle bytes") {
     import org.apache.spark.scheduler._
     val (px, out) = scenes(3)
     val sc = spark.sparkContext
-    val marker = "composite-sink-probe-end"
-    val (stages, shuffled) = (new java.util.concurrent.atomic.AtomicInteger,
-                              new java.util.concurrent.atomic.AtomicLong)
+    val (sink, marker) = ("composite-sink-probe", "composite-sink-probe-end")
+    val (jobs, stages, shuffled) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicLong)
     val drained = new java.util.concurrent.CountDownLatch(1)
     @volatile var markerJob = -1
     val listener = new SparkListener {
@@ -209,20 +255,26 @@ class CompositeRasterSpec extends SparkSpec {
         shuffled.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          markerJob = e.jobId
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(`marker`) => markerJob = e.jobId
+          case Some(`sink`) => jobs.incrementAndGet()
+          case _ =>
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob) drained.countDown()
     }
     sc.addSparkListener(listener)
     try {
-      assert(Raster.writeCompositeTiff(px, out).collect().length == 3)
+      sc.setJobDescription(sink)
+      try assert(Raster.writeCompositeTiff(px, out).collect().length == 3)
+      finally sc.setJobDescription(null)
       // the listener bus delivers in order: once the marker job's end
       // arrives, every stage of the sink has been counted
       sc.setJobDescription(marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"the sink ran ${jobs.get} jobs")
     assert(stages.get > 1, "the listener saw the sink's stages")
     assert(shuffled.get == 0L, s"the sink shuffled ${shuffled.get} bytes")
   }

@@ -158,6 +158,30 @@ class TextDedupSpec extends SparkSpec {
     assert(merged == whole && merged.nonEmpty)
   }
 
+  test("KLL levels: one digest-slice conversion per row, same stream as the inline chain") {
+    // a range, not a local relation, so the projections stay in generated code
+    val rows = spark.range(2048).select(($"id" * 2654435761L % 100003L).as("v"),
+      $"id".as("i"), ($"id" % 3).cast("int").as("flag"))
+    val key = concat_ws("|", $"i")
+    val leveled = Sketch.kllLeveled(rows, Seq("flag"), $"v", key)
+    // the reference: the slice re-evaluated inline in every level's CASE WHEN
+    val m = md5(concat(lit("kll|"), key))
+    val b = conv(substring(m, 1, 4), 16, 10).cast("long")
+    val lvl = (1 to Sketch.KllMaxLevel).foldLeft(lit(0)) { (acc, l) =>
+      when(b % (1L << l) === 0, lit(l)).otherwise(acc)
+    }
+    val inline = rows.select($"flag", $"v", lvl.as("toplvl"),
+        conv(substring(m, 5, 15), 16, 10).cast("long").as("h2"))
+      .select($"flag", explode(sequence(lit(0), $"toplvl")).as("l"), $"v", $"h2")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Int, Int, Long, Long)].collect().toSeq.sorted
+    assert(sorted(leveled) == sorted(inline))
+    def converts(df: org.apache.spark.sql.DataFrame) = "NumberConverter\\.convert\\(".r
+      .findAllMatchIn(org.apache.spark.sql.execution.debug
+        .codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString).length
+    assert(converts(leveled) <= 2 && converts(inline) > 2, (converts(leveled), converts(inline)))
+  }
+
   test("KLL quantile sketch: merge law, monotone levels, capped survivors") {
     val rows = (0 until 4096).map(i => ((i * 2654435761L) % 100003L, i.toLong))
       .toDF("v", "i")
