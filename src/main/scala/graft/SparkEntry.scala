@@ -41,9 +41,16 @@ object SparkEntry {
     groups.map(_._1).reduce(_ ++ _)
 
   def oracleSql: Map[String, String] = groups.map(_._2).reduce(_ ++ _)
-}
 
-/** Back-compat alias for dev tooling. */
-object Queries {
-  def registry: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries
+  /** The catalog of cross-query shared frames: each name is one frame
+    * that several registry queries read, built by the same builder its
+    * consumers call, so once it is persisted through
+    * [[graft.operators.PlanCache.reuse]], CacheManager's `sameResult`
+    * lookup serves it to every consumer. A family lists its frames in a
+    * `shared` sequence next to its `registry`; within a family a frame
+    * comes after the frames it reads. Bench's prewarm builds exactly
+    * this list (`_shared_frames`). */
+  def sharedFrames: Seq[(String, (SparkSession, String) => DataFrame)] =
+    RelationalQueries.shared ++ DocQueries.shared ++ VectorQueries.shared ++
+      EventQueries.shared
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.queries.Canon
@@ -51,6 +51,10 @@ object BandStats {
   /** Quantization applied to the level-1 means in exact level 2. */
   private val MeanDec = DecimalType(18, 6)
 
+  /** The reference's nodata value: a pixel equal to it is not a sample
+    * (`band_mean_computation.cpp:11-50`). */
+  private val NoData = 0.0
+
   private def meanAgg(value: Column, exact: Boolean): Column =
     if (exact) Canon.exactAvg(value) else avg(value)
 
@@ -59,9 +63,8 @@ object BandStats {
     * `calculate_band_means` (`band_mean_computation.cpp:11-50`).
     */
   def bandFileMeans(df: DataFrame, fileCol: String, bandCol: String,
-                    valueCol: String, nodata: Double = 0.0,
-                    exact: Boolean = false): DataFrame =
-    df.filter(col(valueCol) =!= lit(nodata))
+                    valueCol: String, exact: Boolean = false): DataFrame =
+    df.filter(col(valueCol) =!= lit(NoData))
       .groupBy(col(fileCol), col(bandCol))
       .agg(meanAgg(col(valueCol), exact).as("mean_value"),
            count(col(valueCol)).as("n_valid"))
@@ -72,9 +75,8 @@ object BandStats {
     * survive with a defined value.
     */
   def bandFileMeansKeepEmpty(df: DataFrame, fileCol: String, bandCol: String,
-                             valueCol: String, nodata: Double = 0.0,
-                             exact: Boolean = false): DataFrame = {
-    val valid = when(col(valueCol) =!= lit(nodata), col(valueCol))
+                             valueCol: String, exact: Boolean = false): DataFrame = {
+    val valid = when(col(valueCol) =!= lit(NoData), col(valueCol))
     df.groupBy(col(fileCol), col(bandCol))
       .agg(coalesce(meanAgg(valid, exact), lit(0.0)).as("mean_value"),
            count(valid).as("n_valid"))
@@ -123,37 +125,9 @@ object BandStats {
     * `band` only.
     */
   def bandWeightedMean(df: DataFrame, bandCol: String, valueCol: String,
-                       nodata: Double = 0.0, exact: Boolean = false): DataFrame =
-    df.filter(col(valueCol) =!= lit(nodata))
+                       exact: Boolean = false): DataFrame =
+    df.filter(col(valueCol) =!= lit(NoData))
       .groupBy(col(bandCol))
       .agg(meanAgg(col(valueCol), exact).as("weighted_mean"),
            count(col(valueCol)).as("n_pixels"))
-}
-
-/** Typed rows for the Dataset façade — top-level on purpose: case
-  * classes nested inside an object silently break whole-stage codegen
-  * (interpreted encoder fallback, see build notes). */
-case class Pixel(file: String, band: Int, value: Double)
-case class BandFileStats(file: String, band: Int,
-                         mean_value: Double, n_valid: Long)
-case class BandSummary(band: Int, mean_of_means: Double,
-                       max_of_means: Double, min_of_means: Double,
-                       n_files: Long)
-
-/** `Dataset[T]` façade over [[BandStats]] for callers that want
-  * compile-time row types: same Catalyst plans (the typed wrapper is a
-  * schema assertion via `.as[T]`, not a different execution path), so
-  * pushdown/codegen behavior is identical to the DataFrame API. */
-object BandStatsTyped {
-  def bandFileMeans(px: Dataset[Pixel], nodata: Double = 0.0,
-                    exact: Boolean = false): Dataset[BandFileStats] = {
-    implicit val enc: Encoder[BandFileStats] = Encoders.product[BandFileStats]
-    BandStats.bandFileMeans(px.toDF(), "file", "band", "value", nodata, exact)
-      .as[BandFileStats]
-  }
-
-  def bandStats(level1: Dataset[BandFileStats]): Dataset[BandSummary] = {
-    implicit val enc: Encoder[BandSummary] = Encoders.product[BandSummary]
-    BandStats.bandStats(level1.toDF(), "band").as[BandSummary]
-  }
 }

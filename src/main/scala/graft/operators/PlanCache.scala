@@ -72,6 +72,9 @@ private[graft] object PlanCache {
   /** Tracked-entry count (spec observability). */
   def liveCount: Int = synchronized(live.size)
 
+  /** The tracked frames themselves (spec observability). */
+  def liveFrames: Seq[DataFrame] = synchronized(live.toList)
+
   /** Counter snapshot for bench telemetry. `evictions` stays 0: nothing
     * is unpersisted before [[releaseAll]]; the key is kept for readers
     * of earlier bench_detail.json files. */

@@ -577,7 +577,7 @@ object DocQueries {
     * the aggregate (top-gram tie-break and char-mass sums), so the cached
     * frame projects the gram string away — the group key stays the exact
     * gram (no hashing: a collision would merge distinct grams and change
-    * counts). Pinned in [[prewarmSharedFrames]]. */
+    * counts). Listed in [[shared]]. */
   private[graft] def gopherGramCounts(s: SparkSession,
                                       dir: String): DataFrame = {
     val ns = 2 to 10
@@ -1853,13 +1853,11 @@ object DocQueries {
     * full-outer joins over small pair tables plus a tiny rollup —
     * nothing rescans text at any scale. */
   def dedupMethodAgreement(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val j = Dedup.jaccardPairs(docs, "doc_id", "text")
+    val j = dedupJaccardPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_jaccard"))
-    val m = Dedup.minHashCandidatePairs(docs, "doc_id", "text",
-                                        ShingleN, MinHashK, RowsPerBand)
+    val m = dedupMinHashPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_minhash"))
-    val sh = Dedup.simHashPairs(docs, "doc_id", "text")
+    val sh = dedupSimHashPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_simhash"))
     j.join(m, Seq("doc_a", "doc_b"), "full_outer")
       .join(sh, Seq("doc_a", "doc_b"), "full_outer")
@@ -1945,12 +1943,10 @@ object DocQueries {
     * agreement row reads; this adds one co-keyed left join + a ≤
     * 11-bin rollup — nothing rescans text. */
   def dedupLshRecallCurve(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val j = Dedup.jaccardPairs(docs, "doc_id", "text")
+    val j = dedupJaccardPairs(s, dir)
       .select(col("doc_a"), col("doc_b"),
               expr("CAST(floor(jaccard * 20) AS BIGINT)").as("bin"))
-    val m = Dedup.minHashCandidatePairs(docs, "doc_id", "text",
-                                        ShingleN, MinHashK, RowsPerBand)
+    val m = dedupMinHashPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("cand"))
     j.join(m, Seq("doc_a", "doc_b"), "left")
       .groupBy(col("bin"))
@@ -2244,8 +2240,7 @@ object DocQueries {
   def dedupMinHashEstimate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val sigs = Dedup.minHashSignatures(docs, "doc_id", "text", ShingleN, MinHashK)
-    val pairs = Dedup.minHashCandidatePairs(docs, "doc_id", "text",
-                                            ShingleN, MinHashK, RowsPerBand)
+    val pairs = dedupMinHashPairs(s, dir)
     val sa = sigs.select(col("doc_id").as("doc_a") +:
       (1 to MinHashK).map(i => col(s"h$i").as(s"a$i")): _*)
     val sb = sigs.select(col("doc_id").as("doc_b") +:
@@ -2472,7 +2467,7 @@ object DocQueries {
     * Oracle: recursive CTE transitive closure over the same edges. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     Dedup.dupClusters(
-      Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text")
+      dedupJaccardPairs(s, dir)
         .select(col("doc_a"), col("doc_b")),
       "doc_a", "doc_b")
       .select(col("id").as("doc_id"), col("cluster_id"))
@@ -3039,51 +3034,41 @@ object DocQueries {
       .select(col("lang"), col("doc_id"), col("rk").cast("long").as("rk"))
   }
 
-  /** The doc/dedup family's cross-query shared frames, persisted for the
-    * bench's explicitly-timed `_shared_frames` line: the three
-    * bottom-level sketches ([[Dedup.prewarmSharedSketches]]), the
-    * Jaccard pair table (consumed by `dedup_jaccard_pairs`,
-    * `dedup_clusters`, `pipe_dedup_keep`), the MinHash candidate pairs
-    * (`dedup_minhash_pairs`, `dedup_minhash_est`), and the BPE
-    * word-frequency frame (`text_bpe_merges`, `text_bpe_encode`).
-    * Without the prewarm, whichever family member runs first after a cache
-    * clear absorbs the whole shared build into its own timing
-    * (VERDICT r7 #1 — per-query bench attribution). */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = {
-    val docs = Tables.documents(s, dir)
-    Dedup.prewarmSharedSketches(docs, "doc_id", "text") ++ Seq(
-      "jaccard_pairs" -> PlanCache.reuse(
-        Dedup.jaccardPairs(docs, "doc_id", "text")),
-      "minhash_pairs" -> PlanCache.reuse(Dedup.minHashCandidatePairs(
-        docs, "doc_id", "text", ShingleN, MinHashK, RowsPerBand)),
-      // consumed by dedup_simhash_pairs AND dedup_method_agreement
-      "simhash_pairs" -> PlanCache.reuse(
-        Dedup.simHashPairs(docs, "doc_id", "text")),
-      // n = 2..10 gram counts shared by text_gopher_repetition (n ≤ 4)
-      // and text_gopher_dupe_ngrams (n ≥ 5) — one 9-size explode+agg
-      // pass instead of a 3-size + a 6-size pass (r16)
-      "gopher_grams" -> PlanCache.reuse(gopherGramCounts(s, dir)),
-      "bpe_word_freq" -> PlanCache.reuse(
-        TextOps.bpeWordFreq(Tables.spread(docs), "text")),
-      // consumed by text_winnowing AND pipe_contamination_winnow
-      "winnow_fps" -> PlanCache.reuse(textWinnowing(s, dir)),
-      // consumed by doc_bm25_topk AND sim_rrf_fusion (VERDICT r9 #6:
-      // the tf/doc chain was reuse-shared but the scored frame itself
-      // was rebuilt by each consumer)
-      "bm25_scored" -> PlanCache.reuse(bm25Scored(s, dir)),
-      // consumed by text_char_entropy / text_ttr_segmental AND
-      // doc_quality_composite
-      "char_entropy" -> PlanCache.reuse(textCharEntropy(s, dir)),
-      "ttr_segmental" -> PlanCache.reuse(textTtrSegmental(s, dir)),
-      // consumed by text_trigram_backoff AND pipe_ccnet_buckets
-      "trigram_scored" -> PlanCache.reuse(trigramScored(s, dir)),
-      // LR training is eager at construction (driver-batched GD) and
-      // memoized per dir: invoking it HERE lands the 8-step training
-      // cost in the prewarm build line (_build_doc), not on whichever
-      // text_lr_* row runs first (alphabetical = text_lr_calibration)
-      "lr_weights" -> PlanCache.reuse(lrWeights(s, dir)))
-  }
+  /** This family's entries in [[graft.SparkEntry.sharedFrames]]:
+    *  - the three bottom-level dedup sketches at the registry defaults
+    *    (shingle set, MinHash signatures, SimHash sketch);
+    *  - the Jaccard pair table (`dedup_jaccard_pairs`, `dedup_clusters`,
+    *    `pipe_dedup_keep`, ...), the MinHash candidate pairs
+    *    (`dedup_minhash_pairs`, `dedup_minhash_est`) and the SimHash
+    *    pairs (`dedup_simhash_pairs`, `dedup_method_agreement`);
+    *  - the n = 2..10 gram counts of both Gopher repetition rows, the BPE
+    *    word-frequency frame (`text_bpe_merges`, `text_bpe_encode`), the
+    *    winnowing fingerprints, the BM25 scores (`doc_bm25_topk`,
+    *    `sim_rrf_fusion`), the char-entropy and segmental-TTR frames
+    *    (their rows and `doc_quality_composite`), the trigram scorer
+    *    (`text_trigram_backoff`, `pipe_ccnet_buckets`);
+    *  - the LR weights, whose driver-batched training runs eagerly at
+    *    construction, so it is timed here and not on the first
+    *    `text_lr_*` row. */
+  val shared: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "shingle_set"    -> ((s, dir) => Dedup.shingleSet(
+      Tables.documents(s, dir), "doc_id", "text", ShingleN)),
+    "minhash_sigs"   -> ((s, dir) => Dedup.minHashSignatures(
+      Tables.documents(s, dir), "doc_id", "text", ShingleN, MinHashK)),
+    "simhash"        -> ((s, dir) => Dedup.simHashSketch(
+      Tables.documents(s, dir), "doc_id", "text")),
+    "jaccard_pairs"  -> (dedupJaccardPairs _),
+    "minhash_pairs"  -> (dedupMinHashPairs _),
+    "simhash_pairs"  -> (dedupSimHashPairs _),
+    "gopher_grams"   -> (gopherGramCounts _),
+    "bpe_word_freq"  -> ((s, dir) => TextOps.bpeWordFreq(
+      Tables.spread(Tables.documents(s, dir)), "text")),
+    "winnow_fps"     -> (textWinnowing _),
+    "bm25_scored"    -> (bm25Scored _),
+    "char_entropy"   -> (textCharEntropy _),
+    "ttr_segmental"  -> (textTtrSegmental _),
+    "trigram_scored" -> (trigramScored _),
+    "lr_weights"     -> (lrWeights _))
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_sample_exact_k" -> (pipeSampleExactK _),

@@ -498,26 +498,18 @@ object EventQueries {
                 .as("entropy_micro"))
   }
 
-  /** The event family's cross-query shared frames, persisted for the
-    * bench's explicitly-timed `_shared_frames` line: the transition
-    * digraph feeds three graph queries ([[pagerank]], [[hitsScores]],
-    * [[reach]]); without the prewarm each rebuilt it from the corpus
-    * (VERDICT r11 #1). */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = Seq(
-    // the mid-grain transition frame feeds both the digraph and
-    // evt_transitions; listed in its own right (the gramState rule —
-    // prewarming only the outer wrapper leaves the inner build on
-    // whichever consumer runs first)
-    "transition_user" ->
-      graft.operators.PlanCache.reuse(transitionUserEdges(s, dir)),
-    "transition_edges" ->
-      graft.operators.PlanCache.reuse(transitionEdges(s, dir)),
-    // r16 family-shared frames: user-day activity (4 consumers),
-    // first-seen day (2), the per-user lifetime panel (6)
-    "evt_user_days"  -> graft.operators.PlanCache.reuse(userDays(s, dir)),
-    "evt_first_day"  -> graft.operators.PlanCache.reuse(userFirstDay(s, dir)),
-    "evt_user_panel" -> graft.operators.PlanCache.reuse(userPanel(s, dir)))
+  /** This family's entries in [[graft.SparkEntry.sharedFrames]]: the
+    * mid-grain transition frame (the digraph and `evt_transitions`),
+    * the transition digraph ([[pagerank]], [[hitsScores]], [[reach]]),
+    * and the user-day activity (4 consumers), first-seen day (2) and
+    * per-user lifetime panel (6). The inner frame is listed before the
+    * digraph built on it, so its build is timed in its own right. */
+  val shared: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "transition_user"  -> (transitionUserEdges _),
+    "transition_edges" -> (transitionEdges _),
+    "evt_user_days"    -> (userDays _),
+    "evt_first_day"    -> (userFirstDay _),
+    "evt_user_panel"   -> (userPanel _))
 
   /** Weighted PageRank over the event-type transition digraph
     * ([[transitionEdges]] is the shared edge builder), 3 iterations of

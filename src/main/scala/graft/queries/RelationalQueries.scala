@@ -1145,8 +1145,13 @@ object RelationalQueries {
       .select(col("a"), col("b"))
   }
 
-  def relLabelProp(s: SparkSession, dir: String): DataFrame =
+  /** The 4-round LPA labels of [[coPurchaseEdges]], shared by
+    * [[relLabelProp]] and [[relModularity]]. */
+  private def coPurchaseCommunities(s: SparkSession, dir: String): DataFrame =
     Graphs.labelPropagation(coPurchaseEdges(s, dir), "a", "b", rounds = 4)
+
+  def relLabelProp(s: SparkSession, dir: String): DataFrame =
+    coPurchaseCommunities(s, dir)
       .select(col("node").as("part_node"), col("label").as("community"))
 
   /** Modularity audit of the [[relLabelProp]] communities — per
@@ -1155,11 +1160,9 @@ object RelationalQueries {
     * LPA's clusters are real structure or noise, with the float
     * division left to the consumer so every compared column stays
     * BIGINT. Oracle shares the 4-round LPA unroll CTEs. */
-  def relModularity(s: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(s, dir)
-    val labels = Graphs.labelPropagation(edges, "a", "b", rounds = 4)
-    Graphs.modularity(edges, "a", "b", labels)
-  }
+  def relModularity(s: SparkSession, dir: String): DataFrame =
+    Graphs.modularity(coPurchaseEdges(s, dir), "a", "b",
+                      coPurchaseCommunities(s, dir))
 
   /** The lineitem columns profiled by [[relProfileColumns]] — the
     * numeric surface (strings/timestamps excluded by the
@@ -1475,36 +1478,25 @@ object RelationalQueries {
       .select(col("node").as("part_node"), col("rank"))
   }
 
-  /** The graph family's cross-query shared frames, persisted for the
-    * bench's explicitly-timed `_shared_frames` line (VERDICT r10 #1 —
-    * the 7-query graph family rebuilt its edge lists per query, and
-    * `rel_modularity` re-ran the entire 4-round LPA that
-    * `rel_label_prop` had just run, because the per-round
-    * `localCheckpoint` made CacheManager `sameResult` structurally
-    * impossible). With [[Graphs.labelPropagation]] now persisting per
-    * round ([[PlanCache.reuse]], logical plan kept), prewarming the
-    * trained label frame here makes both consumers — and every
-    * co-purchase/co-ship edge subtree (`rel_kcore`,
-    * `rel_link_predict`, `rel_ppr_seeds`'s pre-weight join,
-    * `rel_triangle_count`, `rel_clustering_coeff`) — a cache hit at
-    * whatever subtree matches. */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = Seq(
-    "co_purchase_edges" -> PlanCache.reuse(coPurchaseEdges(s, dir)),
-    "co_ship_edges"     -> PlanCache.reuse(coShipEdges(s, dir)),
-    "lpa_labels"        -> PlanCache.reuse(
-      Graphs.labelPropagation(coPurchaseEdges(s, dir), "a", "b", rounds = 4)),
-    // ONE shared KLL leveled stream (r16): the par-sharded and
-    // flag-grouped frames are projections of this shared build — the
-    // two separate ~6/9 s frames it replaces were near-duplicate md5 +
-    // explode passes over lineitem (see kllLevShared)
-    "kll_shared"      -> PlanCache.reuse(kllLevShared(s, dir)),
-    // the 5-row estimate frame (2 consumers: rel_kll_quantiles +
-    // rel_kll_error's broadcast side) — its build pays the survivor
-    // windows over the leveled stream; without the prewarm that cost
-    // landed on rel_kll_error (alphabetically first) and read ~8 s pass-1 on the
-    // driver box (BENCH_r13 retried map; VERDICT r13 #1)
-    "kll_estimates"   -> PlanCache.reuse(kllQuantilesQuery(s, dir)))
+  /** This family's entries in [[graft.SparkEntry.sharedFrames]]:
+    *  - `kll_shared`: the ONE KLL leveled stream every `rel_kll_*` row
+    *    projects ([[kllLevShared]]);
+    *  - `kll_estimates`: the 5-row estimate frame read by
+    *    `rel_kll_quantiles` and `rel_kll_error`'s broadcast side; its
+    *    build runs the survivor windows over the leveled stream;
+    *  - `co_purchase_edges` / `lpa_labels`: the co-purchase graph
+    *    (`rel_kcore`, `rel_link_predict`) and its 4-round LPA labels
+    *    (`rel_label_prop`, `rel_modularity`; the per-round
+    *    [[PlanCache.reuse]] in [[Graphs.labelPropagation]] keeps each
+    *    round's logical plan, so `sameResult` can match it);
+    *  - `co_ship_edges`: the supplier co-shipping graph
+    *    (`rel_triangle_count`, `rel_clustering_coeff`). */
+  val shared: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "kll_shared"        -> (kllLevShared _),
+    "kll_estimates"     -> (kllQuantilesQuery _),
+    "co_purchase_edges" -> (coPurchaseEdges _),
+    "lpa_labels"        -> (coPurchaseCommunities _),
+    "co_ship_edges"     -> (coShipEdges _))
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     "rel_ppr_seeds"         -> (relPprSeeds _),

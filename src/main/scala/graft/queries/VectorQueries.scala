@@ -366,8 +366,7 @@ object VectorQueries {
     * all three eval queries (LSH, IVF, IVF-PQ). */
   private def recallAgainstTruth(s: SparkSession, dir: String,
                                  approx: DataFrame, k: Int): DataFrame = {
-    val truth = Similarity.bruteForceTopK(
-        Tables.embeddings(s, dir), "vec_id", "embedding", queryPred, k)
+    val truth = bruteTruth(s, dir, k)
       .select(col("query_id"), col("neighbor_id"))
     val hits = approx
       .select(col("query_id"), col("neighbor_id")).withColumn("hit", lit(1L))
@@ -519,10 +518,8 @@ object VectorQueries {
     * updates are percentile_cont — all already-proven bit-exact shapes. */
   def simTopKIvfTrained(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    Similarity.ivfTopK(
-      Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id", "embedding",
-                             KmC, KmIters),
-      "vec_id", "embedding", "cell", queryPred, 3)
+    Similarity.ivfTopK(kmeansCells(s, dir), "vec_id", "embedding", "cell",
+                       queryPred, 3)
   }
 
   /** Per-cell inertia of the trained quantizer — the training-quality
@@ -536,8 +533,7 @@ object VectorQueries {
     * assignment frame; one c·d-row broadcast join + one map pass. */
   def simKmeansInertia(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    val cells = Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id",
-                                       "embedding", KmC, KmIters)
+    val cells = kmeansCells(s, dir)
     val cents = Similarity.cellCentroids(cells, "embedding", "cell")
     cells.join(broadcast(cents), Seq("cell"))
       .withColumn("cs",
@@ -603,10 +599,8 @@ object VectorQueries {
     * sharing); threshold matches the other near-dup rows (0.4). */
   def simSemanticDedup(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    Similarity.semanticDedup(
-      Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id", "embedding",
-                             KmC, KmIters),
-      "vec_id", "embedding", "cell", 0.4)
+    Similarity.semanticDedup(kmeansCells(s, dir), "vec_id", "embedding",
+                             "cell", 0.4)
   }
 
   /** INCREMENTAL semantic dedup (the streaming-ingest shape of
@@ -628,12 +622,10 @@ object VectorQueries {
     * the matrix itself is one full-outer join + a 4-row rollup. */
   def dedupTextVsSemantic(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    val textPairs = graft.operators.Dedup
-      .jaccardPairs(Tables.documents(s, dir), "doc_id", "text")
+    val textPairs = DocQueries.dedupJaccardPairs(s, dir)
       .select(col("doc_a").as("a"), col("doc_b").as("b"),
               lit(1L).as("in_text"))
-    val base = Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id",
-                                      "embedding", KmC, KmIters)
+    val base = kmeansCells(s, dir)
       .select(col("cell"), col("vec_id"), col("embedding"))
     val semPairs = base
       .select(col("cell"), col("vec_id").as("a"), col("embedding").as("va"))
@@ -670,8 +662,7 @@ object VectorQueries {
   private def cellOcc(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     graft.operators.PlanCache.reuse(
-      Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id",
-                             "embedding", KmC, KmIters)
+      kmeansCells(s, dir)
         .groupBy(col("cell"))
         .agg(sum(when(col("vec_id") % 2 === 0, 1L).otherwise(0L))
                .as("n_old"),
@@ -695,8 +686,7 @@ object VectorQueries {
     * 2.6·10¹⁶ at 64 dims, inside BIGINT. */
   def simCellDrift(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    val cells = Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id",
-                                       "embedding", KmC, KmIters)
+    val cells = kmeansCells(s, dir)
     val med = cells
       .select(col("cell"), (col("vec_id") % 2 === 0).as("old_half"),
               posexplode(col("embedding")).as(Seq("p", "x")))
@@ -793,36 +783,39 @@ object VectorQueries {
               coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
   }
 
-  /** The sim family's cross-query shared frames, persisted for the bench's
-    * explicitly-timed `_shared_frames` line: the brute-force truth@3
-    * (left side of all five recall rows), the trained k-means quantizer
-    * (`sim_topk_ivf_trained`, `sim_ivf_trained_recall`,
-    * `sim_semantic_dedup`), and the PQ codebook (`sim_topk_ivfpq`,
-    * `sim_ivfpq_recall`). Same rationale as
-    * [[DocQueries.prewarmSharedFrames]] — attribution, not speed: the
-    * shared build cost lands in one labeled line instead of whichever
-    * family member runs first. */
-  def prewarmSharedFrames(s: SparkSession,
-                          dir: String): Seq[(String, DataFrame)] = {
+  /** The trained k-means quantizer ([[KmC]] cells, [[KmIters]]
+    * rounds) every k-means row reads. */
+  private def kmeansCells(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
-    val emb = Tables.embeddings(s, dir)
-    Seq(
-      "sim_brute_truth3" -> graft.operators.PlanCache.reuse(
-        Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryPred, 3)),
-      "sim_kmeans_cells" -> graft.operators.PlanCache.reuse(
-        Similarity.kmeansCells(emb, "vec_id", "embedding", KmC, KmIters)),
-      "sim_pq_codebook" -> graft.operators.PlanCache.reuse(
-        Similarity.pqCodebook(emb, "embedding", "label", PqM, Dims)),
-      // consumed by sim_aniso_energy (alphabetically FIRST in the
-      // family, so it was absorbing the whole Gram + power-iteration
-      // build: 3.26 s) AND sim_power_iter / sim_gram_matrix /
-      // sim_corr_matrix. gramState is listed in its own right so its
-      // build is timed here, not inside power_iter_v's.
-      "gram_state" -> graft.operators.PlanCache.reuse(
-        Similarity.gramState(emb, "vec_id", "embedding")),
-      "power_iter_v" -> graft.operators.PlanCache.reuse(
-        Similarity.powerIteration(emb, "vec_id", "embedding", 3)))
+    Similarity.kmeansCells(Tables.embeddings(s, dir), "vec_id", "embedding",
+                           KmC, KmIters)
   }
+
+  /** Brute-force top-`k` ground truth, the left side of every recall
+    * row ([[recallAgainstTruth]]). */
+  private def bruteTruth(s: SparkSession, dir: String, k: Int): DataFrame = {
+    VectorFunctions.register(s)
+    Similarity.bruteForceTopK(Tables.embeddings(s, dir), "vec_id",
+                              "embedding", queryPred, k)
+  }
+
+  /** This family's entries in [[graft.SparkEntry.sharedFrames]]: the
+    * brute-force truth@3 (left side of the recall rows), the trained
+    * k-means quantizer (`sim_topk_ivf_trained`, `sim_ivf_trained_recall`,
+    * `sim_semantic_dedup`, ...), the PQ codebook (`sim_topk_ivfpq`,
+    * `sim_ivfpq_recall`), and the Gram state with its power-iteration
+    * eigenvector (`sim_aniso_energy`, `sim_power_iter`,
+    * `sim_gram_matrix`, `sim_corr_matrix`). The Gram state is listed in
+    * its own right, so its build is timed apart from the eigenvector's. */
+  val shared: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "sim_brute_truth3" -> ((s, dir) => bruteTruth(s, dir, 3)),
+    "sim_kmeans_cells" -> (kmeansCells _),
+    "sim_pq_codebook"  -> ((s, dir) => Similarity.pqCodebook(
+      Tables.embeddings(s, dir), "embedding", "label", PqM, Dims)),
+    "gram_state"       -> ((s, dir) => Similarity.gramState(
+      Tables.embeddings(s, dir), "vec_id", "embedding")),
+    "power_iter_v"     -> ((s, dir) => Similarity.powerIteration(
+      Tables.embeddings(s, dir), "vec_id", "embedding", iters = 3)))
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_recall_eval"   -> (simRecallEval _),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, SparkEntry}
-import graft.operators.BandStats
 import graft.sources.Tables
 
 /** Speedup / parallel-efficiency sweep — the reference assignment's
@@ -84,11 +83,6 @@ object ScalingBench {
     * Spark-axis twin of the reference's MPI process-count study. */
   private val ScaledPanel: Seq[(String, (SparkSession, String) => DataFrame)] =
     Seq(
-      // the reference's headline two-level band statistics, 16x events
-      "scaled_band_stats" -> ((s: SparkSession, dir: String) =>
-        BandStats.bandFileMeans(rep(Tables.events(s, dir), 16),
-                                "user_id", "event_type", "value",
-                                exact = true)),
       // exact-decimal pricing aggregation over 16x lineitem
       "scaled_pricing" -> ((s: SparkSession, dir: String) =>
         rep(Tables.lineitem(s, dir), 16)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.{Queries, SparkEntry}
+import graft.SparkEntry
 import graft.sources.Tables
 
 /** Dev-only smoke: read every fixture table (incl. the timestamp[ns]
@@ -22,7 +22,7 @@ object Smoke {
         println(s"[smoke] $t FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    Queries.registry.foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try {
         val df = fn(spark, dir)
         println(s"[smoke] query $name rows=${df.count()}")

@@ -8,20 +8,6 @@ import graft.operators.BandStats
   * empty input, repartition invariance. */
 class BandStatsSpec extends SparkSpec {
 
-  test("typed facade agrees with the DataFrame API and keeps field types") {
-    import spark.implicits._
-    import graft.operators.{BandStatsTyped, Pixel}
-    val px = Seq(
-      Pixel("f1", 1, 10.0), Pixel("f1", 1, 30.0), Pixel("f1", 1, 0.0),
-      Pixel("f2", 1, 50.0), Pixel("f1", 2, 8.0)).toDS()
-    val l1 = BandStatsTyped.bandFileMeans(px)
-    // compile-time field access — the point of the typed surface
-    val means = l1.collect().map(s => (s.file, s.band) -> s.mean_value).toMap
-    assert(means == Map(("f1", 1) -> 20.0, ("f2", 1) -> 50.0, ("f1", 2) -> 8.0))
-    val summary = BandStatsTyped.bandStats(l1).collect()
-      .map(s => s.band -> (s.mean_of_means, s.max_of_means, s.n_files)).toMap
-    assert(summary == Map(1 -> ((35.0, 50.0, 2L)), 2 -> ((8.0, 8.0, 1L))))
-  }
   import spark.implicits._
 
   private def pixels = Seq(
