@@ -53,48 +53,18 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warm-up at the TARGET sf: JIT tiering + codegen compilation
-    // of the exact AQE plan variants otherwise lands on whichever queries
-    // happen to run first (measured ±10s scatter on trivial queries; a
-    // smaller-sf warm-up does not compile the same plans). Its frames
-    // stay cached until the releaseAll below, so pass 1 starts cold.
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", sfDir)
-    if (new java.io.File(warmupDir).isDirectory && only.isEmpty) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmupDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
-      PlanCache.releaseAll()
-      // absorb the post-warm-up cliff OUTSIDE any query's timing: the
-      // warm-up's freed caches leave a major-GC debt + JIT churn that
-      // otherwise lands on whichever query happens to run first
-      // (measured 5-20s on a query whose steady-state cost is ~1s)
-      System.gc()
-      spark.range(50000000L).selectExpr("sum(id)").collect()
-    }
-    PlanCache.resetStats()
-    // execute the FULL physical plan: df.count() would let Catalyst prune
-    // every column (a map-only query would be timed as a bare row count);
-    // toRdd.count() materializes each query's actual output rows
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val r = timeRun(fn(spark, sfDir).queryExecution.toRdd.count())
-      r.swap.foreach(e => System.err.println(s"[bench] $name failed: $e"))
-      r
-    }
     // Shared-frame prewarm, timed as its own line: every frame of
     // SparkEntry.sharedFrames is read by several queries, so after a
     // cache clear its build would land on whichever consumer runs first
     // (measured 10x per-query history jumps while family totals stayed
     // flat). Persisting the catalog here makes every family timing
     // steady-state; the build cost still counts, in this labeled line.
-    // Each frame's construction (eager driver jobs, such as the
-    // guardedBroadcast size probes and the LR training) plus its build
-    // is recorded per frame, as the MAX over prewarms (the cold build),
-    // and written into bench_detail.json as "shared_pins". A frame that
-    // throws is named in `prewarmFailed` (as `_shared_frames/<name>`),
-    // not swallowed: its build would otherwise move silently into its
-    // consumers' timings.
+    // Each frame's construction (eager driver jobs, such as the LR
+    // training) plus its build is recorded per frame, as the MAX over
+    // prewarms (the cold build), and written into bench_detail.json as
+    // "shared_pins". A frame that throws is named in `prewarmFailed`
+    // (as `_shared_frames/<name>`), not swallowed: its build would
+    // otherwise move silently into its consumers' timings.
     val pinSecs = scala.collection.mutable.Map.empty[String, Double]
     // build seconds of each frame's latest prewarm: the pool's order
     val lastBuild = scala.collection.mutable.Map.empty[String, Double]
@@ -142,6 +112,40 @@ object Bench {
           }.foreach(_.get())
       } finally pool.shutdown()
     }
+    // untimed warm-up at the TARGET sf: JIT tiering + codegen compilation
+    // of the exact AQE plan variants otherwise lands on whichever queries
+    // happen to run first (measured ±10s scatter on trivial queries; a
+    // smaller-sf warm-up does not compile the same plans). Its frames
+    // stay cached until the releaseAll below, so pass 1 starts cold.
+    // It opens with one prewarm, so pass 1's prewarm already builds
+    // heaviest first; only `lastBuild` outlives it, and `shared_pins`
+    // and `failed` report the timed prewarms alone.
+    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", sfDir)
+    if (new java.io.File(warmupDir).isDirectory && only.isEmpty) {
+      prewarm()
+      pinSecs.clear()
+      prewarmFailed.clear()
+      SparkEntry.queries.foreach { case (_, fn) =>
+        try fn(spark, warmupDir).queryExecution.toRdd.count()
+        catch { case _: Throwable => () }
+      }
+      PlanCache.releaseAll()
+      // absorb the post-warm-up cliff OUTSIDE any query's timing: the
+      // warm-up's freed caches leave a major-GC debt + JIT churn that
+      // otherwise lands on whichever query happens to run first
+      // (measured 5-20s on a query whose steady-state cost is ~1s)
+      System.gc()
+      spark.range(50000000L).selectExpr("sum(id)").collect()
+    }
+    // execute the FULL physical plan: df.count() would let Catalyst prune
+    // every column (a map-only query would be timed as a bare row count);
+    // toRdd.count() materializes each query's actual output rows
+    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Either[String, Double] = {
+      val r = timeRun(fn(spark, sfDir).queryExecution.toRdd.count())
+      r.swap.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      r
+    }
     // One timing pass over the registry: timed prewarm + first pass +
     // outlier retries. Host CPU-steal bursts spike individual queries
     // 5-10x over their steady state (measured: same query 1.5s and 12.4s
@@ -151,13 +155,18 @@ object Bench {
     // understate real cost — but re-prewarm the shared frames UNTIMED
     // afterwards, or the retry pays a rebuild its steady state never
     // sees. A failed first run is not retried, and a failed retry fails
-    // the row: no failure is ever min'd into a time.
+    // the row: no failure is ever min'd into a time. The pass also
+    // returns its PlanCache counters as they stand before any retry, so
+    // `plan_cache` does not vary with the number of retries.
     val RetryOverSec = 5.0
-    def onePass(): (Map[String, Either[String, Double]], Map[String, Double]) = {
+    def onePass(): (Map[String, Either[String, Double]], Map[String, Double],
+                    Map[String, Long]) = {
+      PlanCache.resetStats()
       val sharedEntry: Seq[(String, Either[String, Double])] =
         if (only.isEmpty) Seq("_shared_frames" -> timeRun(prewarm()))
         else Seq.empty
       val firstPass = selected.map { case (name, fn) => name -> timeOne(name, fn) }
+      val cacheStats = PlanCache.stats
       val slow = firstPass.collect {
         case (name, Right(t)) if t > RetryOverSec => name -> t }.toMap
       val pass = (sharedEntry ++ firstPass.map {
@@ -168,7 +177,7 @@ object Bench {
           name -> timeOne(name, SparkEntry.queries(base)).map(math.min(t, _))
         case other => other
       }).toMap
-      (pass, slow)
+      (pass, slow, cacheStats)
     }
     val passes = (1 to nRuns).map { i =>
       if (i > 1) {
@@ -192,11 +201,12 @@ object Bench {
         .map(k => k -> f(passes.flatMap(p => timings(p._1).get(k)))).toMap
     val results = combine(_.min)
     val medians = combine(vs => vs.sorted.apply((vs.size - 1) / 2))
-    val retriedAll = passes.zipWithIndex.flatMap { case ((_, r), i) =>
+    val retriedAll = passes.zipWithIndex.flatMap { case ((_, r, _), i) =>
       r.map { case (k, v) => s"$k@${i + 1}" -> v } }
     val retried = retriedAll.map { case (k, v) =>
       s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val cacheStats = PlanCache.stats
+    // the last pass's PlanCache counters, before its retries
+    val cacheStats = passes.last._3
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     def fmt(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }

@@ -29,32 +29,6 @@ object Dedup {
     * on already-cached plans (dupClusters re-marks its pair table). */
   private def reused(df: DataFrame): DataFrame = PlanCache.reuse(df)
 
-  /** Size-guarded broadcast for blocklist-shaped frames (hot-shingle /
-    * hot-line sets): a blocklist's cardinality grows with corpus
-    * vocabulary, so an unconditional `broadcast()` is a driver/executor
-    * OOM at web scale no matter how "tiny by construction" it looks at
-    * fixture scale (VERDICT r9 #1 for lineDedup; r10 #4 for the shingle
-    * sites). The guard counts the persisted frame (one aggregate job
-    * over an already-cached sketch) and broadcasts only under `maxRows`
-    * (default 500k rows ≈ 10 MB of packed longs, the
-    * autoBroadcastJoinThreshold scale); past it the consumer falls back
-    * to a shuffle join/anti-join on the blocklist key — co-partitioned
-    * with the aggregation exchange that built the blocklist, so the
-    * fallback adds no new corpus-keyed shuffle. Correctness is
-    * strategy-invariant (spec-pinned via the executed-plan flip test).
-    *
-    * NOTE (ADVICE r11): the guard's `count()` is an EAGER Spark job at
-    * DataFrame-construction time — callers ([[jaccardPairs]],
-    * [[containmentPairs]], [[lineDedup]]) are therefore not lazy plan
-    * builders: each call triggers the full upstream shingle aggregation
-    * (and persists the hot frame, occupying a PlanCache slot) even if
-    * the returned frame is never executed. Construct once, reuse the
-    * result. */
-  private def guardedBroadcast(df: DataFrame, maxRows: Long): DataFrame = {
-    val cached = reused(df)
-    if (cached.count() <= maxRows) broadcast(cached) else cached
-  }
-
   /** Exact dedup groups: content-hash → group size + canonical keeper
     * (min id). `SELECT hash, count, min(id)` — one shuffle on the hash.
     * `dropDuplicates` semantics = keep rows whose id == keeper_id.
@@ -144,29 +118,29 @@ object Dedup {
         .as("shingle")))
 
   /** Symmetric Jaccard near-dup pairs over distinct shingle sets via an
-    * inverted-index self-join (stop-shingle capped). NOT a lazy plan
-    * builder: construction runs the [[guardedBroadcast]] size probe
-    * (one eager count over the hot-shingle frame) — see the guard's
-    * scaladoc. */
+    * inverted-index self-join (stop-shingle capped). A lazy plan
+    * builder: construction runs no Spark job. The hot-shingle anti
+    * join carries no hint — Spark's size rule picks its strategy
+    * (`spark.sql.autoBroadcastJoinThreshold` at planning, again in AQE
+    * at runtime): a broadcast while the blocklist is small, a shuffled
+    * anti join once df > cap shingles grow with web-scale vocabulary.
+    * AQE sizes the hot set by its aggregate's exchange, not by the
+    * filtered rows, so at scale it may keep the shuffled anti join;
+    * that is the right fallback, not a reason for a hint. The result
+    * is strategy-invariant (spec-pinned). */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, minJaccard: Double = 0.5,
-                   maxShingleDf: Int = 1000,
-                   hotBroadcastMaxRows: Long = 500000L): DataFrame = {
+                   maxShingleDf: Int = 1000): DataFrame = {
     val docShingles = shingleSet(df, idCol, textCol, shingleN)
     val sizes = docShingles.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    // stop-shingle cap via a partial-aggregated count + size-guarded
-    // broadcast anti join: only (shingle, partial count) pairs shuffle,
-    // never the full posting rows (an earlier window-over-shingle
-    // variant sorted the whole inverted index just to count it); the
-    // blocklist broadcasts only while it is provably broadcast-sized
-    // ([[guardedBroadcast]] — at web scale df>cap shingles grow with
-    // vocabulary and the probe flips to a shuffled anti join)
+    // stop-shingle cap via a partial-aggregated count + anti join: only
+    // (shingle, partial count) pairs shuffle, never the full posting
+    // rows (an earlier window-over-shingle variant sorted the whole
+    // inverted index just to count it)
     val hot = docShingles.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df")).filter(col("df") > maxShingleDf)
       .select(col("shingle"))
-    val filtered = reused(
-      docShingles.join(guardedBroadcast(hot, hotBroadcastMaxRows),
-                       Seq("shingle"), "left_anti"))
+    val filtered = reused(docShingles.join(hot, Seq("shingle"), "left_anti"))
     val common = filtered.select(col(idCol).as("doc_a"), col("shingle"))
       .join(filtered.select(col(idCol).as("doc_b"), col("shingle")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
@@ -201,20 +175,17 @@ object Dedup {
     * (documented lossy stop-shingle bound — identical caveat). The
     * directed join emits both orders from one shuffle (no union, no
     * second scan); containment is one int/int double division —
-    * bit-exact cross-engine. Like [[jaccardPairs]], construction is
-    * EAGER (the [[guardedBroadcast]] size probe runs a count job). */
+    * bit-exact cross-engine. Like [[jaccardPairs]], a lazy plan
+    * builder whose hot-shingle anti join Spark sizes itself. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, minContainment: Double = 0.8,
-                       maxShingleDf: Int = 1000,
-                       hotBroadcastMaxRows: Long = 500000L): DataFrame = {
+                       maxShingleDf: Int = 1000): DataFrame = {
     val docShingles = shingleSet(df, idCol, textCol, shingleN)
     val sizes = docShingles.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val hot = docShingles.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df")).filter(col("df") > maxShingleDf)
       .select(col("shingle"))
-    val filtered = reused(
-      docShingles.join(guardedBroadcast(hot, hotBroadcastMaxRows),
-                       Seq("shingle"), "left_anti"))
+    val filtered = reused(docShingles.join(hot, Seq("shingle"), "left_anti"))
     filtered.select(col(idCol).as("contained_id"), col("shingle"))
       .join(filtered.select(col(idCol).as("container_id"), col("shingle")),
             Seq("shingle"))
@@ -542,28 +513,21 @@ object Dedup {
     * Scale shape (100 TB): one bounded shuffle on the 60-bit line
     * hash with map-side combine for the distinct-doc counts (the
     * line-hash table is line-VOCABULARY sized, not corpus sized).
-    * The hot-line blocklist is SIZE-GUARDED (VERDICT r9 #1): at
-    * fixture scale it is a handful of boilerplate lines and
-    * broadcasts back onto the line stream, but a web-scale corpus
-    * carries billions of distinct cross-document lines — an
-    * unconditional broadcast is a driver/executor OOM. The guard
-    * counts the hot set (one aggregate job over the already-cached
-    * lines frame — the count IS the convergence signature the
-    * blocklist build produces anyway) and broadcasts only under
-    * `hotBroadcastMaxRows` (default 500k rows ≈ 10 MB of packed
-    * longs, the autoBroadcastJoinThreshold scale); past it, the
-    * probe falls back to a shuffle join on `h` — co-partitioned
-    * with the distinct-doc count's existing hash exchange, so the
-    * fallback adds no new corpus-keyed shuffle. The per-doc rollup
-    * is the one remaining shuffle on the doc key. Hash family is
-    * the oracle-replayable md5-60 idiom (no RNG); over-marking
-    * needs a 60-bit collision against a hot line. */
+    * The hot-line probe join carries no hint: at fixture scale the
+    * blocklist is a handful of boilerplate lines and Spark's size
+    * rule broadcasts it back onto the line stream, but a web-scale
+    * corpus carries billions of distinct cross-document lines, and
+    * past `spark.sql.autoBroadcastJoinThreshold` the probe is a
+    * shuffle join on `h` — co-partitioned with the distinct-doc
+    * count's existing hash exchange, so it adds no new corpus-keyed
+    * shuffle. A lazy plan builder: construction runs no Spark job.
+    * The per-doc rollup is the one remaining shuffle on the doc key.
+    * Hash family is the oracle-replayable md5-60 idiom (no RNG);
+    * over-marking needs a 60-bit collision against a hot line. */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
-                segTokens: Int = 10, minDocs: Int = 2,
-                hotBroadcastMaxRows: Long = 500000L): DataFrame =
+                segTokens: Int = 10, minDocs: Int = 2): DataFrame =
     lineRollup(lineFrame(df, idCol, textCol, segTokens),
-               hotLines(df, idCol, textCol, segTokens, minDocs),
-               idCol, hotBroadcastMaxRows)
+               hotLines(df, idCol, textCol, segTokens, minDocs), idCol)
 
   /** The standing hot-line BLOCKLIST artifact behind [[lineDedup]]:
     * one `h` row per line hash occurring in ≥ `minDocs` distinct
@@ -591,18 +555,15 @@ object Dedup {
     * micro-batch partitioning (spec-pinned). */
   def lineDedupIncrement(blocklist: DataFrame, batch: DataFrame,
                          idCol: String, textCol: String,
-                         segTokens: Int = 10,
-                         hotBroadcastMaxRows: Long = 500000L): DataFrame =
+                         segTokens: Int = 10): DataFrame =
     lineRollup(lineFrame(batch, idCol, textCol, segTokens),
-               blocklist.select(col("h")), idCol, hotBroadcastMaxRows)
+               blocklist.select(col("h")), idCol)
 
   /** Shared probe + doc rollup: left join the line stream against the
-    * size-guarded hot set, then one doc-keyed aggregation. */
-  private def lineRollup(lines: DataFrame, hot: DataFrame, idCol: String,
-                         hotBroadcastMaxRows: Long): DataFrame = {
-    val hotSide = guardedBroadcast(
-      hot.select(col("h"), lit(1L).as("dup")), hotBroadcastMaxRows)
-    lines.join(hotSide, Seq("h"), "left")
+    * hot set, then one doc-keyed aggregation. */
+  private def lineRollup(lines: DataFrame, hot: DataFrame,
+                         idCol: String): DataFrame =
+    lines.join(hot.select(col("h"), lit(1L).as("dup")), Seq("h"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_lines"),
            sum(when(col("dup").isNotNull, 1L).otherwise(0L))
@@ -611,7 +572,6 @@ object Dedup {
              .as("kept_tokens"))
       .withColumn("removed_permille",
         expr("n_dup_lines * 1000 DIV n_lines"))
-  }
 
   /** DOMAIN-scoped line dedup (RefinedWeb §3/§4: URL/domain curation
     * precedes corpus-wide line removal — nav bars, footers and cookie

@@ -852,7 +852,7 @@ object Graphs {
     * Two cores, one recurrence (spec-pinned identical):
     *  - DENSE driver core when the materialized edge list is ≤
     *    `denseMaxEdges` rows (one count probe over the cached frame —
-    *    construction is EAGER, like [[Dedup]]'s guarded broadcasts).
+    *    construction is EAGER).
     *    HITS scores a WHOLE graph at once, so a bounded edge list is a
     *    bounded driver object (the vocab-collect rule); the loop then
     *    pays ZERO per-round exchanges where the DataFrame loop paid ~4

@@ -92,8 +92,8 @@ object LogReg {
     * join, once under the update), so the logical plan grows 2^Steps —
     * measured as a >2 GB plan string at Steps = 8. EAGER at
     * construction (Steps+1 bounded driver actions — the documented
-    * guardedBroadcast/BPE wart); callers that need laziness memoize
-    * the returned literal. */
+    * BPE wart); callers that need laziness memoize the returned
+    * literal. */
   def train(feats: DataFrame): DataFrame = {
     val f = PlanCache.reuse(feats)
     val spark = f.sparkSession

@@ -191,10 +191,11 @@ object StreamOps {
     * probed against a STANDING hot-line blocklist artifact
     * ([[graft.operators.Dedup.hotLines]], persisted by the previous
     * batch run) and the per-doc boilerplate report is handed to
-    * `sink`. The corpus is never rescanned — the stream-static join
-    * touches only the blocklist (broadcast under the size guard) and
-    * the micro-batch's own lines; state is EXTERNAL (the artifact),
-    * so the query itself is stateless and trivially scales. Because a
+    * `sink`. The corpus is never rescanned — the stream-static join,
+    * whose strategy Spark's size rule picks, touches only the
+    * blocklist and the micro-batch's own lines; state is EXTERNAL
+    * (the artifact), so the query itself is stateless and trivially
+    * scales. Building a batch's report runs no job of its own. Because a
     * document's report depends only on (doc, blocklist), the union of
     * streamed outputs equals one batch [[graft.operators.Dedup
     * .lineDedupIncrement]] over the same docs for ANY micro-batch

@@ -184,9 +184,9 @@ object ScalingBench {
       // would measure persist I/O, not the operator (the lines frame is
       // simply computed twice — constant factor, same at every core
       // count). Every copy shares its lines with 511 others, so the hot
-      // set is line-vocabulary sized — the size-guard's web-scale
-      // regime, probed via the plain shuffle join exactly as the
-      // guarded fallback would.
+      // set is line-vocabulary sized — the web-scale regime, probed via
+      // the plain shuffle join that Dedup.lineDedup plans once the hot
+      // set passes autoBroadcastJoinThreshold.
       "scaled_line_dedup" -> ((s: SparkSession, dir: String) => {
         val n = 256
         val w = 10

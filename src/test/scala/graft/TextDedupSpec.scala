@@ -857,80 +857,99 @@ class TextDedupSpec extends SparkSpec {
     assert(!strict.contains(4L))
   }
 
-  test("line dedup: hot-side broadcast is size-guarded (VERDICT r9 #1)") {
-    val corpus = Seq(
-      (1L, "a b c d e f"), (2L, "a b c x y z"), (3L, "m n o p q r")
-    ).toDF("doc_id", "text")
+  // docs 1-3 share the "x y z w" prefix → its two 3-grams have df = 3
+  // and cross maxShingleDf = 2 (hot); docs 1-2 additionally share the
+  // "p q r s" tail (df = 2, kept) so surviving pairs exist
+  private def hotCorpus = Seq(
+    (1L, "x y z w p q r s"), (2L, "x y z w p q r s"),
+    (3L, "x y z w m n o t")
+  ).toDF("doc_id", "text")
+
+  // executed plan plus every cached plan under it: the jaccard and
+  // containment anti joins live inside the PlanCache-persisted
+  // `filtered` frame
+  private def deepPlan(df: org.apache.spark.sql.DataFrame): String = {
+    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      p.toString +: p.collect {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          s.relation.cachedPlan
+      }.flatMap(walk)
+    walk(df.queryExecution.executedPlan).mkString("\n")
+  }
+
+  /** The hot-side probe carries no hint, so Spark's size rule alone
+    * picks its strategy: a BroadcastHashJoin (of `joinType`) at the
+    * default threshold, none with auto-broadcast off, and the same
+    * non-empty rows either way. */
+  private def strategyInvariant[T: Ordering](joinType: String)(
+      build: => org.apache.spark.sql.DataFrame)(
+      rows: org.apache.spark.sql.DataFrame => Array[T]): Array[T] = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val old = spark.conf.get(key)
+    graft.operators.PlanCache.releaseAll()
     try {
-      // isolate the EXPLICIT broadcast hint from stats-based auto
-      // conversion: with the threshold off, a BroadcastHashJoin in the
-      // plan can only come from lineDedup's own guard decision
+      val auto = build
+      assert(deepPlan(auto).linesIterator.exists(l =>
+        l.contains("BroadcastHashJoin") && l.contains(joinType)))
+      val a = rows(auto).sorted
+      // drop the first run's persisted frames: join strategies are
+      // erased in plan canonicalization, so the rebuild would otherwise
+      // sameResult-hit the cached broadcast probe
+      graft.operators.PlanCache.releaseAll()
       spark.conf.set(key, "-1")
-      val guarded = Dedup.lineDedup(corpus, "doc_id", "text", segTokens = 3)
-      assert(guarded.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
-      // past the row bound the probe must flip to a shuffle join on the
-      // line hash (web-scale blocklists don't fit a broadcast)
-      val flipped = Dedup.lineDedup(corpus, "doc_id", "text", segTokens = 3,
-          hotBroadcastMaxRows = 0L)
-      assert(!flipped.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
-      // both strategies compute the identical report
-      val a = guarded.as[(Long, Long, Long, Long, Long)].collect().sorted
-      val b = flipped.as[(Long, Long, Long, Long, Long)].collect().sorted
+      val shuffled = build
+      assert(!deepPlan(shuffled).contains("BroadcastHashJoin"))
+      val b = rows(shuffled).sorted
       assert(a.sameElements(b) && a.nonEmpty)
+      a
     } finally spark.conf.set(key, old)
   }
 
-  test("jaccard pairs: hot-shingle broadcast is size-guarded (VERDICT r10 #4)") {
-    // docs 1-3 share the "x y z w" prefix → its two 3-grams have df = 3
-    // and cross maxShingleDf = 2 (hot); docs 1-2 additionally share the
-    // "p q r s" tail (df = 2, kept) so a surviving pair exists on both
-    // strategies
+  test("line dedup: hot-line probe is strategy-invariant") {
     val corpus = Seq(
-      (1L, "x y z w p q r s"), (2L, "x y z w p q r s"),
-      (3L, "x y z w m n o t")
+      (1L, "a b c d e f"), (2L, "a b c x y z"), (3L, "m n o p q r")
     ).toDF("doc_id", "text")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    // the anti join lives inside the PlanCache-persisted `filtered`
-    // frame, so search InMemoryRelation cached plans too (one level of
-    // nesting is enough: the probe join is the cached frame's root)
-    def deepPlan(df: org.apache.spark.sql.DataFrame): String = {
-      val top = df.queryExecution.executedPlan
-      val mem = top.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          s.relation.cachedPlan.toString
-      }
-      (top.toString +: mem).mkString("\n")
-    }
+    val a = strategyInvariant("LeftOuter")(
+      Dedup.lineDedup(corpus, "doc_id", "text", segTokens = 3))(
+      _.as[(Long, Long, Long, Long, Long)].collect())
+    // the shared "a b c" line is removed from docs 1 and 2 only
+    assert(a.map(r => r._1 -> r._3).toMap == Map(1L -> 1L, 2L -> 1L, 3L -> 0L))
+  }
+
+  test("jaccard pairs: hot-shingle anti join is strategy-invariant") {
+    val a = strategyInvariant("LeftAnti")(
+      Dedup.jaccardPairs(hotCorpus, "doc_id", "text",
+        minJaccard = 0.2, maxShingleDf = 2))(
+      _.select($"doc_a", $"doc_b", $"n_common").as[(Long, Long, Long)].collect())
+    // 4 surviving common shingles (6 total, 2 hot-blocked)
+    assert(a.contains((1L, 2L, 4L)))
+  }
+
+  test("containment pairs: hot-shingle anti join is strategy-invariant") {
+    val a = strategyInvariant("LeftAnti")(
+      Dedup.containmentPairs(hotCorpus, "doc_id", "text",
+        minContainment = 0.5, maxShingleDf = 2))(
+      _.select($"contained_id", $"container_id", $"n_common")
+        .as[(Long, Long, Long)].collect())
+    // docs 1 and 2 contain each other through the 4 kept shingles
+    assert(a.toSet == Set((1L, 2L, 4L), (2L, 1L, 4L)))
+  }
+
+  test("dedup operators build lazily: construction starts no Spark job") {
+    val sc = spark.sparkContext
+    val group = "dedup-construction"
+    graft.operators.PlanCache.releaseAll()
+    sc.setJobGroup(group, "construct dedup operators")
     try {
-      // isolate the EXPLICIT hint from stats-based auto conversion
-      spark.conf.set(key, "-1")
-      val guarded = Dedup.jaccardPairs(corpus, "doc_id", "text",
-        minJaccard = 0.2, maxShingleDf = 2)
-      assert(deepPlan(guarded).contains("BroadcastHashJoin"))
-      val a = guarded.select($"doc_a", $"doc_b", $"n_common")
-        .as[(Long, Long, Long)].collect().sorted
-      // drop the guarded run's persisted frames first: join hints are
-      // erased in plan canonicalization, so the flipped rebuild would
-      // otherwise sameResult-hit the cached (hinted) probe and the
-      // strategy change could never surface in its executed plan
-      graft.operators.PlanCache.releaseAll()
-      // past the row bound the probe must flip to a shuffled anti join
-      // (web-scale hot-shingle blocklists don't fit a broadcast)
-      val flipped = Dedup.jaccardPairs(corpus, "doc_id", "text",
-        minJaccard = 0.2, maxShingleDf = 2, hotBroadcastMaxRows = 0L)
-      assert(!deepPlan(flipped).contains("BroadcastHashJoin"))
-      // both strategies compute the identical pair table
-      val b = flipped.select($"doc_a", $"doc_b", $"n_common")
-        .as[(Long, Long, Long)].collect().sorted
-      assert(a.sameElements(b) && a.nonEmpty)
-      // 4 surviving common shingles (6 total, 2 hot-blocked)
-      assert(a.contains((1L, 2L, 4L)))
-    } finally spark.conf.set(key, old)
+      Dedup.jaccardPairs(hotCorpus, "doc_id", "text", maxShingleDf = 2)
+      Dedup.containmentPairs(hotCorpus, "doc_id", "text", maxShingleDf = 2)
+      Dedup.lineDedup(hotCorpus, "doc_id", "text", segTokens = 3)
+      Dedup.lineDedupIncrement(
+        Dedup.hotLines(hotCorpus, "doc_id", "text", segTokens = 3),
+        Seq((9L, "x y z w a b")).toDF("doc_id", "text"),
+        "doc_id", "text", segTokens = 3)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
   }
 
   test("domain line dedup: hot rule is domain-scoped, masses are exact") {
