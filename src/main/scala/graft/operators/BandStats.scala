@@ -24,7 +24,14 @@ import graft.queries.Canon
   * final (post-shuffle) `HashAggregateExec` pair, which is exactly the
   * reference's local-fold + `MPI_Reduce` shape
   * (`band_mean_computation.cpp:143-153`) — but dynamic, spill-safe, and
-  * whole-stage-codegen'd. No UDAF is needed anywhere. The only shuffle is
+  * whole-stage-codegen'd. Over a decoded pixel frame
+  * ([[graft.sources.Raster.pixels]]), level 1's partial half is instead a
+  * [[graft.plans.RasterPlaneAggregateExec]]: the same filter and
+  * aggregate expressions, folded over each decoded band plane in the scan
+  * task like the reference's per-`GDALRasterIO` loop
+  * (`band_mean_computation.cpp:25-45`), with no pixel rows; its output
+  * rows, and so the exchange and the final aggregate, are the partial
+  * `HashAggregateExec`'s. No UDAF is needed anywhere. The only shuffle is
   * on the level-1 group key; level 2 runs over the (much smaller) level-1
   * output, so at 100 TB the cost is one hash-partitioned exchange of
   * partial aggregates, not of raw pixels.

@@ -31,20 +31,21 @@ case class RasterPixels(output: Seq[Attribute], child: LogicalPlan)
   * `ColumnarBatch` per band plane, band ascending, pixels row-major:
   * `file` and `band` constant, `y = p / w`, `x = p % w`, `value` the
   * decoded plane itself. Row consumers read it through Spark's
-  * `ColumnarToRowExec`. (Spark puts a `RowToColumnar` above any row child
-  * of a columnar operator; its row output is its child's, read here.) */
+  * `ColumnarToRowExec`. A partial aggregate keyed by `file` and/or `band`
+  * (over at most an attribute-only project and a deterministic filter)
+  * does not: [[RasterPlaneAggregate]] replaces it, together with this
+  * operator, by a [[RasterPlaneAggregateExec]] that folds the planes.
+  * (Spark puts a `RowToColumnar` above any row child of a columnar
+  * operator; its row output is its child's, read here.) */
 case class RasterPixelsExec(output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
   override def supportsColumnar: Boolean = true
   override protected def doExecute(): RDD[InternalRow] =
     throw new UnsupportedOperationException("RasterPixelsExec is columnar")
 
   override protected def doExecuteColumnar(): RDD[ColumnarBatch] =
-    child.execute().mapPartitions(_.flatMap { r =>
-      val file = Option(r.getUTF8String(0)).map(_.clone()).orNull
-      Raster.decodeAny(r.getBinary(1)).iterator.flatMap { case (w, _, planes) =>
-        planes.iterator.zipWithIndex.map { case (plane, i) =>
-          RasterPixelsExec.batch(file, i + 1, w, plane)
-        }
+    child.execute().mapPartitions(Raster.decodeBlobs(_).flatMap { case (file, w, _, planes) =>
+      planes.iterator.zipWithIndex.map { case (plane, i) =>
+        RasterPixelsExec.batch(file, i + 1, w, plane)
       }
     })
 

@@ -6,9 +6,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.plans.RasterPixels
@@ -26,8 +28,13 @@ import graft.plans.RasterPixels
   * The decode is per-file inside the scan task, whole band planes at a
   * time like the reference's `GDALRasterIO`; the pixel frame is its own
   * plan node ([[graft.plans.RasterPixels]]), whose operator hands Spark
-  * one columnar batch per decoded plane. Row consumers (every aggregate,
-  * filter and join) read pixel rows; the composite sink reads the planes.
+  * one columnar batch per decoded plane. Row consumers (filters, joins,
+  * and aggregates keyed by anything but `file` and `band`) read pixel
+  * rows. The composite sink reads the planes, and so does the partial
+  * half of every aggregate keyed by `file` and/or `band` over
+  * declarative functions, such as both level-1 means of
+  * [[graft.operators.BandStats]]: it folds each plane in the scan task
+  * ([[graft.plans.RasterPlaneAggregateExec]]).
   * Pixels never leave the task until an aggregation shuffles
   * *statistics*, not pixels, and every downstream operator is
   * format-agnostic.
@@ -124,6 +131,20 @@ object Raster {
     if (TiffCodec.isTiff(bytes)) TiffCodec.decode(bytes)
     else GraftRasterCodec.decode(bytes)
 
+  /** The one decode walk over `(path, content)` rows, in row order: per
+    * decodable blob, `(file, w, h, planes)` with `file` the path cloned
+    * out of the (reused) row, null for a null path, and `planes` band
+    * ascending. Undecodable blobs yield nothing. The pixel operator
+    * ([[graft.plans.RasterPixelsExec]]), the plane aggregate
+    * ([[graft.plans.RasterPlaneAggregateExec]]) and [[writeCompositeTiff]]
+    * all read their blobs through it. */
+  def decodeBlobs(rows: Iterator[InternalRow])
+      : Iterator[(UTF8String, Int, Int, Array[Array[Float]])] =
+    rows.flatMap { r =>
+      val file = Option(r.getUTF8String(0)).map(_.clone()).orNull
+      decodeAny(r.getBinary(1)).map { case (w, h, planes) => (file, w, h, planes) }
+    }
+
   private val PixelSchema: StructType = new StructType()
     .add("file", StringType).add("band", IntegerType, nullable = false)
     .add("y", IntegerType).add("x", IntegerType).add("value", FloatType, nullable = false)
@@ -136,8 +157,10 @@ object Raster {
     * file, band ascending, then row-major pixels; undecodable blobs yield
     * no rows.
     * The decode runs inside the upstream task and hands its planes to
-    * whatever aggregate or filter follows as columnar batches (never
-    * materialized whole, unlike the reference's full-band buffers); the
+    * whatever filter, join or aggregate follows as columnar batches, read
+    * as pixel rows; a `(file, band)`-keyed aggregate instead folds each
+    * plane directly in its partial half
+    * ([[graft.plans.RasterPlaneAggregateExec]]), with no pixel rows. The
     * bare frame is also what [[writeCompositeTiff]] accepts. */
   def decodePixels(files: DataFrame): DataFrame =
     ColumnShim.frame(files.sparkSession, RasterPixels(DataTypeUtils.toAttributes(PixelSchema),
@@ -184,9 +207,9 @@ object Raster {
     }
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val audit = files.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
-      val file = r.getUTF8String(0).toString
-      decodeAny(r.getBinary(1)).map { case (w, h, bands) =>
+    val audit = files.queryExecution.toRdd.mapPartitions(decodeBlobs(_).map {
+      case (path, w, h, bands) =>
+        val file = path.toString
         for (band <- Seq(4, 3, 2))
           require(band <= bands.length, s"composite input $file has no band $band")
         val bytes = TiffCodec.encodeRgb(w, h, Array(bands(3), bands(2), bands(1)))
@@ -198,7 +221,6 @@ object Raster {
         val os = fs.create(dest)
         try os.write(bytes) finally os.close()
         (file, dest.toString, w, h, bytes.length.toLong)
-      }
     }).collect()
     val repeated = audit.groupBy(_._1).collect {
       case (file, runs) if runs.length > 1 => s"$file written ${runs.length} times" }
