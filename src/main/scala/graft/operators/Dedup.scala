@@ -26,7 +26,7 @@ object Dedup {
     * materialized stage (write to a bucketed table); in-process,
     * MEMORY_AND_DISK persist expresses the same reuse — tracked by
     * [[PlanCache]] until `PlanCache.releaseAll()` (teardown). Idempotent
-    * on already-cached plans (dupClusters re-marks its pair table). */
+    * on already-cached plans. */
   private def reused(df: DataFrame): DataFrame = PlanCache.reuse(df)
 
   /** Exact dedup groups: content-hash → group size + canonical keeper
@@ -199,82 +199,6 @@ object Dedup {
       .filter(col("containment") >= minContainment)
       .select(col("contained_id"), col("container_id"), col("n_common"),
               col("containment"))
-  }
-
-  /** Duplicate clusters: connected components over a candidate-pair edge
-    * list, labeling every member with the component's minimum id —
-    * the step that turns pairwise dedup output into keep-one-per-cluster
-    * decisions.
-    *
-    * Iterative min-label propagation with a driver-controlled loop
-    * (iteration counts are data-dependent; the loop body is pure
-    * DataFrame ops, only a scalar `count` crosses to the driver per
-    * round — the same control shape GraphX/MLlib use). Converges in
-    * O(component eccentricity) rounds; production-scale graphs use the
-    * large/small-star variant, same skeleton. Round intermediates are
-    * `localCheckpoint`ed (lineage truncation); their blocks are
-    * reclaimed by the ContextCleaner on GC, and the shared pair-table
-    * cache is deliberately left registered for sibling queries
-    * (`PlanCache.releaseAll()` to drop).
-    *
-    * Measured alternative (r15, rejected): per-round [[PlanCache.reuse]]
-    * instead of localCheckpoint would make the ladder plan-deterministic
-    * so the seven registry consumers could CacheManager-share it — but
-    * the A/B (ONLY-mode min-of-3 over all CC consumers) read +2.5 s NET:
-    * each consumer still replays p.count() + one convergence count per
-    * round, and those counts over deep cached logical plans pay more
-    * driver analysis/scheduling latency than the whole LogicalRDD-based
-    * rebuild. localCheckpoint's flat-leaf replanning wins; kept. */
-  def dupClusters(pairs: DataFrame, aCol: String, bCol: String,
-                  maxIter: Int = 100): DataFrame = {
-    // symmetric closure PLUS self-loops: with (v,v) present, min over a
-    // node's in-neighborhood already includes its own label, so each
-    // round is a single join+groupBy — no second "least(own, neighbor)"
-    // pass, and the convergence-check join is co-partitioned (both sides
-    // hash-partitioned on id by the groupBy), so one real shuffle/round
-    // localCheckpoint (not persist): an iterative operator's logical plan
-    // otherwise embeds the ENTIRE upstream pipeline once per round —
-    // Catalyst re-analyzes a tree that grows linearly, so driver time
-    // goes quadratic in rounds. Checkpointing truncates lineage to a
-    // leaf; per-round planning cost is then constant. (Cluster path:
-    // swap for reliable `checkpoint` on HDFS — same control shape.)
-    // materialize the pair table ONCE before fanning out: the symmetric
-    // closure references `pairs` four times, and without a cache each
-    // union branch would re-execute the entire candidate-pair pipeline
-    val p = reused(pairs)
-    p.count()
-    val edges = p.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(p.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .unionAll(p.select(col(aCol).as("src"), col(aCol).as("dst")))
-      .unionAll(p.select(col(bCol).as("src"), col(bCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    // round 0 for free: min(self ∪ neighbors) with initial label = id
-    var labels = edges.groupBy(col("dst").as("id"))
-      .agg(min(col("src")).as("cluster_id"))
-      .localCheckpoint()
-    var iter = 1
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val next = edges
-        .join(labels.select(col("id").as("src"), col("cluster_id").as("lbl")),
-              Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("lbl")).as("cluster_id"))
-        .localCheckpoint()
-      val changes = next
-        .join(labels.withColumnRenamed("cluster_id", "old"), Seq("id"))
-        .filter(col("cluster_id") =!= col("old")).count()
-      labels = next
-      converged = changes == 0
-      iter += 1
-    }
-    // wrong labels are worse than a loud failure: a component with hop
-    // diameter > maxIter would otherwise silently keep several labels
-    require(converged,
-      s"dupClusters did not converge within $maxIter rounds — raise maxIter " +
-        "(component diameter exceeds it)")
-    labels
   }
 
   /** SimHash near-dup pairs: band the 16-bit sketch into 4 nibbles

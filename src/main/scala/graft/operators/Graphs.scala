@@ -1,10 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 
-/** Distributed graph primitives over edge-list DataFrames. Connected
-  * components live in [[Dedup.dupClusters]]; this adds the counting
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Distributed graph primitives over edge-list DataFrames: connected
+  * components ([[Graphs.ccStar]]), rank and hub/authority fixed points,
+  * hop distances, k-core peeling, label propagation, and the counting
   * side: degree-oriented triangle and wedge counting, the core of
   * clustering-coefficient / cohesion analytics.
   *
@@ -83,6 +91,16 @@ object Graphs {
               col("n_triangles"))
   }
 
+  /** Hash partitioner self-sized from an OBSERVED row count: ~64k rows
+    * per partition, capped at defaultParallelism. The RDD cores' stages
+    * are latency-bound at small sizes — 32 near-empty tasks per stage
+    * cost ~2× a whole small loop (measured 6.5 s → 3.2 s at 4 partitions
+    * on 135k edges) — while cluster-scale graphs still use every core
+    * (CLAUDE.md round-7 rule). */
+  private def sizedPartitioner(sc: SparkContext, rows: Long): HashPartitioner =
+    new HashPartitioner(
+      math.min(sc.defaultParallelism.toLong, rows / 65536L + 1L).toInt.max(1))
+
   /** Weighted PageRank over a directed edge list, in FIXED-POINT integer
     * arithmetic: ranks are "nano-ranks" summing to ~`scale` (1e9), every
     * per-edge contribution is `rank·85·w DIV (100·out_w)` and the
@@ -91,31 +109,24 @@ object Graphs {
     * row orders (float PageRank is neither: double summation is
     * order-dependent). Dangling-node mass is dropped (the standard
     * simplification; total rank decays slightly per round — documented,
-    * deterministic).
+    * deterministic). Overflow headroom: rank < scale=1e9, ×85 ×w needs
+    * w < 1e8 per edge — far above any per-pair transition count at
+    * target scale.
     *
-    * Scale shape: edges are materialized ONCE ([[PlanCache.reuse]]) and
-    * re-joined each round; per iteration the plan is one shuffle of the
-    * rank table (|V| rows) into the join and one map-side-combined
-    * aggregation of contributions (≤|E| rows in, |V| out). The rank
-    * lineage is truncated per round (`localCheckpoint`) or Catalyst
-    * re-analysis goes quadratic in iterations. Overflow headroom:
-    * rank < scale=1e9, ×85 ×w needs w < 1e8 per edge — far above any
-    * per-pair transition count at target scale.
-    */
+    * Same-typed src/dst run on [[rankCore]] with every node a seed (then
+    * its init and teleport are exactly this recurrence's). Mixed types
+    * would need the SQL union's type widening, so they run on
+    * [[pageRankSql]] rather than guessing a coercion. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, iters: Int,
-               scale: Long = 1000000000L,
-               useRddCore: Boolean = true): DataFrame =
-    // mixed src/dst types would need the SQL union's type widening —
-    // route them to the Catalyst path rather than guessing a coercion
-    if (useRddCore &&
-        edges.schema(srcCol).dataType == edges.schema(dstCol).dataType)
-      pageRankRdd(edges, srcCol, dstCol, weightCol, iters, scale)
+               scale: Long = 1000000000L): DataFrame =
+    if (edges.schema(srcCol).dataType == edges.schema(dstCol).dataType)
+      rankCore(edges, srcCol, dstCol, weightCol, None, iters, scale)
     else pageRankSql(edges, srcCol, dstCol, weightCol, iters, scale)
 
   /** DataFrame formulation of the [[pageRank]] recurrence — kept as the
     * reference implementation the RDD core is spec-pinned against, and
-    * as the fallback for callers who want Catalyst to own the plan. Each
+    * as the path for mixed src/dst types. Each
     * round re-plans and materializes at every adaptive exchange
     * (~0.3-1 s of driver barrier per exchange — the cost the RDD core
     * exists to avoid; see [[ccStar]]'s rationale). */
@@ -150,59 +161,75 @@ object Graphs {
     ranks.select(col("node"), col("rank"))
   }
 
-  /** The iterative core of [[pageRank]] on RDDs — same rationale as
-    * [[ccStarLong]]: a fixed-iteration integer recurrence re-plans
-    * nothing between rounds, so Catalyst/AQE buy zero and their
-    * per-exchange materialize-and-replan barriers dominate the loop
-    * (measured: the 3-round SQL loop reads ~3 s where its own steady
-    * state is <1 s). The RDD loop pins ONE hash partitioner across all
-    * rounds; the static (edge, out-weight) table is co-partitioned with
-    * the rank table once, so each round is exactly ONE shuffle (the
-    * contribution reduceByKey) plus narrow co-partitioned joins — zero
-    * driver-synchronized jobs inside the loop (everything folds into
-    * the single job that materializes the output).
+  /** Personalized PageRank: the [[pageRank]] fixed-point integer
+    * recurrence with the teleport mass restricted to a SEED set — the
+    * seed-expansion primitive (random-walk-with-restart) that curated-
+    * seed corpus labeling and similar-item expansion build on. Ranks
+    * start at `scale DIV |S∩V|` on seeds and 0 elsewhere; each round a
+    * seed receives `scale·15 DIV (100·|S∩V|)` teleport and every node
+    * the usual damped contributions. Output ranks are exact BIGINTs of
+    * the same recurrence the DuckDB twin unrolls; nodes never reached
+    * keep rank 0 (callers filter for the seed neighborhood). Seeds
+    * outside the graph are ignored (and excluded from |S∩V|). */
+  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+                           weightCol: String, seeds: DataFrame,
+                           seedCol: String, iters: Int,
+                           scale: Long = 1000000000L): DataFrame =
+    rankCore(edges, srcCol, dstCol, weightCol,
+             Some(seeds.select(col(seedCol))), iters, scale)
+
+  /** The iterative core of [[pageRank]] and [[personalizedPageRank]] on
+    * RDDs — same rationale as [[ccStar]]'s: a fixed-iteration integer
+    * recurrence re-plans nothing between rounds, so Catalyst/AQE buy
+    * zero and their per-exchange materialize-and-replan barriers
+    * dominate the loop (measured: the 3-round SQL loop reads ~3 s where
+    * its own steady state is <1 s). The RDD loop pins ONE hash
+    * partitioner ([[sizedPartitioner]] over the observed edge count)
+    * across all rounds; the static (edge, out-weight) table is
+    * co-partitioned with the rank table once, so each round is exactly
+    * ONE shuffle (the contribution reduceByKey) plus narrow
+    * co-partitioned joins — zero driver-synchronized jobs inside the
+    * loop. The seed flag rides the node table, so the per-round teleport
+    * needs no extra join; `seeds = None` makes every node a seed and
+    * skips the seed join altogether.
     *
     * Node ids stay in their JVM form (`Row.get`) keyed by
     * hashCode/equals — string or integral ids both work, and the output
     * schema preserves the input's node type exactly. Arithmetic is the
     * same fixed-point recurrence as the SQL path: all-positive BIGINT
     * products with truncating division, so JVM `/` ≡ SQL `DIV` and the
-    * two paths are bit-identical (spec-pinned).
-    *
-    * Partitioner self-sizing: the rank/edge tables are |V|- and
-    * |E|-bound — tiny for a transition digraph, huge for a web graph —
-    * so partitions derive from the OBSERVED edge count (one cheap count
-    * job), capped at defaultParallelism (CLAUDE.md round-7 rule). */
-  private def pageRankRdd(edges: DataFrame, srcCol: String, dstCol: String,
-                          weightCol: String, iters: Int,
-                          scale: Long): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
+    * two paths are bit-identical (spec-pinned). */
+  private def rankCore(edges: DataFrame, srcCol: String, dstCol: String,
+                       weightCol: String, seeds: Option[DataFrame],
+                       iters: Int, scale: Long): DataFrame = {
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val raw = edges
       .select(col(srcCol), col(dstCol), col(weightCol).cast("long"))
       .rdd.map(r => (r.get(0), (r.get(1), r.getLong(2))))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = raw.count()
-    val part = new HashPartitioner(
-      math.min(sc.defaultParallelism.toLong, nEdges / 65536L + 1L)
-        .toInt.max(1))
+    val part = sizedPartitioner(spark.sparkContext, raw.count())
     // static across rounds: per-edge (dst, w, out_w) keyed+partitioned by
     // src — contributions then need no per-round join against out-weights
     val outw = raw.mapValues(_._2).reduceByKey(part, _ + _)
     val ew = raw.join(outw, part)
       .mapValues { case ((dst, w), ow) => (dst, w, ow) }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = raw.flatMap { case (s, (d, _)) => Iterator(s, d) }
+    val keyed = raw.flatMap { case (s, (d, _)) => Iterator(s, d) }
       .distinct(part.numPartitions)
       .map(n => (n, ()))
       .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = nodes.count()
-    val init = scale / math.max(nNodes, 1L)
-    val teleport = (scale * 15L) / (100L * math.max(nNodes, 1L))
-    var ranks = nodes.mapValues(_ => init)
+    val nodes = (seeds match {
+      case None => keyed.mapValues(_ => true)
+      case Some(sd) =>
+        val seedRdd = sd.rdd.map(r => (r.get(0), ()))
+          .distinct(part.numPartitions).partitionBy(part)
+        keyed.leftOuterJoin(seedRdd, part)
+          .mapValues { case (_, s) => s.isDefined }
+    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val nSeeds = math.max(nodes.filter(_._2).count(), 1L)
+    val init = scale / nSeeds
+    val teleport = (scale * 15L) / (100L * nSeeds)
+    var ranks = nodes.mapValues(s => if (s) init else 0L)
     for (_ <- 1 to iters) {
       // ONE shuffle: per-edge contributions reduce onto dst; the join
       // with the co-partitioned static edge table is narrow
@@ -212,88 +239,15 @@ object Graphs {
         .reduceByKey(part, _ + _)
       // narrow: nodes and contrib share the pinned partitioner
       ranks = nodes.leftOuterJoin(contrib, part)
-        .mapValues { case (_, c) => teleport + c.getOrElse(0L) }
-    }
-    val nodeType = edges.schema(srcCol).dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType)))
-    val rows = ranks.map { case (n, r) =>
-      org.apache.spark.sql.Row(n, r) }
-    // eager: materialize BEFORE releasing the loop's persisted RDDs
-    val out = spark.createDataFrame(rows, schema).localCheckpoint()
-    raw.unpersist(blocking = false)
-    ew.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
-  }
-
-  /** Personalized PageRank: the [[pageRank]] fixed-point integer
-    * recurrence with the teleport mass restricted to a SEED set — the
-    * seed-expansion primitive (random-walk-with-restart) that curated-
-    * seed corpus labeling and similar-item expansion build on. Ranks
-    * start at `scale DIV |S∩V|` on seeds and 0 elsewhere; each round a
-    * seed receives `scale·15 DIV (100·|S∩V|)` teleport and every node
-    * the usual damped contributions. Output ranks are exact BIGINTs of
-    * the same recurrence the DuckDB twin unrolls; nodes never reached
-    * keep rank 0 (callers filter for the seed neighborhood).
-    *
-    * Same RDD-core shape as [[pageRank]]'s: one pinned partitioner,
-    * static co-partitioned (edge, out-weight) table, ONE shuffle per
-    * round; the seed flag rides the node table, so the per-round
-    * teleport needs no extra join. Seeds outside the graph are ignored
-    * (and excluded from |S∩V|). */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-                           weightCol: String, seeds: DataFrame,
-                           seedCol: String, iters: Int,
-                           scale: Long = 1000000000L): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val raw = edges
-      .select(col(srcCol), col(dstCol), col(weightCol).cast("long"))
-      .rdd.map(r => (r.get(0), (r.get(1), r.getLong(2))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = raw.count()
-    val part = new HashPartitioner(
-      math.min(sc.defaultParallelism.toLong, nEdges / 65536L + 1L)
-        .toInt.max(1))
-    val outw = raw.mapValues(_._2).reduceByKey(part, _ + _)
-    val ew = raw.join(outw, part)
-      .mapValues { case ((dst, w), ow) => (dst, w, ow) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedRdd = seeds.select(col(seedCol)).rdd.map(r => (r.get(0), ()))
-      .distinct(part.numPartitions).partitionBy(part)
-    val nodes = raw.flatMap { case (s, (d, _)) => Iterator(s, d) }
-      .distinct(part.numPartitions)
-      .map(n => (n, ()))
-      .partitionBy(part)
-      .leftOuterJoin(seedRdd, part)
-      .mapValues { case (_, sd) => sd.isDefined }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSeeds = math.max(nodes.filter(_._2).count(), 1L)
-    val init = scale / nSeeds
-    val teleport = (scale * 15L) / (100L * nSeeds)
-    var ranks = nodes.mapValues(s => if (s) init else 0L)
-    for (_ <- 1 to iters) {
-      val contrib = ew.join(ranks, part)
-        .map { case (_, ((dst, w, ow), r)) =>
-          (dst, r * 85L * w / (100L * ow)) }
-        .reduceByKey(part, _ + _)
-      ranks = nodes.leftOuterJoin(contrib, part)
         .mapValues { case (isSeed, c) =>
           (if (isSeed) teleport else 0L) + c.getOrElse(0L) }
     }
-    val nodeType = edges.schema(srcCol).dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType)))
-    val rows = ranks.map { case (n, r) =>
-      org.apache.spark.sql.Row(n, r) }
-    val out = spark.createDataFrame(rows, schema).localCheckpoint()
+    val schema = StructType(Seq(
+      StructField("node", edges.schema(srcCol).dataType),
+      StructField("rank", LongType)))
+    // eager: materialize BEFORE releasing the loop's persisted RDDs
+    val out = spark.createDataFrame(ranks.map { case (n, r) => Row(n, r) },
+                                    schema).localCheckpoint()
     raw.unpersist(blocking = false)
     ew.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
@@ -304,211 +258,130 @@ object Graphs {
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC 2014): each round hooks every node to the minimum of its
     * neighborhood and contracts paths, converging in O(log n) rounds
-    * where plain min-label propagation ([[Dedup.dupClusters]], kept for
-    * the small-diameter dedup graphs it serves) needs O(diameter) — the
+    * where plain min-label propagation needs O(diameter) — the
     * difference between 10 and 10 000 shuffles on a chain-shaped 100 TB
-    * graph. Per round: one groupBy + one co-partitioned join + one
-    * distinct per phase, all bounded by the current edge count (which
-    * only shrinks); rounds are lineage-truncated. Output matches
-    * dupClusters: (id, cluster_id = component minimum), every input
-    * node labeled. Fixpoint detected by (count, hash-checksum)
-    * signature equality; loud `require` on non-convergence.
+    * graph. Output: (id, cluster_id = component minimum), every node of
+    * `pairs` labeled once; a self-pair (v, v) enters v as an isolated
+    * node. The label is the minimum the oracle's recursive CTE picks.
+    * Fixpoint detected by (count, hash-checksum) signature equality;
+    * loud `require` on non-convergence.
     *
-    * Integral-id graphs dispatch to [[ccStarLong]] — a partitioner-
-    * reusing RDD core with 2 shuffles per round and none of the
-    * per-exchange adaptive-replanning barriers that dominate the SQL
-    * loop's wall clock (measured 3-4× on the order-chain graph). The
-    * SQL path below remains for non-integral ids and as the
-    * giant-component-safe fallback (see the RDD core's caveat). */
-  def ccStar(pairs: DataFrame, aCol: String, bCol: String,
-             maxIter: Int = 30, useRddCore: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.types._
-    val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
-    // useRddCore = false is the explicit giant-component escape hatch
-    // (the RDD core's groupByKey/toSet bounds task memory by a center's
-    // DISTINCT degree, which late contraction rounds concentrate on the
-    // component root) — callers no longer need the id-type-cast trick
-    if (useRddCore && integral(pairs.schema(aCol).dataType) &&
-        integral(pairs.schema(bCol).dataType))
-      return ccStarLong(pairs, aCol, bCol, maxIter)
-    val p = PlanCache.reuse(pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    val nodes = PlanCache.reuse(
-      p.select(col("a").as("id")).union(p.select(col("b"))).distinct())
-
-    // large-star: every neighbor LARGER than the center hooks to the
-    // neighborhood minimum (center included) — strictly decreasing
-    // labels, no self-loops by construction (min ≤ center < neighbor)
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(col("u").as("c"), col("v").as("n"))
-        .unionAll(e.select(col("v").as("c"), col("u").as("n")))
-      val mins = sym.groupBy(col("c"))
-        .agg(min(col("n")).as("m0"))
-        .select(col("c"), least(col("m0"), col("c")).as("m"))
-      // no distinct here: duplicate edges are absorbed by small-star's
-      // min aggregate and final distinct — saves an exchange per round
-      // (duplication is bounded by the symmetric view's 2|E| rows)
-      sym.join(mins, Seq("c")).filter(col("n") > col("c"))
-        .select(col("n").as("u"), col("m").as("v"))
-    }
-
-    // small-star: orient edges large→small; smaller neighbors and the
-    // center itself hook to the minimum
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(greatest(col("u"), col("v")).as("c"),
-                              least(col("u"), col("v")).as("n"))
-      val mins = oriented.groupBy(col("c")).agg(min(col("n")).as("m"))
-      oriented.join(mins, Seq("c")).filter(col("n") =!= col("m"))
-        .select(col("n").as("u"), col("m").as("v"))
-        .unionAll(mins.select(col("c").as("u"), col("m").as("v")))
-        .distinct()
-    }
-
-    // ANSI-safe checksum: sum of per-edge hashes mod a prime (raw
-    // 64-bit hash sums overflow BIGINT after ~100k rows)
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-                     coalesce(sum(xxhash64(col("u"), col("v")) %
-                                    2147483647L), lit(0L))).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-
-    // lazy checkpoints: lineage still truncates on materialization, but
-    // the round's ONLY action is the signature aggregate — one job per
-    // round instead of three (driver step latency dominates iterative
-    // small-data rounds; see PlanCache notes)
-    var e = p.filter(col("a") =!= col("b"))
-      .select(col("a").as("u"), col("b").as("v")).distinct()
-      .localCheckpoint(eager = false)
-    var prev = sig(e)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // TWO star rounds per convergence probe: the signature aggregate
-      // is the round's only driver-synchronized job, and per-job driver
-      // latency — not executor work — dominates iterative small-data
-      // rounds. A fixpoint is invariant under extra rounds, so a
-      // convergence reached on an odd round costs one idempotent extra
-      // round instead of one extra probe job — halving job count for
-      // the same O(log n) total.
-      e = smallStar(largeStar(e).localCheckpoint(eager = false))
-        .localCheckpoint(eager = false)
-      e = smallStar(largeStar(e).localCheckpoint(eager = false))
-        .localCheckpoint(eager = false)
-      val now = sig(e)
-      converged = now == prev
-      prev = now
-      iter += 2
-    }
-    require(converged,
-      s"ccStar did not converge within $maxIter rounds (needs ~log2(n))")
-    // fixpoint edges are stars (node → component min); roots and
-    // isolated nodes label themselves
-    nodes.join(e.select(col("u").as("id"), col("v").as("root")),
-               Seq("id"), "left")
-      .select(col("id"), coalesce(col("root"), col("id")).as("cluster_id"))
-  }
-
-  /** The iterative core of [[ccStar]] on RDD[(Long, Long)] — the one
-    * place in this engine where dropping below DataFrames is the RIGHT
-    * call: an iterative contraction re-plans nothing between rounds, so
-    * Catalyst/AQE buy zero and their per-exchange materialize-and-replan
-    * barriers (~0.3-1 s each under adaptive execution) dominate a loop
-    * whose per-round data is small and shrinking. The RDD loop pins ONE
-    * hash partitioner across all rounds, pays exactly 2 shuffles per
-    * round (the two groupBys; star emission and orientation are narrow),
-    * and probes convergence with a single `aggregate` job per 2-round
-    * batch — same contraction, same output, ~4× less driver latency.
+    * Id types: both columns integral (byte, short, int, long), keyed as
+    * `Long` — cast in, and the output cast back when both columns share
+    * a narrower type; or both strings of Spark's default UTF8_BINARY
+    * collation, keyed as Spark's own `UTF8String` and ordered as Spark
+    * orders them ([[Utf8Order]]: UTF-8 byte order, the order SQL `min`
+    * uses). Any other type is refused by name.
+    *
+    * The loop runs on RDDs — the one place in this engine where dropping
+    * below DataFrames is the RIGHT call: an iterative contraction
+    * re-plans nothing between rounds, so Catalyst/AQE buy zero and their
+    * per-exchange materialize-and-replan barriers (~0.3-1 s each under
+    * adaptive execution) dominate a loop whose per-round data is small
+    * and shrinking. One [[sizedPartitioner]] is pinned across all rounds
+    * (sized from the initial signature's edge count, so free); each
+    * round pays exactly 2 shuffles (the two groupBys; star emission and
+    * orientation are narrow); TWO star rounds run per convergence probe,
+    * a single `aggregate` job — per-job driver latency, not executor
+    * work, dominates small rounds, and a fixpoint is invariant under
+    * extra rounds, so a convergence reached on an odd round costs one
+    * idempotent extra round instead of one extra probe job. A call fires
+    * 2 + (probes) jobs: the initial signature, one per probe, and the
+    * eager output checkpoint.
     *
     * Per-center neighbor sets are deduplicated locally (`toSet`), which
     * bounds task memory by the center's DISTINCT degree. Late rounds
     * concentrate a component's members on its root (inherent to star
-    * contraction), so a pathological giant component can make one task's
-    * set large; the join-based SQL path (no grouped materialization) is
-    * the fallback for that regime — callers with billion-node components
-    * should pass string ids or pre-chunk. Checksums are order-independent
-    * sums of a fixed integer mix, so convergence detection is
-    * deterministic at any parallelism. */
-  private def ccStarLong(pairs: DataFrame, aCol: String, bCol: String,
-                         maxIter: Int): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
+    * contraction), so a giant component of billions of nodes makes one
+    * task's set large; such callers should pre-chunk. Checksums are
+    * order-independent sums of a fixed mix of the keys' `hashCode`s, so
+    * convergence detection is deterministic at any parallelism. */
+  def ccStar(pairs: DataFrame, aCol: String, bCol: String,
+             maxIter: Int = 30): DataFrame = {
+    val (dtA, dtB) = (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType)
+    def integral(dt: DataType): Boolean = dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (integral(dtA) && integral(dtB)) {
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      val out = ccCore(spark, pairs
+        .select(col(aCol).cast("long"), col(bCol).cast("long"))
+        .as[(Long, Long)].rdd, Ordering.Long, LongType, identity[Long], maxIter)
+      if (dtA == LongType || dtA != dtB) out
+      else out.select(col("id").cast(dtA).as("id"),
+                      col("cluster_id").cast(dtA).as("cluster_id"))
+    } else if (dtA == StringType && dtB == StringType) // UTF8_BINARY only
+      ccCore(pairs.sparkSession, pairs.select(col(aCol), col(bCol)).rdd
+               .map(r => (UTF8String.fromString(r.getString(0)),
+                          UTF8String.fromString(r.getString(1)))),
+             Utf8Order, StringType, (u: UTF8String) => u.toString, maxIter)
+    else throw new IllegalArgumentException(
+      s"ccStar: unsupported id types $aCol ${dtA.sql}, $bCol ${dtB.sql} " +
+        "(both integral or both UTF8_BINARY strings)")
+  }
 
-    val raw = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .as[(Long, Long)].rdd
+  /** Spark's own string order: `UTF8String` binary compare, i.e. UTF-8
+    * byte order, the order SQL `min` uses. (`String.compareTo` compares
+    * UTF-16 units and puts U+1F600 before U+E000.) */
+  private object Utf8Order extends Ordering[UTF8String] {
+    def compare(x: UTF8String, y: UTF8String): Int = x.binaryCompare(y)
+  }
 
-    def mix(u: Long, v: Long): Long =
-      ((u * 0x9E3779B97F4A7C15L + 0x165667B19E3779F9L) ^
-        (v * 0xC2B2AE3D27D4EB4FL)) % 2147483647L
+  /** The [[ccStar]] contraction over keys of one type, ordered by `ord`;
+    * `external` maps a key to its value in an output row of `keyType`. */
+  private def ccCore[K: ClassTag](spark: SparkSession, raw: RDD[(K, K)],
+                                  ord: Ordering[K], keyType: DataType,
+                                  external: K => Any,
+                                  maxIter: Int): DataFrame = {
+    def mix(u: K, v: K): Long =
+      ((u.hashCode.toLong * 0x9E3779B97F4A7C15L + 0x165667B19E3779F9L) ^
+        (v.hashCode.toLong * 0xC2B2AE3D27D4EB4FL)) % 2147483647L
 
     // large-star: per center c over distinct symmetric neighbors N(c),
     // m = min(N(c) ∪ {c}); every neighbor LARGER than c hooks to m
-    def largeStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
+    def largeStar(e: RDD[(K, K)], part: HashPartitioner): RDD[(K, K)] =
       e.flatMap { case (u, v) =>
           if (u == v) Iterator.empty else Iterator((u, v), (v, u)) }
         .groupByKey(part)
         .flatMap { case (c, ns) =>
           val set = ns.iterator.filter(_ != c).toSet
           var m = c
-          set.foreach(n => if (n < m) m = n)
-          set.iterator.filter(_ > c).map(n => (n, m))
+          set.foreach(n => if (ord.lt(n, m)) m = n)
+          set.iterator.filter(ord.gt(_, c)).map(n => (n, m))
         }
 
     // small-star: orient large→small (center = max endpoint), m = min
     // neighbor; smaller neighbors and the center itself hook to m
-    def smallStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
-      e.map { case (u, v) => if (u >= v) (u, v) else (v, u) }
+    def smallStar(e: RDD[(K, K)], part: HashPartitioner): RDD[(K, K)] =
+      e.map { case (u, v) => if (ord.gteq(u, v)) (u, v) else (v, u) }
         .groupByKey(part)
         .flatMap { case (c, ns) =>
           val set = ns.iterator.toSet
           var m = c
-          set.foreach(n => if (n < m) m = n)
+          set.foreach(n => if (ord.lt(n, m)) m = n)
           set.iterator.filter(_ != m).map(n => (n, m)) ++ Iterator((c, m))
         }
 
     // (count, checksum) in ONE job over the persisted round output
-    def sigOf(e: RDD[(Long, Long)]): (Long, Long) =
+    def sigOf(e: RDD[(K, K)]): (Long, Long) =
       e.aggregate((0L, 0L))(
         { case ((n, h), (u, v)) => (n + 1, h + mix(u, v)) },
         { case ((n1, h1), (n2, h2)) => (n1 + n2, h1 + h2) })
 
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg(s: => String): Unit = if (debug) System.err.println(s"[ccstar] $s")
-    // persist the RAW pair base once (r16): the node self-labels the
-    // final fold needs used to come from a SEPARATE raw.distinct RDD —
-    // one extra shuffle + persist, and because that RDD materialized
-    // lazily at fold time it re-ran the whole upstream DataFrame plan
-    // (scan + window) a second time. The fold now derives self-labels
-    // narrowly from this cached base; reduceByKey absorbs duplicates,
-    // so the distinct was never needed.
+    // the raw pair base is persisted once: the final fold derives node
+    // self-labels narrowly from it, so the upstream plan runs once
     val base = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    var e: RDD[(Long, Long)] = base.filter { case (u, v) => u != v }
-    var t0 = System.nanoTime()
+    var e: RDD[(K, K)] = base.filter { case (u, v) => u != v }
     var prev = sigOf(e)
-    dbg(f"init sig=$prev ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    // Self-sized partitioner from the OBSERVED edge count (free — the
-    // init signature already counted): these stages are latency-bound
-    // at small sizes, and 32 near-empty tasks per stage cost ~2× the
-    // whole loop (measured 6.5 s → 3.2 s at 4 partitions on 135k
-    // edges). Capped at defaultParallelism so cluster-scale graphs
-    // still use every core; ~64k edge rows (16 B each) per partition.
-    val part = new HashPartitioner(
-      math.min(sc.defaultParallelism.toLong,
-               prev._1 / 65536L + 1L).toInt.max(1))
-    dbg(s"partitions=${part.numPartitions}")
+    val part = sizedPartitioner(spark.sparkContext, prev._1)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      // two rounds per probe, same rationale as the SQL loop
-      t0 = System.nanoTime()
       val next = smallStar(largeStar(smallStar(largeStar(e, part), part), part), part)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val now = sigOf(next)
-      dbg(f"probe ${iter / 2 + 1} sig=$now ${(System.nanoTime() - t0) / 1e9}%.2f s")
       e.unpersist(blocking = false)
       e = next
       converged = now == prev
@@ -520,25 +393,22 @@ object Graphs {
     // stars point members at the component min; roots and isolated
     // nodes (self-labeled seeds) fold in via the same min. Self-labels
     // come narrowly off the cached pair base (duplicates collapse in
-    // the reduce — no distinct pass); the loop's self-sized
-    // partitioner, not defaultParallelism: e is already
-    // part-partitioned (narrow side), and label cardinality is
-    // nodes-bounded — same latency argument as the loop stages
+    // the reduce — no distinct pass) on the loop's partitioner: e is
+    // already part-partitioned (narrow side), and label cardinality is
+    // nodes-bounded
     val labels = base
       .flatMap { case (a, b) => Iterator((a, a), (b, b)) }
       .union(e)
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+      .reduceByKey(part, ord.min(_, _))
+    val schema = StructType(Seq(StructField("id", keyType, nullable = false),
+                                StructField("cluster_id", keyType, nullable = false)))
     // eager: materialize labels BEFORE releasing the loop's persisted
     // RDDs, or a downstream re-execution would replay the whole loop
-    val out = spark.createDataset(labels).toDF("id", "cluster_id")
-      .localCheckpoint()
+    val rows = labels.map { case (a, b) => Row(external(a), external(b)) }
+    val out = spark.createDataFrame(rows, schema).localCheckpoint()
     base.unpersist(blocking = false)
     e.unpersist(blocking = false)
-    val dtA = pairs.schema(aCol).dataType
-    if (dtA == org.apache.spark.sql.types.LongType ||
-        dtA != pairs.schema(bCol).dataType) out
-    else out.select(col("id").cast(dtA).as("id"),
-                    col("cluster_id").cast(dtA).as("cluster_id"))
+    out
   }
 
   /** BFS hop distances from a source node set over a directed edge
@@ -581,8 +451,8 @@ object Graphs {
     * fixpoint and the remaining rounds are provably no-ops, so the
     * engine exits early without changing the result.
     *
-    * Scale shape: the [[ccStarLong]] RDD core pattern — one pinned
-    * HashPartitioner self-sized from the observed edge count; per round
+    * Scale shape: the [[ccStar]] RDD core pattern — one pinned
+    * [[sizedPartitioner]] over the observed edge count; per round
     * the degree count and the src-side filter are narrow (co-
     * partitioned reduce/join) and only the dst-side re-key shuffles, so
     * a round costs ONE shuffle and no AQE replan barriers (the measured
@@ -591,8 +461,6 @@ object Graphs {
     * to the driver. */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
             rounds: Int): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
@@ -607,8 +475,7 @@ object Graphs {
       .distinct(sc.defaultParallelism)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nSym = raw.count()
-    val part = new HashPartitioner(
-      math.min(sc.defaultParallelism.toLong, nSym / 65536L + 1L).toInt.max(1))
+    val part = sizedPartitioner(sc, nSym)
     var cur = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     var alive = cur.mapValues(_ => 1L).reduceByKey(part, _ + _)
       .filter(_._2 >= k).persist(StorageLevel.MEMORY_AND_DISK)
@@ -851,7 +718,7 @@ object Graphs {
     *
     * Two cores, one recurrence (spec-pinned identical):
     *  - DENSE driver core when the materialized edge list is ≤
-    *    `denseMaxEdges` rows (one count probe over the cached frame —
+    *    [[DenseMaxEdges]] rows (one count probe over the cached frame —
     *    construction is EAGER).
     *    HITS scores a WHOLE graph at once, so a bounded edge list is a
     *    bounded driver object (the vocab-collect rule); the loop then
@@ -864,15 +731,18 @@ object Graphs {
     *    (both truncate toward zero; operands here are nonnegative). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: String, iters: Int,
-           scale: Long = 1000000L,
-           denseMaxEdges: Long = 65536L): DataFrame = {
+           scale: Long = 1000000L): DataFrame = {
     val e = PlanCache.reuse(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
                    col(weightCol).cast("long").as("w")))
-    if (e.count() <= denseMaxEdges)
+    if (e.count() <= DenseMaxEdges)
       hitsDense(e, edges.schema(srcCol).dataType, iters, scale)
     else hitsSql(e, iters, scale)
   }
+
+  /** [[hits]]' dense-core bound: an edge list this small is a bounded
+    * driver object. */
+  private val DenseMaxEdges = 65536L
 
   /** Driver-dense HITS core: the [[hits]] integer recurrence over a
     * collected (src, dst, w) edge array. Node identity is JVM
@@ -880,10 +750,10 @@ object Graphs {
     * input node type. Long sums are order-independent, so the result is
     * deterministic regardless of collect order. */
   private def hitsDense(e: DataFrame,
-                        nodeType: org.apache.spark.sql.types.DataType,
+                        nodeType: DataType,
                         iters: Int, scale: Long): DataFrame = {
     val spark = e.sparkSession
-    val rows = e.collect() // ≤ denseMaxEdges by the caller's probe
+    val rows = e.collect() // ≤ DenseMaxEdges by the caller's probe
     val nodes = scala.collection.mutable.LinkedHashSet.empty[Any]
     rows.foreach { r => nodes += r.get(0); nodes += r.get(1) }
     val idx = nodes.iterator.zipWithIndex.toMap
@@ -906,21 +776,19 @@ object Graphs {
       es.foreach { case (s, d, w) => hraw(s) += auth(d) * w }
       hub = l1(hraw)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("auth",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("hub",
-        org.apache.spark.sql.types.LongType)))
+    val schema = StructType(Seq(StructField("node", nodeType),
+                                StructField("auth", LongType),
+                                StructField("hub", LongType)))
     val out = nodes.iterator.zipWithIndex.map { case (nd, i) =>
-      org.apache.spark.sql.Row(nd, auth(i), hub(i)) }.toSeq
+      Row(nd, auth(i), hub(i)) }.toSeq
     spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
   }
 
   /** DataFrame formulation of the [[hits]] recurrence — the
     * web-scale path, and the reference the dense core is spec-pinned
     * against. `e` is the caller's cached (src, dst, w) frame. */
-  private def hitsSql(e: DataFrame, iters: Int, scale: Long): DataFrame = {
+  private[graft] def hitsSql(e: DataFrame, iters: Int,
+                             scale: Long): DataFrame = {
     val nodes = PlanCache.reuse(
       e.select(col("src").as("node")).union(e.select(col("dst"))).distinct())
     // zero guard mirrors powerIteration's m === 0 case: an all-zero (or

@@ -2463,13 +2463,12 @@ object DocQueries {
   }
 
   /** Duplicate clusters: connected components over the ≥0.5-Jaccard pair
-    * edges, every member labeled with its component's min doc_id.
-    * Oracle: recursive CTE transitive closure over the same edges. */
+    * edges ([[graft.operators.Graphs.ccStar]]), every member labeled
+    * with its component's min doc_id — the step that turns pairwise
+    * dedup output into keep-one-per-cluster decisions. Oracle: recursive
+    * CTE transitive closure over the same edges. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupClusters(
-      dedupJaccardPairs(s, dir)
-        .select(col("doc_a"), col("doc_b")),
-      "doc_a", "doc_b")
+    Graphs.ccStar(dedupJaccardPairs(s, dir), "doc_a", "doc_b")
       .select(col("id").as("doc_id"), col("cluster_id"))
 
   /** Duplicate-cluster provenance purity — whether duplication is
@@ -3358,7 +3357,7 @@ object DocQueries {
        |  SELECT h, MIN(doc_id) AS first_doc FROM dg GROUP BY 1)""".stripMargin
 
   /** Recursive transitive closure over the jaccard pair graph (twin of
-    * [[graft.operators.Dedup.dupClusters]]), ending in
+    * [[graft.operators.Graphs.ccStar]]), ending in
     * `clusters(doc_id, cluster_id)` — single-sourced by the
     * dedup_clusters, funnel, and cluster-purity oracles. Callers
     * prepend `WITH RECURSIVE`. */

@@ -1101,7 +1101,7 @@ object RelationalQueries {
       .filter(col("name_a") < col("name_b"))
       .filter(levenshtein(col("name_a"), col("name_b")) <= 3)
       .select(col("name_a"), col("name_b"))
-    val clusters = graft.operators.Dedup.dupClusters(edges, "name_a", "name_b")
+    val clusters = Graphs.ccStar(edges, "name_a", "name_b")
     names.join(clusters, col("p_name") === col("id"), "left")
       .select(col("p_name"),
               coalesce(col("cluster_id"), col("p_name")).as("canonical_name"),

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Relational}
+import graft.operators.{Dedup, Graphs, Relational}
 
 /** Empty-input behavior of the composed operators (the reference
   * divides by zero on an empty directory, SURVEY §2.4 — the engine
@@ -9,9 +9,9 @@ import graft.operators.{Dedup, Relational}
 class EdgeCaseSpec extends SparkSpec {
   import spark.implicits._
 
-  test("dupClusters on an empty pair list converges to an empty labeling") {
+  test("ccStar on an empty pair list converges to an empty labeling") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(Dedup.dupClusters(empty, "doc_a", "doc_b").count() == 0)
+    assert(Graphs.ccStar(empty, "doc_a", "doc_b").count() == 0)
   }
 
   test("NB classify: empty batch, all-unseen words, zero-token docs") {

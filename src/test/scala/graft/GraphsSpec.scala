@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Graphs}
+import graft.operators.Graphs
 
 /** Degree-oriented triangle census laws on known graphs. */
 class GraphsSpec extends SparkSpec {
@@ -164,8 +164,10 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("hits: dense driver core ≡ DataFrame loop on a 200-node digraph") {
-    // the two cores run the same integer recurrence; denseMaxEdges = 0
-    // forces the distributed path, the default takes the dense one
+    // the two cores run the same integer recurrence; a 600-edge graph
+    // takes the dense one, and hitsSql runs the distributed loop on the
+    // same cached (src, dst, w) frame
+    import org.apache.spark.sql.functions.col
     val edges = (1 to 600).map { i =>
       (s"n${i % 200}", s"n${(i * 7 + 3) % 200}", (i % 5 + 1).toLong)
     }.filter { case (u, v, _) => u != v }
@@ -174,8 +176,9 @@ class GraphsSpec extends SparkSpec {
       res.as[(String, Long, Long)].collect()
         .map { case (n, a, h) => n -> (a, h) }.toMap
     val dense = m(Graphs.hits(df, "src", "dst", "w", iters = 2))
-    val sql = m(Graphs.hits(df, "src", "dst", "w", iters = 2,
-                            denseMaxEdges = 0L))
+    val e = graft.operators.PlanCache.reuse(
+      df.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    val sql = m(Graphs.hitsSql(e, iters = 2, scale = 1000000L))
     assert(dense == sql)
     assert(dense.nonEmpty)
   }
@@ -250,8 +253,8 @@ class GraphsSpec extends SparkSpec {
       .filter(col("src") % 13 =!= 0)
     val viaRdd = Graphs.pageRank(edges, "src", "dst", "w", iters = 3)
       .as[(Long, Long)].collect().toMap
-    val viaSql = Graphs.pageRank(edges, "src", "dst", "w", iters = 3,
-                                 useRddCore = false)
+    val viaSql = Graphs.pageRankSql(edges, "src", "dst", "w", iters = 3,
+                                    scale = 1000000000L)
       .as[(Long, Long)].collect().toMap
     assert(viaRdd.size == viaSql.size && viaRdd == viaSql)
     graft.operators.PlanCache.releaseAll()
@@ -268,35 +271,74 @@ class GraphsSpec extends SparkSpec {
     assert(labels.count() == 1000)
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0,
            "every chain node must label to the component minimum 0")
-    // agreement with the min-label CC on a multi-component graph with
-    // a cycle, a path, an isolated self-loop node
+    // min-label CC on a multi-component graph with a cycle, a path, an
+    // isolated self-loop node: every node labeled with its component min
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (12L, 12L),
                     (20L, 21L), (21L, 22L), (22L, 20L)).toDF("a", "b")
     val star = Graphs.ccStar(pairs, "a", "b")
-      .as[(Long, Long)].collect().toSet
-    val minLabel = Dedup.dupClusters(pairs, "a", "b")
-      .as[(Long, Long)].collect().toSet
-    assert(star === minLabel)
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(star === Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L),
+                        (12L, 12L), (20L, 20L), (21L, 20L), (22L, 20L)))
   }
 
-  test("ccStar SQL fallback (non-integral ids) matches the RDD fast path") {
+  test("ccStar: string ids are labeled as the same ids are as longs") {
     import org.apache.spark.sql.functions.{col, format_string}
-    // string ids route to the join-based SQL loop (the giant-component-
-    // safe fallback) — same contraction, same labels. Zero-padded so the
-    // string MIN coincides with the numeric component minimum.
+    // zero-padded so the string MIN coincides with the numeric
+    // component minimum
     val longPairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (12L, 12L),
                         (20L, 21L), (21L, 22L), (22L, 20L),
                         (5L, 3L), (30L, 31L)).toDF("a", "b")
-    val viaRdd = Graphs.ccStar(longPairs, "a", "b")
+    val asLongs = Graphs.ccStar(longPairs, "a", "b")
       .as[(Long, Long)].collect().toSet
       .map { p: (Long, Long) => (f"${p._1}%04d", f"${p._2}%04d") }
     val strPairs = longPairs.select(
       format_string("%04d", col("a")).as("a"),
       format_string("%04d", col("b")).as("b"))
-    val viaSql = Graphs.ccStar(strPairs, "a", "b")
+    val asStrings = Graphs.ccStar(strPairs, "a", "b")
       .as[(String, String)].collect().toSet
-    assert(viaSql === viaRdd)
+    assert(asStrings === asLongs)
     graft.operators.PlanCache.releaseAll()
+  }
+
+  test("ccStar: string labels follow SQL min's UTF-8 order, not UTF-16 order") {
+    import org.apache.spark.sql.functions.{col, min}
+    // U+E000 vs U+1F600 (a surrogate pair): String.compareTo puts the
+    // emoji first, UTF-8 bytes (EE.. < F0..) and so SQL min put it last
+    val (pua, emoji) = ("\uE000", "\uD83D\uDE00")
+    val pairs = Seq((emoji, pua), ("y", "x")).toDF("a", "b")
+    val sqlMin = Seq(pua, emoji).toDF("id").agg(min(col("id")))
+      .as[String].head()
+    val got = Graphs.ccStar(pairs, "a", "b")
+      .as[(String, String)].collect().toMap
+    assert(got == Map(pua -> sqlMin, emoji -> sqlMin, "x" -> "x", "y" -> "x"))
+  }
+
+  test("ccStar refuses other id types by name, a collated string included") {
+    import org.apache.spark.sql.functions.{col, collate}
+    val pairs = Seq(("b", "a")).toDF("a", "b")
+    val err = intercept[IllegalArgumentException](
+      Graphs.ccStar(Seq((1.0, 2.0)).toDF("a", "b"), "a", "b"))
+    assert(err.getMessage.contains("DOUBLE"))
+    val lcase = pairs.select(collate(col("a"), "UTF8_LCASE").as("a"), col("b"))
+    assert(intercept[IllegalArgumentException](Graphs.ccStar(lcase, "a", "b"))
+      .getMessage.contains("UTF8_LCASE"))
+  }
+
+  test("ccStar on a small string-id graph fires 4 Spark jobs") {
+    // the initial signature, one aggregate per 2-round probe (this graph
+    // needs 2: the second sees the fixpoint), and the eager output
+    // checkpoint. The DataFrame star loop this core replaced fired 32.
+    val pairs = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("z", "z"))
+      .toDF("a", "b")
+    val sc = spark.sparkContext
+    val group = "ccstar-jobs"
+    sc.setJobGroup(group, "ccStar on a string-id graph")
+    val labels = try Graphs.ccStar(pairs, "a", "b")
+                 finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).length == 4)
+    assert(labels.as[(String, String)].collect().toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+          "x" -> "x", "y" -> "x", "z" -> "z"))
   }
 
   test("degenerate inputs: empty edge lists yield empty results, no throw") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.{BandStats, Composite, Dedup, TextOps}
+import graft.operators.{BandStats, Composite, Dedup, Graphs, TextOps}
 import graft.queries.Canon
 
 /** Property-based checks (SURVEY §5.2): aggregation ≡ naive fold,
@@ -230,16 +230,29 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  /** `Graphs.ccStar` over `es`, run as longs and as zero-padded strings
+    * (so the string minimum is the numeric one), both read back as longs
+    * and sorted: the two must agree with each other and with a reference. */
+  private def ccStarBothWays(es: Seq[(Long, Long)]): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    def pad(x: Long): String = f"$x%02d"
+    val asLongs = Graphs.ccStar(es.toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect().toSeq.sorted
+    val asStrings = Graphs.ccStar(
+        es.map { case (a, b) => (pad(a), pad(b)) }.toDF("a", "b"), "a", "b")
+      .as[(String, String)].collect().toSeq
+      .map { case (n, r) => (n.toLong, r.toLong) }.sorted
+    (asLongs, asStrings)
+  }
+
   private val edgeGen = Gen.nonEmptyListOf(for {
     a <- Gen.choose(0L, 19L)
     b <- Gen.choose(0L, 19L) if a != b
   } yield (math.min(a, b), math.max(a, b)))
 
   test("dupClusters equals driver-side union-find on random graphs") {
+    // duplicate clusters: the (doc_a < doc_b) candidate-pair shape that
+    // DocQueries.dedupClusters labels with ccStar
     check("cc", Prop.forAll(edgeGen) { edges =>
-      val df = edges.toDF("doc_a", "doc_b")
-      val got = Dedup.dupClusters(df, "doc_a", "doc_b")
-        .as[(Long, Long)].collect().toMap
       // reference: path-compressed union-find with min-id roots
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
@@ -250,9 +263,34 @@ class PropertySpec extends SparkSpec {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val expected = nodes.map(n => n -> find(n)).toMap
-      got == expected
+      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
+        .map(n => (n, find(n))).sorted
+      val (asLongs, asStrings) = ccStarBothWays(edges)
+      asLongs == expected && asStrings == expected
+    })
+  }
+
+  test("ccStar agrees with min-label CC on random graphs") {
+    // self-loops included: a (v, v) pair enters v as an isolated node
+    val edgeGen = Gen.choose(1, 20).flatMap(n => Gen.listOfN(n, for {
+      a <- Gen.choose(0L, 25L); b <- Gen.choose(0L, 25L)
+    } yield (a, b)))
+    check("ccstar", Prop.forAll(edgeGen) { es =>
+      // reference: driver-side min-label propagation to a fixpoint
+      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+      var label = nodes.map(n => n -> n).toMap
+      var changed = true
+      while (changed) {
+        val next = es.foldLeft(label) { case (l, (a, b)) =>
+          val m = math.min(l(a), l(b))
+          l.updated(a, m).updated(b, m)
+        }
+        changed = next != label
+        label = next
+      }
+      val expected = label.toSeq.sorted
+      val (asLongs, asStrings) = ccStarBothWays(es)
+      asLongs == expected && asStrings == expected
     })
   }
 
@@ -352,19 +390,6 @@ class PropertySpec extends SparkSpec {
       val got = Dedup.substringSpans(df, "id", "text", k = 3)
         .as[(Long, Int, Int, Int)].collect().toSet
       got == bruteSpans(docs, 3)
-    })
-  }
-
-  test("ccStar agrees with min-label CC on random graphs") {
-    val edgeGen = Gen.choose(1, 20).flatMap(n => Gen.listOfN(n, for {
-      a <- Gen.choose(0L, 25L); b <- Gen.choose(0L, 25L)
-    } yield (a, b)))
-    check("ccstar", Prop.forAll(edgeGen) { es =>
-      val df = es.toDF("a", "b")
-      graft.operators.Graphs.ccStar(df, "a", "b")
-        .as[(Long, Long)].collect().toSet ==
-        Dedup.dupClusters(df, "a", "b")
-          .as[(Long, Long)].collect().toSet
     })
   }
 
